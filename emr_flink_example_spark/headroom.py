@@ -76,7 +76,7 @@ BOUNDED = {
     " stage-2 |f| <= 8*61440*512 ~ 2.52e8; the bit fold spans positions"
     " 0..62 but at most 31 of 63 coefficients can exceed their median,"
     " so the hash stays well under 2^63 — nothing can overflow in either"
-    " the Arrow kernel or _phash_hof_df",
+    " the Arrow kernel or its relational test reference",
     "window_sliding": "avg micro identity 2e4 * window cents sum"
     " overflows only past a ~4.6e14-cent ($4.6e12) hourly window sum",
     "abtest_srm": "(n0-n1)^2 evaluates in doubles (exact to 2^26"

@@ -1665,7 +1665,7 @@ def q_dedup_semantic_clusters(
     Composition, not new machinery: the clusters come from the SAME
     memoized trained centroids as the IVF tier (`_ivf_centroids` —
     sample-bounded Lloyd, zero extra training cost here), assignment is
-    the zero-shuffle broadcast cosine-argmax fold, and the in-cluster
+    the Arrow kernel's zero-shuffle cosine argmax, and the in-cluster
     pairwise cosine runs through `_skew_guarded_pairs` exactly like the
     LSH-bucketed `dedup_embedding_cosine` — so a dense cluster expands as
     cap^2-bounded chunk tasks instead of a straggler. 100 TB posture: the
@@ -1690,7 +1690,7 @@ def q_dedup_semantic_clusters(
     )
     # r15: assignment (and the nrm the in-cluster cosines divide by) runs
     # in ONE Arrow pass (`_assign_only_kernel`) instead of the interpreted
-    # `_IVF_ASSIGN_SQL` + `_norm` CodegenFallback folds per row — bit-equal
+    # cosine-argmax + `_norm` CodegenFallback folds per row — bit-equal
     # by the `_assign_ids` construction (pinned in test_pq_training.py).
     cents_cv = trained_codebook(spark, sf, 1, DIM, N_CENTROIDS)
     if not cents_cv:  # empty corpus: no clusters, no rows — keep the schema

@@ -269,8 +269,8 @@ def q_multimodal_phash(spark: SparkSession, sf: str) -> DataFrame:
     sum is integer-exact in any evaluation order; the median is the 32nd
     order statistic of the 63 AC VALUES, invariant to the (f, u, v)
     struct tie-break since ties share the value) and PINNED by
-    tests/test_phash_kernel.py against `_phash_hof_df` — the pure-JVM
-    relational form kept below as the reference. This is also the
+    tests/test_phash_kernel.py against the pure-JVM relational form it
+    replaced (`phash_hof_df` in tests/reference_folds.py). This is also the
     production shape: a real pHash decodes pixels in a Python/native
     codec kernel anyway (the documented `decode_image_real` seam), so
     the Arrow boundary is where the deployment boundary already is.
@@ -289,7 +289,7 @@ def _phash_kernel():
     are built once on the DRIVER when this factory is called and shipped to
     workers inside the pickled closure — ADVICE r14): md5-nibble pixels ->
     F = K @ P @ K^T (int64 matmuls, exact) -> median = 32nd-smallest AC
-    value -> bits by strict >. Bit-equal to `_phash_hof_df` (see
+    value -> bits by strict >. Bit-equal to the relational reference (see
     q_multimodal_phash docstring) FOR COALESCED INPUT: the kernel's
     `(t or '')` hashes raw NULL text like the empty string, while the
     HOF/SQL reference yields NULL phash (concat(NULL, ..) is NULL) — the
@@ -338,80 +338,6 @@ def _phash_kernel():
             )
 
     return run
-
-
-def _phash_hof_df(spark: SparkSession, sf: str) -> DataFrame:
-    """The pure-JVM relational pHash (higher-order-function folds in ONE
-    map-side projection — the r14 batch-1 rewrite of the staged
-    broadcast-join form). Kept as the REFERENCE implementation the Arrow
-    kernel is pinned bit-equal against (tests/test_phash_kernel.py), and
-    as the fallback for a Python-less deployment; interpreted
-    CodegenFallback evaluation makes it ~4x the kernel's wall clock."""
-    docs = load(spark, sf, "documents")
-    # basis as one flat 64-literal bigint array, K[u*8 + x + 1]
-    kflat = [0] * 64
-    for u, x, k in _dct_basis():
-        kflat[u * 8 + x] = k
-    klit = "array(" + ", ".join(f"{k}L" for k in kflat) + ")"
-    # Each intermediate (pixel array, DCT stages, median) is bound as a
-    # LAMBDA VARIABLE via transform(array(<expr>), name -> ...) so it is
-    # computed once per row — chained withColumn projections would be
-    # collapsed by the optimizer, textually inlining each stage into every
-    # downstream element_at and exploding the expression tree (the first
-    # draft of this rewrite did exactly that and evaluated the pixel
-    # expression hundreds of thousands of times per document).
-    px = (
-        "transform(sequence(0, 63), i ->"
-        " cast(conv(substring(hx, i + 1, 1), 16, 10) as bigint))"
-    )
-    # first DCT stage: g[r*8 + v] = sum_c px[r*8 + c] * K[v*8 + c]
-    g = (
-        "transform(sequence(0, 63), j -> aggregate(sequence(0, 7),"
-        " cast(0 as bigint), (acc, c) ->"
-        " acc + element_at(px, cast((j div 8) * 8 + c + 1 as int))"
-        "     * element_at(kb, cast((j % 8) * 8 + c + 1 as int))))"
-    )
-    # second stage: f[u*8 + v] = sum_r g[r*8 + v] * K[u*8 + r]; j = 1..63
-    # skips the DC coefficient (u = v = 0) exactly like the staged WHERE
-    fs = (
-        "transform(sequence(1, 63), j -> struct("
-        " aggregate(sequence(0, 7), cast(0 as bigint), (acc, r) ->"
-        "   acc + element_at(g, cast(r * 8 + (j % 8) + 1 as int))"
-        "       * element_at(kb, cast((j div 8) * 8 + r + 1 as int))) AS f,"
-        " cast(j div 8 as int) AS u, cast(j % 8 as int) AS v))"
-    )
-    # median m = 32nd-smallest of the 63 AC coefficients under the
-    # (f, u, v) struct order — array_sort == the old window's ORDER BY;
-    # result = struct(phash, n_ones) assembled from (fs, m)
-    hx_sql = (
-        "concat(md5(concat(text, ':px0')), md5(concat(text, ':px1')))"
-    )
-    result = f"""
-      element_at(transform(array({hx_sql}), hx ->
-        element_at(transform(array({klit}), kb ->
-          element_at(transform(array({px}), px ->
-            element_at(transform(array({g}), g ->
-              element_at(transform(array({fs}), fs ->
-                element_at(transform(array(element_at(array_sort(fs), 32).f), m ->
-                  struct(
-                    aggregate(fs, cast(0 as bigint), (acc, s) -> acc +
-                      IF(s.f > m, shiftleft(cast(1 as bigint),
-                      s.u * 8 + s.v - 1), cast(0 as bigint))) AS phash,
-                    aggregate(fs, cast(0 as bigint),
-                      (acc, s) -> acc + IF(s.f > m, 1L, 0L)) AS n_ones)
-                ), 1)
-              ), 1)
-            ), 1)
-          ), 1)
-        ), 1)
-      ), 1)
-    """
-    return docs.select(
-        "doc_id",
-        F.expr(result + ".phash").alias("phash"),
-        F.expr(result + ".n_ones").alias("n_ones"),
-    )
-
 
 
 #: pHash near-dup ball: pairs within this Hamming distance are image dups.

@@ -535,15 +535,14 @@ def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     TRAINED coarse quantizer: N_CENTROIDS k-means centroids fit by
     `subspace_kmeans_fit` (n_sub=1 — plain Lloyd over the full vectors,
     deterministic seeding + 6-dp update rounding), re-trained identically
-    by the oracle's unrolled CTE chain. Corpus assignment is a pure map-side argmax:
-    the centroid set is collapsed to ONE broadcast row holding a sorted
-    array<struct> of (centroid_id, vector, norm), and each corpus row picks
-    its nearest centroid with a higher-order-function fold over that array —
-    no Exchange touches the corpus (round 1 used broadcast-join + row_number
-    over Window.partitionBy(vec_id), which planned a full corpus shuffle just
-    to rank NC candidate rows per vector). The fold iterates centroids in
-    ascending centroid_id with a strict `>`, so ties keep the smallest id —
-    identical to the oracle's `ORDER BY cos DESC, centroid_id ASC` rank.
+    by the oracle's unrolled CTE chain. Corpus assignment is a pure
+    map-side cosine argmax in the shared Arrow kernel (`_assign_ids` via
+    `_assign_only_kernel`, the centroids shipped in its closure): no
+    Exchange touches the corpus, and the kernel keeps the FIRST maximum
+    over ascending centroid ids, NaN ranking highest — identical to the
+    oracle's `ORDER BY cos DESC, centroid_id ASC` rank. The interpreted
+    fold it replaced (pinned bit-equal in tests/test_pq_training.py)
+    evaluated NC x DIM lambda steps per row, CodegenFallback.
     Each query probes its N_PROBE nearest inverted lists and ranks only
     those candidates by exact cosine.
 
@@ -579,7 +578,7 @@ def ann_ivf_topk(
 ) -> DataFrame:
     """IVF ANN top-k of each query over ANY corpus frame: a trained
     coarse quantizer (Lloyd k-means over the full vectors) buckets the
-    corpus into inverted lists via a map-side broadcast-fold argmax (zero
+    corpus into inverted lists via the Arrow assignment kernel (zero
     corpus shuffle), each query probes its `n_probe` nearest lists, and
     only those candidates are ranked by exact cosine — (query_id,
     neighbor_id, nn_rank, cosine). Pass a pre-trained `codebook` to skip
@@ -589,57 +588,25 @@ def ann_ivf_topk(
     spark = corpus.sparkSession
 
     def prep(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("e"),
-            )
-            .withColumn("nrm", _norm("e"))
-            # all-zero vector: cosine undefined, exclude (exists
-            # short-circuits; `nrm > 0` would re-run the norm fold per row)
-            .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        )
+        return df.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("e"),
+        ).where(F.expr("exists(e, x -> x <> 0.0d)"))  # all-zero: cosine undefined
 
     emb = prep(corpus)
-    q = prep(queries)
+    q = prep(queries).withColumn("nrm", _norm("e"))
     if codebook is None:
         first = emb.select(F.size("e").alias("d")).first()
         dim = first.d if first else 0
-        codebook = (
-            subspace_kmeans_fit(emb.select("vec_id", "e"), 1, dim, n_centroids)
-            if dim
-            else []
-        )
+        codebook = subspace_kmeans_fit(emb, 1, dim, n_centroids) if dim else []
     cent = _centroids_df(spark, codebook)
     cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
     wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
-    # One-row broadcast side: sort_array orders the struct array by its first
-    # field (centroid_id), making the fold's iteration order deterministic
-    # regardless of how collect_list saw the partitions.
-    cent_arr = cent.agg(
-        F.sort_array(F.collect_list(F.struct("centroid_id", "cv", "cvn"))).alias("cents")
-    )
-    assigned = (
-        emb.crossJoin(F.broadcast(cent_arr))
-        .withColumn(
-            "centroid_id",
-            F.expr(
-                """
-                aggregate(
-                  transform(cents, c -> struct(
-                      c.centroid_id AS centroid_id,
-                      aggregate(zip_with(e, c.cv, (x, y) -> x * y),
-                                cast(0 as double), (acc, x) -> acc + x)
-                        / (nrm * c.cvn) AS c_cos)),
-                  struct(cast(-1 as bigint) AS centroid_id,
-                         cast('-Infinity' as double) AS c_cos),
-                  (best, c) -> IF(c.c_cos > best.c_cos, c, best)
-                ).centroid_id
-                """
-            ),
-        )
-        .select("vec_id", "e", "nrm", "centroid_id")
-    )
+    id_t = emb.schema["vec_id"].dataType.simpleString()
+    assigned = emb.mapInPandas(
+        _assign_only_kernel(codebook),
+        f"vec_id {id_t}, e array<double>, nrm double, cluster_id bigint",
+    ).withColumnRenamed("cluster_id", "centroid_id")
     probes = (
         q.join(F.broadcast(cent))
         .withColumn("c_cos", cos_c)
@@ -725,29 +692,6 @@ def _unrolled_d2(a: str, b: str, lo: int | str, n: int) -> str:
     )
 
 
-def _pq_best_sql(m: int) -> str:
-    """Subspace-m argmin as a (k, d2) struct over the broadcast codebook
-    column `cw` and embedding column `e`.
-
-    Index fold (element_at over a sequence), NOT zip_with over slices: the
-    slice form allocates 2 subvectors per codeword per row — measured ~1.4x
-    slower end-to-end. The sub_dim-term sum is UNROLLED (r6): the inner
-    aggregate+sequence allocated an iterator per codeword per row, ~1.5x
-    slower interpreted; the unrolled left-to-right sum has the identical
-    addition order ((0+d1)==d1 exactly), so results stay bit-equal to the
-    oracle. The strict `<` fold over ascending codeword ids reproduces
-    `ORDER BY dist, id` argmin ties."""
-    lo = m * PQ_SUB_DIM + 1
-    d2 = _unrolled_d2("e", "c.e", lo, PQ_SUB_DIM)
-    return f"""
-        aggregate(
-          transform(cw, (c, k) -> struct(k AS k, {d2} AS d2)),
-          struct(cast(-1 as int) AS k, cast('Infinity' as double) AS d2),
-          (best, c) -> IF(c.d2 < best.d2, c, best)
-        )
-    """
-
-
 #: Lloyd budget shared by every codebook/centroid training here (PQ
 #: compression, the ADC search tier, and the IVF coarse quantizer).
 PQ_TRAIN_ITERS = 4
@@ -808,19 +752,25 @@ def subspace_kmeans_fit(
     """Per-subspace Lloyd k-means over ALL subspaces in one pass per round;
     returns the trained codebook as K full-dim codewords (codeword j =
     concat over subspaces of that subspace's j-th centroid). n_sub=1 is
-    plain full-vector k-means (the IVF coarse quantizer).
+    plain full-vector k-means (the IVF coarse quantizer, `kmeans_fit`).
+
+    Each round is two steps. ASSIGNMENT is the shared Arrow argmin kernel
+    (`_codes_kernel`, the same `_encode` every encode path runs), with
+    the codebook shipped in the closure — zero corpus shuffle. The
+    UPDATE stays a Spark aggregate in long form: posexplode(e) gives one
+    (i, k = codes[i div sub_dim], v) row per element, and ONE groupBy(i, k)
+    takes round(avg(v), 6) — partial aggregation shrinks the map side to
+    K x DIM scalars before the shuffle, and the driver only ever holds the
+    K x DIM codeword matrix (kilobytes). The Spark avg + 6-dp rounding is
+    what the oracle's re-train chain (`_train_ctes`) mirrors; a numpy
+    update is not bit-safe.
 
     Scale shape (same contract as `kmeans_fit`): training runs on a
     deterministic hash-sample of at most ~sample_cap vectors
     (`_train_sample` — one corpus scan total, FAISS-style, instead of one
-    per Lloyd round); assignment is a map-side argmin fold against the
-    one-row broadcast codebook — zero corpus shuffle; the update is ONE
-    combine-friendly groupBy over (subspace, codeword) whose shuffle
-    carries n_sub*K*sub_dim scalars, not vectors; the driver only ever
-    holds the K x DIM codeword matrix (kilobytes). The oracle re-train
-    chain applies the identical sample predicate (rate computed in SQL),
-    so sampling never breaks hash-equality — pinned cross-engine at a
-    forced rate>1 in tests/test_sampled_training.py.
+    per Lloyd round), applied identically by the oracle chain (rate
+    computed in SQL), so sampling never breaks hash-equality — pinned
+    cross-engine at a forced rate>1 in tests/test_sampled_training.py.
 
     Determinism (what makes the DuckDB oracle able to re-train the SAME
     codebook): init = subvectors of the K smallest vec_ids; argmin keeps
@@ -828,61 +778,32 @@ def subspace_kmeans_fit(
     rounded to 6 dp before the next assignment, so partial-aggregation
     merge order can't leak in; empty codewords keep their previous value.
     tests/test_pq_training.py pins the result against an independent numpy
-    Lloyd at sf0.001."""
-    spark = base.sparkSession
+    Lloyd and against the interpreted fold trainer it replaced."""
     train = _train_sample(base, sample_cap)
     # Seed = the k SMALLEST vec_ids PRESENT in the training sample,
     # codeword id = position in that vec_id-ordered list (ADVICE r6): the
     # oracle's init uses the same row_number()-over-vec_id renumber
     # (`_train_ctes`), so the id mapping matches by construction even when
-    # ids have gaps (a sampled corpus always does) — on the contiguous
-    # unsampled fixtures it degenerates to the old `vec_id < k` init
-    # bit-for-bit.
+    # ids have gaps (a sampled corpus always does).
     seed = train.orderBy("vec_id").limit(k).select("e").collect()
     if not seed:
         return []
-    cbs = [
-        [list(r.e[m * sub_dim:(m + 1) * sub_dim]) for r in seed]
-        for m in range(n_sub)
-    ]
-    d2_terms = " + ".join(
-        f"(element_at(e, m * {sub_dim} + {i}) - element_at(c, {i}))"
-        f" * (element_at(e, m * {sub_dim} + {i}) - element_at(c, {i}))"
-        for i in range(1, sub_dim + 1)
-    )
-    ks_expr = f"""
-        transform(
-          transform(sequence(0, {n_sub - 1}), m ->
-            transform(element_at(allcw, m + 1), c -> {d2_terms})),
-          l -> cast(array_position(l, array_min(l)) - 1 as int))
-    """
+    cw = [list(r.e[: n_sub * sub_dim]) for r in seed]
     for _ in range(iters):
-        allcw = spark.createDataFrame([(cbs,)], "allcw array<array<array<double>>>")
         upd = (
-            train.crossJoin(F.broadcast(allcw))
-            .select("e", F.expr(ks_expr).alias("ks"))
-            .select(
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(0, {n_sub - 1}),"
-                        " m -> struct(m AS m, element_at(ks, m + 1) AS k))"
-                    )
-                ).alias("mk"),
-                "e",
+            train.select("e")
+            .mapInPandas(
+                _codes_kernel(cw, ["e"], n_sub, sub_dim),
+                "e array<double>, codes array<int>",
             )
-            .select(F.col("mk.m").alias("m"), F.col("mk.k").alias("k"), "e")
-            .groupBy("m", "k")
-            .agg(
-                *[
-                    F.round(F.avg(F.element_at("e", F.col("m") * sub_dim + i)), 6).alias(f"c{i}")
-                    for i in range(1, sub_dim + 1)
-                ]
-            )
+            .select("codes", F.posexplode("e").alias("i", "v"))
+            .groupBy("i", F.expr(f"codes[i div {sub_dim}]").alias("k"))
+            .agg(F.round(F.avg("v"), 6).alias("c"))
             .collect()
         )
         for r in upd:  # codewords with no members keep their previous value
-            cbs[r.m][r.k] = [r[f"c{i}"] for i in range(1, sub_dim + 1)]
-    return [[v for m in range(n_sub) for v in cbs[m][j]] for j in range(len(seed))]
+            cw[r.k][r.i] = r.c
+    return cw
 
 
 def trained_codebook(
@@ -951,16 +872,15 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
     (`subspace_kmeans_fit`, PQ_TRAIN_ITERS rounds, deterministic seeding +
     6-dp update rounding), and the DuckDB oracle re-trains the identical
     codebook via an unrolled CTE chain — bit-equal, pinned by
-    tests/test_pq_training.py. Encoding is a vectorized Arrow kernel
-    (`_codes_errs_kernel`, r15 — the same seam as `_adc_codes_with_e`):
-    the relational argmin fold is CodegenFallback, and its getField(k)/
-    getField(d2) pair additionally evaluated the whole fold TWICE per
-    subspace (no CSE across HOF projections — the r14 VERDICT's
-    "documented 2x getField double-fold"). The kernel computes each
-    subspace's d2 terms in identical element order, keeps the first
-    minimum, and emits (codes, errs) ONCE — bit-equal to the fold by the
-    `test_arrow_codes_match_relational` construction, pinned for this
-    geometry (codes AND errs) in tests/test_pq_training.py. Packing and
+    tests/test_pq_training.py. Encoding is the shared vectorized Arrow
+    kernel (`_codes_kernel(errs=True)`, r15 — the same seam as
+    `_adc_codes_with_e`): the relational argmin fold is CodegenFallback,
+    and its getField(k)/getField(d2) pair additionally evaluated the whole
+    fold TWICE per subspace (no CSE across HOF projections). The kernel
+    computes each subspace's d2 terms in identical element order, keeps
+    the first minimum, and emits (codes, errs) ONCE — bit-equal to the
+    fold, pinned for this geometry (codes AND errs) in
+    tests/test_pq_training.py. Packing and
     the error sum stay JVM-side with the identical left-to-right
     association; still zero shuffle, one scan, like int8 quantization.
 
@@ -979,7 +899,7 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
             F.expr("cast(null as double)").alias("recon_err"),
         )
     enc = emb.mapInPandas(
-        _codes_errs_kernel(cw, PQ_M, PQ_SUB_DIM),
+        _codes_kernel(cw, ["vec_id"], PQ_M, PQ_SUB_DIM, errs=True),
         "vec_id bigint, codes array<int>, errs array<double>",
     )
     # packed code: integer shifts+adds, exact in any order; the error sum
@@ -1040,21 +960,6 @@ def _adc_lut_sql(n_sub: int, sub_dim: int) -> str:
     """
 
 
-def _encode_codes_sql(n_sub: int, sub_dim: int) -> str:
-    """Per-subspace argmin codeword ids as an array<int> (requires `e` and
-    `cw` in scope). First-min over ascending codeword ids == the oracle's
-    list_position(list_min) == `ORDER BY dist, id` ties. Stored packed
-    (ADC_K=64 -> 6 bits x 32 = 24 B/vector on a real lake); the array form
-    keeps the search SQL index-addressable in both engines."""
-    return f"""
-        transform(
-          transform(sequence(0, {n_sub} - 1), m ->
-            transform(cw, c ->
-              {_unrolled_d2("e", "c.e", f"m * {sub_dim} + 1", sub_dim)})),
-          l -> cast(array_position(l, array_min(l)) - 1 as int))
-    """
-
-
 def _adc_codes_with_e(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus rows as (vec_id, e, codes) with the ADC-geometry codes from a
     VECTORIZED Arrow kernel (`mapInPandas` + numpy broadcasting).
@@ -1071,8 +976,8 @@ def _adc_codes_with_e(spark: SparkSession, sf: str) -> DataFrame:
     Float discipline: d2 accumulates term-by-term in subvector-element
     order ((x1-c1)^2 + (x2-c2)^2, elementwise numpy ops — the identical
     IEEE operation sequence as the SQL fold and the DuckDB oracle), and
-    `argmin` keeps the first minimum — so the codes are bit-equal to the
-    relational `_encode_codes_sql` form (pinned by
+    the argmin keeps the first minimum — so the codes are bit-equal to the
+    relational encode fold (pinned by
     test_pq_training.py::test_arrow_codes_match_relational). The python
     node also materializes codes, so no repartition collapse-barrier is
     needed above the pair join."""
@@ -1095,17 +1000,56 @@ def _adc_codes_with_e(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _first_min(d2):
+    """Row-wise argmin of an n x K distance matrix in the engines' order:
+    the first minimum wins ties, and NaN ranks above every finite number
+    (Spark's `<`/array_min and DuckDB's list_min/ORDER BY agree on that),
+    so a row lands on a NaN column only when all its columns are NaN — the
+    first one. Plain numpy argmin returns the first NaN whenever any
+    exists. (NaN is read as +inf, so a row holding only NaN and +inf
+    would tie them; squared distances of finite doubles reach +inf only
+    past |x - c| ~ 1e154.)"""
+    import numpy as np
+
+    nan = np.isnan(d2)
+    return (np.where(nan, np.inf, d2) if nan.any() else d2).argmin(1)
+
+
+def _encode(X, C, n_sub: int, sub_dim: int):
+    """THE vectorized argmin encode every kernel here shares: per-subspace
+    codes (n x n_sub int32) and each code's d2 (n x n_sub). d2 accumulates
+    term by term in subvector-element order, (x1-c1)^2 + (x2-c2)^2 + ...,
+    the IEEE operation sequence of the relational folds and the oracle,
+    and `_first_min` keeps their tie and NaN order — so codes and d2 are
+    bit-equal to the folds (the references in tests/reference_folds.py)."""
+    import numpy as np
+
+    n = len(X)
+    rows = np.arange(n)
+    codes = np.empty((n, n_sub), dtype=np.int32)
+    errs = np.empty((n, n_sub), dtype=np.float64)
+    for m in range(n_sub):
+        lo = m * sub_dim
+        d2 = (X[:, None, lo] - C[None, :, lo]) ** 2
+        for i in range(1, sub_dim):
+            d2 = d2 + (X[:, None, lo + i] - C[None, :, lo + i]) ** 2
+        k = _first_min(d2)
+        codes[:, m] = k
+        errs[:, m] = d2[rows, k]
+    return codes, errs
+
+
 def _codes_kernel(
     cw: list[list[float]],
     passthrough: list[str],
     n_sub: int = ADC_M,
     sub_dim: int = ADC_SUB,
+    errs: bool = False,
 ):
-    """The shared vectorized encode kernel: batches of (…, e) in, the
-    passthrough columns plus per-subspace argmin `codes` out. d2 terms
-    accumulate in subvector-element order and argmin keeps the first
-    minimum — the identical IEEE sequence as `_encode_codes_sql` and the
-    oracle."""
+    """The shared vectorized encode kernel (`_encode`): batches of (…, e)
+    in, the passthrough columns plus per-subspace argmin `codes` out — and,
+    with errs=True, each code's d2 as `errs` (the PQ reconstruction-error
+    terms)."""
     import numpy as np
 
     C = np.asarray(cw, dtype=np.float64)  # K x DIM, codeword-id order
@@ -1116,16 +1060,11 @@ def _codes_kernel(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf["e"].to_numpy())
-            codes = np.empty((len(pdf), n_sub), dtype=np.int32)
-            for m in range(n_sub):
-                lo = m * sub_dim
-                d2 = (X[:, None, lo] - C[None, :, lo]) ** 2
-                for i in range(1, sub_dim):
-                    d2 = d2 + (X[:, None, lo + i] - C[None, :, lo + i]) ** 2
-                codes[:, m] = d2.argmin(1)  # first minimum, like the fold
+            codes, d2 = _encode(np.stack(pdf["e"].to_numpy()), C, n_sub, sub_dim)
             out = {c: pdf[c] for c in passthrough}
             out["codes"] = list(codes)
+            if errs:
+                out["errs"] = list(d2)
             yield pd.DataFrame(out)
 
     return encode
@@ -1151,12 +1090,15 @@ def _cents_tables(cents_cv: list[list[float]]):
 
 
 def _assign_ids(X, CV, cvn):
-    """Vectorized coarse assignment, bit-equal to `_IVF_ASSIGN_SQL`:
-    nrm = sqrt(sequential sum of squares), cos = (sequential dot) /
-    (nrm * cvn), strict-> fold over ascending centroid ids keeps the
-    FIRST maximum. Returns (ids int64, nrm). Requires nonzero rows (the
-    callers keep the JVM-side `exists(e, x -> x <> 0.0d)` filter), so no
-    NaN ever enters the comparison."""
+    """Vectorized coarse assignment, bit-equal to the cosine-argmax fold
+    and the oracle's `ORDER BY cos DESC, centroid_id ASC`: nrm = sqrt(
+    sequential sum of squares), cos = (sequential dot) / (nrm * cvn), and a
+    strict-> scan over ascending centroid ids keeps the FIRST maximum, NaN
+    ranking above every number as in both engines (a NaN centroid takes
+    every row, exactly like the fold). A zero divisor — a zero-norm
+    centroid — raises, as the ANSI fold's DIVIDE_BY_ZERO does, instead of
+    routing on 0/0. Returns (ids int64, nrm). Rows must be nonzero
+    (callers keep the JVM-side `exists(e, x -> x <> 0.0d)` filter)."""
     import numpy as np
 
     dim = X.shape[1]
@@ -1170,11 +1112,14 @@ def _assign_ids(X, CV, cvn):
         dot = X[:, 0] * CV[j, 0]
         for i in range(1, dim):
             dot = dot + X[:, i] * CV[j, i]
-        cos = dot / (nrm * cvn[j])
+        den = nrm * cvn[j]
+        if (den == 0).any():
+            raise ZeroDivisionError(f"cosine to coarse centroid {j}: zero norm product")
+        cos = dot / den
         if best is None:
             best = cos
         else:
-            m = cos > best  # strict >: first maximum wins, like the fold
+            m = (cos > best) | (np.isnan(cos) & ~np.isnan(best))
             bid[m] = j
             best = np.where(m, cos, best)
     return bid, nrm
@@ -1188,13 +1133,10 @@ def _codes_assign_kernel(
     residual: bool = False,
 ):
     """Fused coarse-assign (+ optional residual subtraction) + PQ encode in
-    ONE Arrow pass — replaces the interpreted `_IVF_ASSIGN_SQL`
-    CodegenFallback fold (8 centroids x DIM sequential ops per row) plus,
-    for the residual tier, the centroid-fetch broadcast join and zip_with.
-    Assignment bit-equality per `_assign_ids`; the residual r = e - cv is
-    one exact IEEE subtract per element (identical to zip_with); encode
-    bit-equality per `_codes_kernel`. Pinned against the relational forms
-    in tests/test_pq_training.py."""
+    ONE Arrow pass: (vec_id, e) in, (vec_id, centroid_id, codes) out.
+    Assignment per `_assign_ids`; the residual r = e - cv is one exact
+    IEEE subtract per element (identical to zip_with); encode per
+    `_encode`."""
     import numpy as np
 
     C = np.asarray(cw, dtype=np.float64)
@@ -1204,19 +1146,11 @@ def _codes_assign_kernel(
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
             X = np.stack(pdf["e"].to_numpy())
             bid, _ = _assign_ids(X, CV, cvn)
-            E = X - CV[bid] if residual else X
-            codes = np.empty((n, n_sub), dtype=np.int32)
-            for m in range(n_sub):
-                lo = m * sub_dim
-                d2 = (E[:, None, lo] - C[None, :, lo]) ** 2
-                for i in range(1, sub_dim):
-                    d2 = d2 + (E[:, None, lo + i] - C[None, :, lo + i]) ** 2
-                codes[:, m] = d2.argmin(1)  # first minimum, like the fold
+            codes, _ = _encode(X - CV[bid] if residual else X, C, n_sub, sub_dim)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "centroid_id": bid, "codes": list(codes)}
             )
@@ -1224,11 +1158,13 @@ def _codes_assign_kernel(
     return encode
 
 
-def _assign_only_kernel(cents_cv: list[list[float]]):
-    """Coarse assignment alone, passing (vec_id, e, nrm) through — the
-    SemDeDup cluster router. nrm is computed IN the kernel with the same
-    sequential fold + sqrt as `_norm` (bit-equal), so the JVM side no
-    longer evaluates either HOF per row."""
+def _assign_only_kernel(cents_cv: list[list[float]], residual: bool = False):
+    """Coarse assignment alone: (vec_id, e) in, (vec_id, e, nrm,
+    cluster_id) out — the IVF list router and the SemDeDup cluster router.
+    nrm is computed IN the kernel with the same sequential fold + sqrt as
+    `_norm` (bit-equal). With residual=True the `e` out is the residual
+    e - cv of the assigned centroid (one exact IEEE subtract per element),
+    the residual-codebook training corpus."""
     import numpy as np
 
     CV, cvn = _cents_tables(cents_cv)
@@ -1244,52 +1180,13 @@ def _assign_only_kernel(cents_cv: list[list[float]]):
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
-                    "e": pdf["e"],
+                    "e": list(X - CV[bid]) if residual else pdf["e"],
                     "nrm": nrm,
                     "cluster_id": bid,
                 }
             )
 
     return assign
-
-
-def _codes_errs_kernel(cw: list[list[float]], n_sub: int, sub_dim: int):
-    """`_codes_kernel` variant that ALSO emits each subspace's argmin d2
-    (the PQ reconstruction-error terms) — the quantize_pq encode, where the
-    relational form paid the fold twice via getField(k)/getField(d2).
-    Identical IEEE sequence as `_pq_best_sql`: d2 terms accumulate in
-    subvector-element order, argmin keeps the first minimum, and the err is
-    THAT codeword's accumulated d2 — bit-equal by the same construction as
-    `_codes_kernel` (pinned in tests/test_pq_training.py for this
-    geometry, codes and errs both)."""
-    import numpy as np
-
-    C = np.asarray(cw, dtype=np.float64)  # K x DIM, codeword-id order
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            X = np.stack(pdf["e"].to_numpy())
-            codes = np.empty((n, n_sub), dtype=np.int32)
-            errs = np.empty((n, n_sub), dtype=np.float64)
-            rows = np.arange(n)
-            for m in range(n_sub):
-                lo = m * sub_dim
-                d2 = (X[:, None, lo] - C[None, :, lo]) ** 2
-                for i in range(1, sub_dim):
-                    d2 = d2 + (X[:, None, lo + i] - C[None, :, lo + i]) ** 2
-                k = d2.argmin(1)  # first minimum, like the fold
-                codes[:, m] = k
-                errs[:, m] = d2[rows, k]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "codes": list(codes), "errs": list(errs)}
-            )
-
-    return encode
 
 
 def _adc_dist_sql(n_sub: int) -> str:
@@ -1481,23 +1378,6 @@ def q_ann_pq_adc_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-#: map-side coarse-quantizer assignment: cosine argmax against the one-row
-#: broadcast `cents` array (needs `e`, `nrm`, `cents` in scope). Strict `>`
-#: over ascending centroid_id == the oracle's `ORDER BY cos DESC, id ASC`.
-_IVF_ASSIGN_SQL = """
-    aggregate(
-      transform(cents, c -> struct(
-          c.centroid_id AS centroid_id,
-          aggregate(zip_with(e, c.cv, (x, y) -> x * y),
-                    cast(0 as double), (acc, x) -> acc + x)
-            / (nrm * c.cvn) AS c_cos)),
-      struct(cast(-1 as bigint) AS centroid_id,
-             cast('-Infinity' as double) AS c_cos),
-      (best, c) -> IF(c.c_cos > best.c_cos, c, best)
-    ).centroid_id
-"""
-
-
 def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """The full IVF-PQ retrieval ladder in one query — THE production ANN
     shape at 100 TB: (1) coarse-quantizer routing confines each query to its
@@ -1534,11 +1414,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     # while the JVM fold was CodegenFallback (~0.5 s/pass interpreted at
     # sf0.1). The python node materializes codes — no barrier needed.
     cw_adc = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
-    nz = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    nz = _nonzero_embeddings(spark, sf)
     if not cw_adc:  # empty corpus (see _adc_codes_with_e: non-foldable empty)
         corpus = nz.select(
             "vec_id",
@@ -1612,34 +1488,30 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
-    """(vec_id, centroid_id, e, r) for the nonzero corpus: each vector's
-    assigned coarse centroid (map-side argmax fold) and its RESIDUAL
-    r = e - centroid — the quantity production IVF-PQ actually encodes
-    (residuals have far less variance than raw vectors, so the same
-    codebook budget buys less distortion). Assignment and the centroid
-    fetch are both against broadcast frames — zero corpus shuffle."""
-    emb = (
+def _nonzero_embeddings(spark: SparkSession, sf: str) -> DataFrame:
+    """(vec_id, e) of every nonzero embedding — the corpus the coarse
+    quantizer routes (all-zero vectors: cosine undefined, excluded)."""
+    return (
         load(spark, sf, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
         .where(F.expr("exists(e, x -> x <> 0.0d)"))
     )
-    cent = _ivf_centroids(spark, sf)
-    cent_arr = cent.agg(
-        F.sort_array(F.collect_list(F.struct("centroid_id", "cv", "cvn"))).alias("cents")
-    )
-    return (
-        emb.crossJoin(F.broadcast(cent_arr))
-        .select("vec_id", "e", F.expr(_IVF_ASSIGN_SQL).alias("centroid_id"))
-        .join(F.broadcast(cent.select("centroid_id", "cv")), "centroid_id")
-        .select(
-            "vec_id",
-            "centroid_id",
-            "e",
-            F.zip_with("e", "cv", lambda x, y: x - y).alias("r"),
-        )
-    )
+
+
+def _residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
+    """(vec_id, e) for the nonzero corpus with `e` replaced by its RESIDUAL
+    r = e - cv against the assigned coarse centroid — the quantity
+    production IVF-PQ actually encodes (residuals have far less variance
+    than raw vectors, so the same codebook budget buys less distortion).
+    Assignment and the subtract run in ONE Arrow pass
+    (`_assign_only_kernel(residual=True)`; the subtract is one exact IEEE
+    op per element) — zero corpus shuffle."""
+    return _nonzero_embeddings(spark, sf).mapInPandas(
+        _assign_only_kernel(
+            trained_codebook(spark, sf, 1, DIM, N_CENTROIDS), residual=True
+        ),
+        "vec_id bigint, e array<double>, nrm double, cluster_id bigint",
+    ).select("vec_id", "e")
 
 
 def _residual_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
@@ -1648,28 +1520,22 @@ def _residual_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
     Memoized like every other codebook here."""
     key = (sf, "resid", ADC_M, ADC_SUB, ADC_K, PQ_TRAIN_ITERS)
     if key not in _CW_CACHE:
-        base = _residual_corpus(spark, sf).select("vec_id", F.col("r").alias("e"))
-        _CW_CACHE[key] = subspace_kmeans_fit(base, ADC_M, ADC_SUB, ADC_K)
+        _CW_CACHE[key] = subspace_kmeans_fit(
+            _residual_corpus(spark, sf), ADC_M, ADC_SUB, ADC_K
+        )
     return _CW_CACHE[key]
 
 
 def _residual_codes(spark: SparkSession, sf: str) -> DataFrame:
     """(vec_id, centroid_id, codes) — coarse assignment, residual
     subtraction AND the residual-codebook encode fused into ONE Arrow pass
-    (r15; `_codes_assign_kernel(residual=True)`). The r14 chain ran the
-    interpreted `_IVF_ASSIGN_SQL` fold per row, a centroid-fetch broadcast
-    join and a zip_with BEFORE the encode kernel (~0.8 s/pass at sf0.1);
-    every stage is bit-equal by the `_assign_ids`/`_codes_kernel`
-    construction (pinned in tests/test_pq_training.py). Training
-    (`_residual_codebook`) still derives from the relational
-    `_residual_corpus` — memoized, and bit-equal to the kernel's residuals
-    by the same argument."""
+    (`_codes_assign_kernel(residual=True)`); every stage is bit-equal to
+    the relational folds by the `_assign_ids`/`_encode` construction
+    (pinned in tests/test_pq_training.py). Training
+    (`_residual_codebook`) reads the same kernel's residuals
+    (`_residual_corpus`)."""
     cw = _residual_codebook(spark, sf)
-    nz = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    nz = _nonzero_embeddings(spark, sf)
     if not cw:  # empty corpus (see _adc_codes_with_e: non-foldable empty)
         return nz.select(
             "vec_id",
@@ -1704,7 +1570,7 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: identical to `ann_ivfpq_topk` (assignment + encode in
     broadcast-only map passes, Arrow encode node materializes codes, probe
     join touches n/NC * N_PROBE candidates, rerank via broadcast shortlist
-    semi-join); the residual subtraction is a free map-side zip."""
+    semi-join); the residual subtraction runs inside the same kernel."""
     emb = (
         load(spark, sf, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
@@ -1856,42 +1722,17 @@ KMEANS_K = 8
 KMEANS_ITERS = 4
 
 
-def _kmeans_assign_expr(cents: list[list[float]], dim: int) -> F.Column:
-    """Map-side argmin cluster id for column `e` against inlined centroids.
-
-    Same transform-then-fold shape as the PQ encode: each centroid's squared
-    L2 is computed ONCE (an IF over the raw fold would evaluate it twice),
-    and the strict `<` fold over ascending cid keeps the smallest id on
-    ties — matching numpy argmin's first-hit rule in the reference test."""
-    lit = "array(" + ", ".join(
-        "struct(%d as cid, array(%s) as cv)" % (cid, ", ".join(f"{v!r}D" for v in cv))
-        for cid, cv in enumerate(cents)
-    ) + ")"
-    return F.expr(
-        f"""
-        aggregate(
-          transform({lit}, c -> struct(c.cid AS cid,
-              aggregate(sequence(0, {dim - 1}), cast(0 as double),
-                (acc, i) -> acc + (element_at(e, i + 1) - element_at(c.cv, i + 1))
-                              * (element_at(e, i + 1) - element_at(c.cv, i + 1))) AS d2)),
-          struct(cast(-1 as int) AS cid, cast('Infinity' as double) AS d2),
-          (best, c) -> IF(c.d2 < best.d2, c, best)
-        ).cid
-        """
-    )
-
-
 def kmeans_fit(
     emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
 ) -> list[list[float]]:
     """Distributed Lloyd iterations; returns the final k centroids.
 
-    Since r7 this DELEGATES to `subspace_kmeans_fit` with n_sub=1 (plain
-    full-vector k-means is the one-subspace special case): one trainer,
-    one determinism contract (k-smallest-vec_id positional seeding,
-    first-min argmin, 6-dp update rounding, empty clusters keep their
-    centroid), one scale shape (sample-bounded training scans, broadcast
-    assignment, k*dim-scalar update shuffle) — and the DuckDB re-train
+    Plain full-vector k-means is the one-subspace special case, so this
+    DELEGATES to `subspace_kmeans_fit` with n_sub=1: one trainer, one
+    determinism contract (k-smallest-vec_id positional seeding, first-min
+    argmin, 6-dp update rounding, empty clusters keep their centroid), one
+    scale shape (sample-bounded training scans, Arrow-kernel assignment,
+    long-form k*dim-scalar update shuffle) — and the DuckDB re-train
     oracle (`_kmeans_centroids_oracle`) mirrors that single contract."""
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     probe = base.where(F.col("e").isNotNull()).select(F.size("e").alias("d")).first()
@@ -1923,11 +1764,11 @@ def q_embedding_kmeans_centroids(spark: SparkSession, sf: str) -> DataFrame:
             [], "centroid_id int, dim int, centroid_v double, n_members bigint"
         )
     dim = len(cents[0])
-    assign = _kmeans_assign_expr(cents, dim)
+    # final assignment: the trainer's own argmin kernel, one subspace
     counts = (
         emb.select(F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("cid", assign)
-        .groupBy("cid")
+        .mapInPandas(_codes_kernel(cents, [], 1, dim), "codes array<int>")
+        .groupBy(F.col("codes")[0].alias("cid"))
         .agg(F.count("*").alias("n_members"))
     )
     rows = [
@@ -2798,7 +2639,8 @@ def _train_ctes(
 
 def _codes_duck(n_sub: int, sub_dim: int) -> str:
     """Per-row codeword ids as an INT list (needs `e` and `cw`): the exact
-    mirror of `_encode_codes_sql` — first-min argmin over ascending ids."""
+    mirror of the Spark encode (`_encode`) — first-min argmin over
+    ascending ids."""
     return f"""
         list_transform(
           list_transform(generate_series(0, {n_sub} - 1), m ->
@@ -3966,8 +3808,8 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     orders by the MICRO-QUANTIZED min-d2 (floored once) with vec_id
     tiebreak; d2 is the sequential zip_with fold == DuckDB
     list_dot_product over the diff list (the JL pairing). Assignment
-    uses the strict-< first-min fold (`_kmeans_assign_expr`), mirrored
-    in the oracle as the explicit first-min CASE chain.
+    keeps the first minimum (np.argmin over centers in seed order),
+    mirrored in the oracle as the explicit first-min CASE chain.
 
     Scale shape (the trainer contract): ONE corpus scan builds the
     cap-bounded sample; everything after it — the K-1 greedy rounds AND

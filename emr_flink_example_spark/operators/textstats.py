@@ -1285,7 +1285,10 @@ def _bpe_train_rules(spark: SparkSession, sf: str, n_merges: int) -> list[tuple]
 
     merges = []
     for rank in range(n_merges):
-        pairs = vocab.select(
+        # a word already merged into ONE symbol has no pair left; without
+        # the guard sequence(0, -1) counts DOWN to [0, -1] and syms[1]
+        # throws (the oracle's generate_series(1, 0) is empty)
+        pairs = vocab.where(F.size("syms") > 1).select(
             "freq",
             F.explode(
                 F.expr(
@@ -3154,9 +3157,11 @@ def _bpe_train_chain(n: int) -> str:
         SELECT {r} AS rank, p1, p2, p1 || p2 AS merged, pair_freq
         FROM pairs{r} ORDER BY pair_freq DESC, p1 ASC, p2 ASC LIMIT 1
     ), vocab{r + 1} AS MATERIALIZED (
+        -- LEFT JOIN: once no pair is left, best{r} is empty and the vocab
+        -- carries over unchanged (the Spark trainer stops merging)
         SELECT word, freq,
-               replace(s, '|' || b.p1 || '||' || b.p2 || '|', '|' || b.merged || '|') AS s
-        FROM vocab{r} CROSS JOIN best{r} b
+               coalesce(replace(s, '|' || b.p1 || '||' || b.p2 || '|', '|' || b.merged || '|'), s) AS s
+        FROM vocab{r} LEFT JOIN best{r} b ON true
     )""")
     return "".join(parts)
 

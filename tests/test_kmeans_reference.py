@@ -64,3 +64,28 @@ def test_kmeans_centroids_match_numpy(spark):
         return d2.min(axis=1).sum()
 
     assert inertia(more) <= inertia(got) + 1e-6
+
+
+def test_member_counts_match_relational_fold(spark):
+    """The final assignment pass runs the trainer's Arrow argmin kernel;
+    its per-cluster member counts must equal the interpreted first-min
+    fold's (`kmeans_assign_expr` in reference_folds) exactly."""
+    from pyspark.sql import functions as F
+
+    from reference_folds import kmeans_assign_expr
+
+    emb = load(spark, SF_DIR, "embeddings")
+    cents = kmeans_fit(emb)
+    got = {
+        r.centroid_id: r.n_members
+        for r in q_embedding_kmeans_centroids(spark, SF_DIR).collect()
+        if r.n_members is not None
+    }
+    want = {
+        r.cid: r.n
+        for r in emb.select(F.col("embedding").cast("array<double>").alias("e"))
+        .groupBy(kmeans_assign_expr(cents, len(cents[0])).alias("cid"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert got == want and sum(want.values()) > 0

@@ -11,12 +11,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from emr_flink_example_spark.operators.multimodal import (
-    _phash_hof_df,
     _phash_kernel,
     q_multimodal_phash,
 )
 
 from conftest import SF_DIR
+from reference_folds import phash_hof_df
 
 
 def _rows(df):
@@ -25,7 +25,7 @@ def _rows(df):
 
 def test_arrow_phash_matches_relational(spark):
     got = _rows(q_multimodal_phash(spark, SF_DIR))
-    ref = _rows(_phash_hof_df(spark, SF_DIR))
+    ref = _rows(phash_hof_df(spark, SF_DIR))
     assert got == ref
     assert len(got) > 0
 

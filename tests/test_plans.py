@@ -46,9 +46,14 @@ ARROW_QUERIES = {
     "dedup_semantic_clusters",
     # r14 batch 9: the integer-DCT census joined the Arrow-kernel family
     # (the HOF fold form is CodegenFallback — measured ~4x slower; kept as
-    # the pinned-bit-equal reference `_phash_hof_df`)
+    # the pinned-bit-equal reference in tests/reference_folds.py)
     "multimodal_phash",
     "multimodal_phash_pairs",
+    # the IVF corpus routing runs the shared Arrow assignment kernel
+    # (`_assign_ids`); the interpreted cosine-argmax fold was CodegenFallback
+    "ann_ivf_topk",
+    # the member-count pass runs the Lloyd trainer's own Arrow argmin kernel
+    "embedding_kmeans_centroids",
 }
 
 #: the one deliberate row-at-a-time Python surface demo (BatchEvalPythonUDTF)
@@ -212,12 +217,28 @@ def test_bm25_topk_no_token_window(spark):
 
 
 def test_ivf_assignment_is_mapside(spark):
-    """IVF corpus→centroid assignment is an HOF argmax over a one-row
-    broadcast centroid array: the corpus reaches the probe join with ZERO
-    Exchange (VERDICT r1 item 6). The only hash exchanges are the tiny
-    probe-side rank (vec_id < 10 rows) and the final per-query top-k."""
+    """IVF corpus→centroid assignment is a map-side argmax against the
+    centroids shipped in the kernel: the corpus reaches the probe join
+    with ZERO Exchange (VERDICT r1 item 6). The only hash exchanges are
+    the tiny probe-side rank (vec_id < 10 rows) and the final per-query
+    top-k."""
     plan = _plan(spark, "ann_ivf_topk")
     assert plan.count("Exchange hashpartitioning") == 2
+
+
+def test_ivf_assignment_runs_in_arrow_kernel(spark):
+    """The corpus routing is the Arrow kernel, and no interpreted
+    argmin/argmax fold comes back: neither the struct fold over a centroid
+    array (from a +-Infinity sentinel) nor array_position(array_min). The
+    corpus rows reach the kernel without any lambda fold; the remaining
+    `aggregate(zip_with(` dot products score only probe rows and probed
+    candidate pairs."""
+    plan = _plan(spark, "ann_ivf_topk")
+    assert "MapInPandas" in plan
+    for fold in ("aggregate(transform(", "Infinity", "array_min("):
+        assert fold not in plan, fold
+    corpus_side = plan[plan.index("MapInPandas"):]
+    assert "aggregate(" not in corpus_side and "zip_with(" not in corpus_side
 
 
 def test_multitable_lsh_broadcasts_queries(spark):

@@ -12,12 +12,14 @@ trainer itself.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from emr_flink_example_spark.io import load
 from emr_flink_example_spark.operators import similarity as S
 
 from conftest import SF_DIR
+import reference_folds as R
 
 
 def _np_subspace_lloyd(X, n_sub, sub_dim, k, iters):
@@ -84,7 +86,6 @@ def test_arrow_codes_match_relational(spark):
         ADC_SUB,
         _adc_codebook,
         _adc_codes_with_e,
-        _encode_codes_sql,
     )
 
     arrow = {
@@ -97,46 +98,49 @@ def test_arrow_codes_match_relational(spark):
     rel = {
         r.vec_id: list(r.codes)
         for r in emb.crossJoin(F.broadcast(_adc_codebook(spark, SF_DIR)))
-        .select("vec_id", F.expr(_encode_codes_sql(ADC_M, ADC_SUB)).alias("codes"))
+        .select("vec_id", F.expr(R.encode_codes_sql(ADC_M, ADC_SUB)).alias("codes"))
         .collect()
     }
     assert arrow == rel and len(arrow) > 0
 
 
 def test_residual_arrow_codes_match_relational(spark):
-    """Same bit-equality contract for the RESIDUAL tier: the Arrow kernel
-    over residuals must reproduce the relational argmin fold exactly."""
+    """Same bit-equality contract for the RESIDUAL tier: the kernel's
+    residuals must equal the relational assign + zip_with residuals, and
+    the Arrow encode over them must reproduce the relational argmin fold
+    exactly."""
     from emr_flink_example_spark.operators.similarity import (
         ADC_M,
         ADC_SUB,
         _codebook_df,
-        _encode_codes_sql,
         _residual_codebook,
         _residual_codes,
         _residual_corpus,
     )
 
+    resid = R.residual_corpus(spark, SF_DIR)
+    kernel_resid = {r.vec_id: list(r.e) for r in _residual_corpus(spark, SF_DIR).collect()}
+    assert kernel_resid == {r.vec_id: list(r.e) for r in resid.collect()}
     arrow = {
         r.vec_id: list(r.codes)
         for r in _residual_codes(spark, SF_DIR).select("vec_id", "codes").collect()
     }
     cb = _codebook_df(spark, _residual_codebook(spark, SF_DIR))
-    resid = _residual_corpus(spark, SF_DIR).select("vec_id", F.col("r").alias("e"))
     rel = {
         r.vec_id: list(r.codes)
         for r in resid.crossJoin(F.broadcast(cb))
-        .select("vec_id", F.expr(_encode_codes_sql(ADC_M, ADC_SUB)).alias("codes"))
+        .select("vec_id", F.expr(R.encode_codes_sql(ADC_M, ADC_SUB)).alias("codes"))
         .collect()
     }
     assert arrow == rel and len(arrow) > 0
 
 
 def test_pq_codes_errs_kernel_matches_relational(spark):
-    """r15: the quantize_pq Arrow encode (`_codes_errs_kernel`) must be
+    """The quantize_pq Arrow encode (`_codes_kernel(errs=True)`) must be
     BIT-EQUAL — codes AND per-subspace errs — to the relational
-    `_pq_best_sql` getField fold it replaced (same IEEE accumulation
-    order, first-min argmin); this is what keeps the quantize_pq oracle
-    hash-green while the executed path is numpy."""
+    getField fold it replaced (same IEEE accumulation order, first-min
+    argmin); this is what keeps the quantize_pq oracle hash-green while
+    the executed path is numpy."""
     cw = S.trained_codebook(spark, SF_DIR, S.PQ_M, S.PQ_SUB_DIM, S.PQ_K)
     emb = load(spark, SF_DIR, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -144,13 +148,13 @@ def test_pq_codes_errs_kernel_matches_relational(spark):
     arrow = {
         r.vec_id: (list(r.codes), list(r.errs))
         for r in emb.mapInPandas(
-            S._codes_errs_kernel(cw, S.PQ_M, S.PQ_SUB_DIM),
+            S._codes_kernel(cw, ["vec_id"], S.PQ_M, S.PQ_SUB_DIM, errs=True),
             "vec_id bigint, codes array<int>, errs array<double>",
         ).collect()
     }
     rel_cols = []
     for m in range(S.PQ_M):
-        best = F.expr(S._pq_best_sql(m))
+        best = F.expr(R.pq_best_sql(m))
         rel_cols.append(best.getField("k").alias(f"k{m}"))
         rel_cols.append(best.getField("d2").alias(f"d{m}"))
     rel = {
@@ -165,34 +169,86 @@ def test_pq_codes_errs_kernel_matches_relational(spark):
     assert len(arrow) > 0 and arrow == rel
 
 
-def test_assign_kernel_matches_ivf_assign_sql(spark):
-    """r15: the in-kernel coarse assignment (`_assign_ids`, explicit
-    element-order accumulation) must be BIT-EQUAL to the interpreted
-    `_IVF_ASSIGN_SQL` fold it replaced — assignment ids AND the nrm the
-    SemDeDup cosines divide by."""
-    cents_cv = S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)
-    emb = (
-        load(spark, SF_DIR, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    arrow = {
+def _kernel_assign(emb, cents_cv):
+    return {
         r.vec_id: (r.cluster_id, r.nrm)
         for r in emb.mapInPandas(
             S._assign_only_kernel(cents_cv),
             "vec_id bigint, e array<double>, nrm double, cluster_id bigint",
         ).collect()
     }
-    cent_arr = S._ivf_centroids(spark, SF_DIR).agg(
-        F.sort_array(
-            F.collect_list(F.struct("centroid_id", "cv", "cvn"))
-        ).alias("cents")
-    )
-    rel = {
-        r.vec_id: (r.cid, r.nrm)
-        for r in emb.withColumn("nrm", S._norm("e"))
-        .crossJoin(F.broadcast(cent_arr))
-        .select("vec_id", F.expr(S._IVF_ASSIGN_SQL).alias("cid"), "nrm")
+
+
+def test_assign_kernel_matches_ivf_assign_sql(spark):
+    """The in-kernel coarse assignment (`_assign_ids`, explicit
+    element-order accumulation) must be BIT-EQUAL to the interpreted
+    cosine-argmax fold it replaced — assignment ids AND the nrm the
+    SemDeDup cosines divide by."""
+    cents_cv = S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)
+    emb = S._nonzero_embeddings(spark, SF_DIR)
+    rel = {r.vec_id: (r.cid, r.nrm) for r in R.ivf_assign(emb, cents_cv).collect()}
+    assert len(rel) > 0 and _kernel_assign(emb, cents_cv) == rel
+
+
+def test_kernels_follow_engine_nan_order(spark):
+    """NaN ranks above every number in both engines, so a NaN coarse
+    centroid takes EVERY row in the fold — the kernel must route the same
+    way; and a NaN codeword is never an L2 argmin unless all are NaN
+    (array_min skips it, numpy argmin alone would return it)."""
+    cents_cv = [list(v) for v in S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)]
+    cents_cv[3] = [float("nan")] * S.DIM
+    emb = S._nonzero_embeddings(spark, SF_DIR)
+    rel = {r.vec_id: r.cid for r in R.ivf_assign(emb, cents_cv).collect()}
+    assert len(rel) > 0 and set(rel.values()) == {3}
+    assert {v: c for v, (c, _) in _kernel_assign(emb, cents_cv).items()} == rel
+
+    cw = [list(v) for v in S.trained_codebook(spark, SF_DIR, S.ADC_M, S.ADC_SUB, S.ADC_K)]
+    cw[0] = [float("nan")] * S.DIM
+    arrow = {
+        r.vec_id: list(r.codes)
+        for r in emb.mapInPandas(
+            S._codes_kernel(cw, ["vec_id"]), "vec_id bigint, codes array<int>"
+        ).collect()
+    }
+    fold = {
+        r.vec_id: list(r.codes)
+        for r in emb.crossJoin(F.broadcast(S._codebook_df(spark, cw)))
+        .select("vec_id", F.expr(R.encode_codes_sql(S.ADC_M, S.ADC_SUB)).alias("codes"))
         .collect()
     }
-    assert len(arrow) > 0 and arrow == rel
+    assert len(arrow) > 0 and arrow == fold
+    assert all(0 not in c for c in arrow.values())
+
+
+def test_zero_norm_centroid_fails_like_the_fold(spark):
+    """An all-zero coarse centroid makes every cosine 0/0. The ANSI fold
+    raises DIVIDE_BY_ZERO; the kernel must fail loudly too rather than
+    route every row on a NaN (or never to it)."""
+    cents_cv = [list(v) for v in S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)]
+    cents_cv[3] = [0.0] * S.DIM
+    emb = S._nonzero_embeddings(spark, SF_DIR)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        R.ivf_assign(emb, cents_cv).collect()
+    with pytest.raises(Exception, match="zero norm"):
+        _kernel_assign(emb, cents_cv)
+
+
+def test_first_min_engine_order():
+    """`_first_min` unit contract: first minimum on ties, NaN above every
+    number, all-NaN rows pick the first column."""
+    nan, inf = float("nan"), float("inf")
+    d2 = np.array([[2.0, 1.0, 1.0], [nan, 3.0, 3.0], [nan, nan, nan], [inf, nan, 5.0]])
+    assert S._first_min(d2).tolist() == [1, 1, 0, 2]
+
+
+def test_kernel_trainer_matches_fold_trainer(spark):
+    """The Arrow-kernel Lloyd trainer must reproduce the interpreted fold
+    trainer it replaced bit-for-bit (same seeding, argmin ties, Spark avg +
+    6-dp update) — the update stays in Spark, only its shape changed from
+    sub_dim-wide to long form."""
+    base = load(spark, SF_DIR, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    for (n_sub, sub_dim, k) in [(S.PQ_M, S.PQ_SUB_DIM, S.PQ_K), (1, S.DIM, S.N_CENTROIDS)]:
+        got = S.subspace_kmeans_fit(base, n_sub, sub_dim, k)
+        assert got == R.fold_subspace_kmeans_fit(base, n_sub, sub_dim, k), (n_sub, k)

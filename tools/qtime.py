@@ -6,7 +6,7 @@ sweep, and optionally dumps each query's ``explain("formatted")`` to
 ``plans/<round>/<query>_<tag>.txt`` so before/after plan evidence is committed
 alongside the timing numbers.
 
-    python tools/qtime.py [-n RUNS] [--explain TAG] [--sf DIR] name [name ...]
+    python tools/qtime.py [-n RUNS] [--explain TAG --round R] [--sf DIR] name [name ...]
 """
 
 from __future__ import annotations
@@ -32,10 +32,13 @@ def main() -> None:
     ap.add_argument("-n", type=int, default=3, help="runs per query (report min)")
     ap.add_argument("--explain", metavar="TAG", default=None,
                     help="dump explain('formatted') to plans/<round>/<q>_<TAG>.txt")
-    ap.add_argument("--round", default="r15", help="plans/ subdir for --explain dumps")
+    ap.add_argument("--round", help="plans/ subdir for --explain dumps"
+                    " (required with --explain)")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                                    "/root/testdata/sf0.1"))
     args = ap.parse_args()
+    if args.explain and not args.round:
+        ap.error("--explain needs --round (the plans/ subdir to write into)")
 
     spark = local_test_session()
     spark.sparkContext.setLogLevel("ERROR")
