@@ -118,32 +118,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for spark.sql queries)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet write (≙ the reference's bucket-assigner
-    directory layout, Kafka2S3Parquet.scala:26-35 / Kafka2S3Hive.scala:97).
-
-    ``max_records_per_file`` plays the role of the reference's max part-file
-    size cap (Kafka2S3Hive.scala:106); at 100 TB it bounds individual file
-    size without an extra repartition pass.
-    """
-    writer = df.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.partitionBy(*partition_cols).parquet(path)
-
-
 #: formats the generic reader/writer round-trips; parquet is the lake
 #: default, the rest cover ingest/export interchange (SURVEY.md §2 Part B
 #: "Scans" row: parquet/text/json — plus csv and orc for completeness)

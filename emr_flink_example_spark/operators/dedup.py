@@ -1663,7 +1663,7 @@ def q_dedup_semantic_clusters(
     neighbor) plus the cluster each duplicate was caught in.
 
     Composition, not new machinery: the clusters come from the SAME
-    memoized trained centroids as the IVF tier (`_ivf_centroids` —
+    memoized trained centroids as the IVF tier (`_coarse_codebook` —
     sample-bounded Lloyd, zero extra training cost here), assignment is
     the Arrow kernel's zero-shuffle cosine argmax, and the in-cluster
     pairwise cosine runs through `_skew_guarded_pairs` exactly like the
@@ -1675,24 +1675,18 @@ def q_dedup_semantic_clusters(
     k-means re-train, cosine-ranked assignment, in-cluster pairs — in
     unrolled CTEs (`_ivf_cent_ctes`), hash-green."""
     from .similarity import (
-        DIM,
-        N_CENTROIDS,
         _assign_only_kernel,
+        _coarse_codebook,
+        _nonzero_embeddings,
         _norm,
-        trained_codebook,
     )
 
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        # all-zero vector: cosine undefined, exclude (see similarity.py)
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    emb = _nonzero_embeddings(spark, sf)
     # r15: assignment (and the nrm the in-cluster cosines divide by) runs
     # in ONE Arrow pass (`_assign_only_kernel`) instead of the interpreted
     # cosine-argmax + `_norm` CodegenFallback folds per row — bit-equal
     # by the `_assign_ids` construction (pinned in test_pq_training.py).
-    cents_cv = trained_codebook(spark, sf, 1, DIM, N_CENTROIDS)
+    cents_cv = _coarse_codebook(spark, sf)
     if not cents_cv:  # empty corpus: no clusters, no rows — keep the schema
         assigned = emb.select(
             "vec_id", "e", _norm("e").alias("nrm"),

@@ -81,12 +81,110 @@ def _norm(e: str) -> F.Column:
     return F.sqrt(_dot(e, e))
 
 
-def _plane_lit(j: int) -> str:
-    return "array(" + ", ".join(f"{v}D" for v in PLANES[j]) + ")"
-
-
 def _plane_duck(j: int) -> str:
     return "[" + ", ".join(str(v) for v in PLANES[j]) + "]::DOUBLE[]"
+
+
+# ---------------------------------------------------------------------------
+# The retrieval ladder. The top-k builders here (exact cosine, the LSH,
+# IVF, PQ-ADC, rerank, IVF-PQ and binary-Hamming tiers) are compositions
+# of one copy of each search stage: nonzero frame -> centroid probe (IVF)
+# -> ADC score and rank (`_adc_rank`, with the PQ code) or the sign-code
+# Hamming shortlist (`_hamming_rerank`, with the binary tiers) -> exact
+# rank (`_cosine_rank`, `_l2_rerank`), every per-query cut by `_top`.
+# Each stage states its float and scale contract once, on its function;
+# the DuckDB oracles restate every stage independently in SQL.
+# ---------------------------------------------------------------------------
+
+
+def _nonzero(
+    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """The nonzero frame: (vec_id, e) of every vector with a nonzero
+    component, `e` as array<double>. Cosine is undefined for an all-zero
+    vector, so everything routed or ranked by cosine starts here, and so
+    does coarse-quantizer training (`_coarse_codebook`). exists()
+    short-circuits on the first nonzero component; `nrm > 0` would run
+    the 64-term norm fold per row."""
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("e"),
+    ).where(F.expr("exists(e, x -> x <> 0.0d)"))
+
+
+def _nonzero_embeddings(spark: SparkSession, sf: str) -> DataFrame:
+    """`_nonzero` over the `embeddings` table."""
+    return _nonzero(load(spark, sf, "embeddings"))
+
+
+def _probe(q: DataFrame, codebook: list[list[float]], n_probe: int) -> DataFrame:
+    """Centroid probe: each (vec_id, e, nrm) row of `q` joined to its
+    `n_probe` nearest coarse centroids — adds (centroid_id, cv, cvn,
+    c_cos, c_rank). Cosine is the sequential `_dot` over nrm * cvn (cvn
+    per `_centroids_df`), ranked `c_cos DESC, centroid_id ASC`: the
+    oracle's `ranked_c` order, and the order the corpus-side
+    `_assign_ids` kernel keeps for rank 1, so a probed list holds exactly
+    the vectors routed to it. The centroids are a kilobyte broadcast; a
+    probe never shuffles the corpus."""
+    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
+    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
+    return (
+        q.join(F.broadcast(_centroids_df(q.sparkSession, codebook)))
+        .withColumn("c_cos", cos_c)
+        .withColumn("c_rank", F.row_number().over(wa))
+        .where(F.col("c_rank") <= n_probe)
+    )
+
+
+def _top(scored: DataFrame, order: F.Column, rank: str, n: int) -> DataFrame:
+    """Per-query cut of candidate pairs: row_number `rank` over (`order`,
+    neighbor_id ASC) <= n. A total order, so the cut is engine-exact (the
+    oracles rank the same way); Spark runs it as WindowGroupLimit."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id").asc())
+    return scored.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= n)
+
+
+def _cosine_rank(pairs: DataFrame, k: int, *extra: str) -> DataFrame:
+    """Exact-cosine top-k of (query_id, qe, qn, neighbor_id, ce, cn)
+    candidate pairs -> (query_id, neighbor_id, nn_rank, *extra, cosine).
+    cosine = `_dot(qe, ce) / (qn * cn)` with both norms precomputed per
+    vector by `_norm` — the same left-to-right folds as the oracles'
+    list_dot_product (`_COS_DUCK`), so it is bit-equal before the 4-dp
+    round; the cut is `_top` by (cosine DESC, neighbor_id)."""
+    scored = pairs.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
+    return _top(scored, F.col("cosine").desc(), "nn_rank", k).select(
+        "query_id", "neighbor_id", "nn_rank", *extra, F.round("cosine", 4).alias("cosine")
+    )
+
+
+def _l2_rerank(
+    corpus: DataFrame, queries: DataFrame, shortlist: DataFrame, k: int = 3
+) -> DataFrame:
+    """Exact-L2 rerank of a (query_id, neighbor_id, ...) shortlist against
+    the full-precision (vec_id, e) rows of `corpus` and `queries`: top-k
+    (query_id, neighbor_id, nn_rank, l2_dist). l2_dist is the 0-init
+    sequential fold of squared differences in element order — the
+    oracles' list_reduce, bit-equal — rounded to 4 dp. Scale: the
+    shortlist (queries x L rows) is broadcast INTO the corpus scan, so a
+    100 TB corpus is re-read once, filtered by a broadcast-hash join to a
+    few hundred rows, and the exact fold runs on those alone."""
+    shortlist = shortlist.select("query_id", "neighbor_id")
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+    cand = corpus.join(
+        F.broadcast(shortlist), corpus.vec_id == shortlist.neighbor_id, "inner"
+    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
+    l2 = (
+        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
+        " cast(0 as double), (acc, d) -> acc + d)"
+    )
+    rescored = cand.join(F.broadcast(q), "query_id").select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.expr(l2), 4).alias("l2_dist"),
+    )
+    return _top(rescored, F.col("l2_dist").asc(), "nn_rank", k).select(
+        "query_id", "neighbor_id", "nn_rank", "l2_dist"
+    )
 
 
 def cosine_topk(
@@ -118,18 +216,12 @@ def cosine_topk(
 
     q = prep(queries, "query_id", "qe", "qn")
     c = prep(corpus, "neighbor_id", "ce", "cn")
-    scored = (
+    pairs = (
         F.broadcast(q)
         .crossJoin(c)
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_rank(pairs, k)
 
 
 def q_knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
@@ -305,17 +397,11 @@ def ann_lsh_topk(
 
     q = prep(queries, "query_id", "qe", "qn", "qb")
     c = prep(corpus, "neighbor_id", "ce", "cn", "cb")
-    scored = (
+    pairs = (
         F.broadcast(q)
         .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("neighbor_id")))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_rank(pairs, k)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -359,17 +445,11 @@ def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
         F.col("nrm").alias("cn"),
         F.col("bucket").alias("cb"),
     )
-    scored = (
+    pairs = (
         F.broadcast(q)
         .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("neighbor_id")))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_rank(pairs, 3)
 
 
 #: multi-table LSH: L independent tables of K hyperplanes each. Recall
@@ -452,13 +532,7 @@ def q_ann_lsh_multitable_topk(spark: SparkSession, sf: str) -> DataFrame:
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_rank(cand, 3)
 
 
 def q_embedding_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
@@ -530,21 +604,8 @@ N_PROBE = 2
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF-style ANN top-3: coarse quantizer + probed inverted lists.
-
-    TRAINED coarse quantizer: N_CENTROIDS k-means centroids fit by
-    `subspace_kmeans_fit` (n_sub=1 — plain Lloyd over the full vectors,
-    deterministic seeding + 6-dp update rounding), re-trained identically
-    by the oracle's unrolled CTE chain. Corpus assignment is a pure
-    map-side cosine argmax in the shared Arrow kernel (`_assign_ids` via
-    `_assign_only_kernel`, the centroids shipped in its closure): no
-    Exchange touches the corpus, and the kernel keeps the FIRST maximum
-    over ascending centroid ids, NaN ranking highest — identical to the
-    oracle's `ORDER BY cos DESC, centroid_id ASC` rank. The interpreted
-    fold it replaced (pinned bit-equal in tests/test_pq_training.py)
-    evaluated NC x DIM lambda steps per row, CodegenFallback.
-    Each query probes its N_PROBE nearest inverted lists and ranks only
-    those candidates by exact cosine.
+    """IVF-style ANN top-3: coarse quantizer + probed inverted lists
+    (`ann_ivf_topk` over the memoized `_coarse_codebook`).
 
     100 TB posture: centroids are broadcast (kilobytes), assignment is
     embarrassingly parallel (zero corpus shuffle), and the corpus is written
@@ -561,7 +622,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
         emb.where(F.col("vec_id") < 10),
         emb,
         k=3,
-        codebook=trained_codebook(spark, sf, 1, DIM, N_CENTROIDS),
+        codebook=_coarse_codebook(spark, sf),
     )
 
 
@@ -578,48 +639,32 @@ def ann_ivf_topk(
 ) -> DataFrame:
     """IVF ANN top-k of each query over ANY corpus frame: a trained
     coarse quantizer (Lloyd k-means over the full vectors) buckets the
-    corpus into inverted lists via the Arrow assignment kernel (zero
-    corpus shuffle), each query probes its `n_probe` nearest lists, and
-    only those candidates are ranked by exact cosine — (query_id,
-    neighbor_id, nn_rank, cosine). Pass a pre-trained `codebook` to skip
-    training (the fixture shim reuses the memoized one); otherwise
-    `n_centroids` centroids train on a deterministic <=100k-vector hash
-    sample. 100 TB posture in `q_ann_ivf_topk`."""
-    spark = corpus.sparkSession
-
-    def prep(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("e"),
-        ).where(F.expr("exists(e, x -> x <> 0.0d)"))  # all-zero: cosine undefined
-
-    emb = prep(corpus)
-    q = prep(queries).withColumn("nrm", _norm("e"))
+    nonzero corpus into inverted lists via the Arrow assignment kernel
+    (`_assign_only_kernel`, zero corpus shuffle), each query probes its
+    `n_probe` nearest lists (`_probe`), and only those candidates are
+    ranked by exact cosine — (query_id, neighbor_id, nn_rank, cosine).
+    Pass a pre-trained `codebook` to skip training (the fixture shim
+    reuses the memoized one); otherwise `n_centroids` centroids train on a
+    deterministic <=100k-vector hash sample of the nonzero corpus. 100 TB
+    posture in `q_ann_ivf_topk`."""
+    emb = _nonzero(corpus, id_col, vec_col)
+    q = _nonzero(queries, id_col, vec_col).withColumn("nrm", _norm("e"))
     if codebook is None:
         first = emb.select(F.size("e").alias("d")).first()
         dim = first.d if first else 0
         codebook = subspace_kmeans_fit(emb, 1, dim, n_centroids) if dim else []
-    cent = _centroids_df(spark, codebook)
-    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
     id_t = emb.schema["vec_id"].dataType.simpleString()
     assigned = emb.mapInPandas(
         _assign_only_kernel(codebook),
         f"vec_id {id_t}, e array<double>, nrm double, cluster_id bigint",
     ).withColumnRenamed("cluster_id", "centroid_id")
-    probes = (
-        q.join(F.broadcast(cent))
-        .withColumn("c_cos", cos_c)
-        .withColumn("c_rank", F.row_number().over(wa))
-        .where(F.col("c_rank") <= n_probe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qn"),
-            "centroid_id",
-        )
+    probes = _probe(q, codebook, n_probe).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("nrm").alias("qn"),
+        "centroid_id",
     )
-    scored = (
+    pairs = (
         F.broadcast(probes)
         .join(
             assigned.select(
@@ -631,14 +676,8 @@ def ann_ivf_topk(
             "centroid_id",
         )
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", F.round("cosine", 4).alias("cosine"))
-    )
+    return _cosine_rank(pairs, k)
 
 
 def q_embedding_label_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -806,43 +845,57 @@ def subspace_kmeans_fit(
     return cw
 
 
+def _fit_once(key: tuple, base, n_sub: int, sub_dim: int, k: int) -> list[list[float]]:
+    """`subspace_kmeans_fit(base(), ...)` memoized under `key` + geometry."""
+    key = (*key, n_sub, sub_dim, k, PQ_TRAIN_ITERS)
+    if key not in _CW_CACHE:
+        _CW_CACHE[key] = subspace_kmeans_fit(base(), n_sub, sub_dim, k)
+    return _CW_CACHE[key]
+
+
 def trained_codebook(
     spark: SparkSession, sf: str, n_sub: int, sub_dim: int, k: int
 ) -> list[list[float]]:
-    """Memoized trained codebook for one (corpus, geometry) pair."""
-    key = (sf, n_sub, sub_dim, k, PQ_TRAIN_ITERS)
-    if key not in _CW_CACHE:
-        base = load(spark, sf, "embeddings").select(
+    """Memoized codebook trained on the whole `embeddings` corpus, for one
+    PQ geometry (the PQ_M compression and ADC_M search codebooks)."""
+    return _fit_once(
+        (sf,),
+        lambda: load(spark, sf, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-        _CW_CACHE[key] = subspace_kmeans_fit(base, n_sub, sub_dim, k)
-    return _CW_CACHE[key]
+        ),
+        n_sub,
+        sub_dim,
+        k,
+    )
+
+
+def _coarse_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
+    """THE coarse quantizer, memoized: N_CENTROIDS full-vector Lloyd
+    centroids (n_sub=1) trained on the nonzero frame, shared by every IVF
+    tier and SemDeDup. All-zero vectors stay out of training as they stay
+    out of routing: an all-zero seed whose cluster held only zero vectors
+    would stay a zero-norm centroid, whose cosine is 0/0 — Spark's ANSI
+    divide raises where DuckDB ranks the NULL last. The oracle's
+    `_ivf_cent_ctes` trains on the same nonzero base."""
+    return _fit_once(
+        (sf, "coarse"), lambda: _nonzero_embeddings(spark, sf), 1, DIM, N_CENTROIDS
+    )
 
 
 def _codebook_df(spark: SparkSession, cw: list[list[float]]) -> DataFrame:
     """One broadcastable row: `cw` = array of (vec_id=codeword id, e)
-    structs in codeword-id order — the layout every encode/LUT fold here
-    iterates (ascending id, so first-min ties keep the smallest id)."""
+    structs in codeword-id order — the layout the ADC LUT iterates
+    (ascending id, so first-min ties keep the smallest id)."""
     rows = [(j, list(v)) for j, v in enumerate(cw)]
     return spark.createDataFrame(
         [(rows,)], "cw array<struct<vec_id:int,e:array<double>>>"
     )
 
 
-def _pq_codebook(spark: SparkSession, sf: str) -> DataFrame:
-    """Trained PQ codebook (PQ_M x PQ_K, via per-subspace Lloyd) as the
-    one-row broadcast frame the encode/LUT folds consume."""
-    return _codebook_df(spark, trained_codebook(spark, sf, PQ_M, PQ_SUB_DIM, PQ_K))
-
-
-def _adc_codebook(spark: SparkSession, sf: str) -> DataFrame:
-    """Trained search-tier codebook (ADC_M x ADC_K)."""
-    return _codebook_df(spark, trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K))
-
-
 def _centroids_df(spark: SparkSession, cw: list[list[float]]) -> DataFrame:
-    """Codebook rows as a (centroid_id, cv, cvn) frame (typed-empty when
-    the codebook is empty — the empty-corpus contract)."""
+    """Codebook rows as a (centroid_id, cv, cvn) frame, cvn the sequential
+    `_dot` fold + sqrt (typed-empty when the codebook is empty — the
+    empty-corpus contract)."""
     if not cw:
         return spark.createDataFrame(
             [], "centroid_id bigint, cv array<double>"
@@ -850,16 +903,7 @@ def _centroids_df(spark: SparkSession, cw: list[list[float]]) -> DataFrame:
     cent = spark.createDataFrame(
         [(j, list(v)) for j, v in enumerate(cw)], "centroid_id bigint, cv array<double>"
     )
-    return cent.withColumn("cvn", F.sqrt(F.expr(
-        "aggregate(zip_with(cv, cv, (x, y) -> x * y), cast(0 as double), (acc, x) -> acc + x)"
-    )))
-
-
-def _ivf_centroids(spark: SparkSession, sf: str) -> DataFrame:
-    """Trained coarse-quantizer centroids (centroid_id, cv, cvn) — k-means
-    over the full vectors (n_sub=1), replacing the r1-r5 smallest-vec_id
-    stand-in the IVF docstrings promised to retire."""
-    return _centroids_df(spark, trained_codebook(spark, sf, 1, DIM, N_CENTROIDS))
+    return cent.withColumn("cvn", _norm("cv"))
 
 
 def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
@@ -874,7 +918,7 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
     codebook via an unrolled CTE chain — bit-equal, pinned by
     tests/test_pq_training.py. Encoding is the shared vectorized Arrow
     kernel (`_codes_kernel(errs=True)`, r15 — the same seam as
-    `_adc_codes_with_e`): the relational argmin fold is CodegenFallback,
+    `_pq_codes`): the relational argmin fold is CodegenFallback,
     and its getField(k)/getField(d2) pair additionally evaluated the whole
     fold TWICE per subspace (no CSE across HOF projections). The kernel
     computes each subspace's d2 terms in identical element order, keeps
@@ -892,7 +936,7 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     cw = trained_codebook(spark, sf, PQ_M, PQ_SUB_DIM, PQ_K)
-    if not cw:  # empty corpus: no codebook and no rows (see _adc_codes_with_e)
+    if not cw:  # empty corpus: no codebook and no rows (see _no_codes)
         return emb.select(
             "vec_id",
             F.expr("cast(null as bigint)").alias("pq_code"),
@@ -918,19 +962,13 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_ann_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """ANN top-3 over PQ-compressed vectors via asymmetric distance (ADC):
-    queries stay full-precision, the corpus is only its packed 4-bit codes,
-    and each candidate's distance comes from the query's precomputed M x K
-    distance LOOKUP TABLE (the classic ADC formulation) — the search half
-    of IVF-PQ, where a 100 TB corpus scan touches 24 bytes/vector of codes
-    plus a kilobyte-scale broadcast codebook instead of raw embeddings.
-
-    Float discipline: BOTH engines group the summation identically — a
-    sub_dim-term sequential fold per subspace into the LUT, then an M-term
-    fold across subspaces per candidate — so adc_dist is bit-identical to
-    the oracle. Queries (as LUT rows) and codebook are broadcast; the
-    corpus side carries only (vec_id, codes); per-query top-3 executes as
-    WindowGroupLimit.
+    """ANN top-3 over PQ-compressed vectors via asymmetric distance (ADC,
+    `ann_pq_topk`): queries stay full-precision, the corpus is only its
+    codes, and each candidate's distance comes from the query's
+    precomputed M x K distance LOOKUP TABLE — the search half of IVF-PQ,
+    where a 100 TB corpus scan touches 24 bytes/vector of codes plus a
+    kilobyte-scale broadcast codebook instead of raw embeddings. Float
+    discipline and plan shape in `_adc_rank`.
 
     Retrieval quality: the search tier uses the trained ADC_M=32 x ADC_K=64
     geometry (24 B/vector) — raw recall@3 vs exact L2 measured 0.73 at
@@ -944,59 +982,6 @@ def q_ann_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
         k=3,
         n_sub=ADC_M,
         codebook=trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K),
-    )
-
-
-def _adc_lut_sql(n_sub: int, sub_dim: int) -> str:
-    """Per-query ADC distance lookup table: lut[m][k] = squared L2 between
-    the query's m-th subvector and codeword k's m-th subvector. The classic
-    ADC trick — the table is M x K doubles computed ONCE per query, and a
-    candidate's distance is M table lookups, not a DIM-term fold. Requires
-    `qe` and `cw` in scope."""
-    return f"""
-    transform(sequence(0, {n_sub} - 1), m ->
-      transform(cw, c ->
-        {_unrolled_d2("qe", "c.e", f"m * {sub_dim} + 1", sub_dim)}))
-    """
-
-
-def _adc_codes_with_e(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus rows as (vec_id, e, codes) with the ADC-geometry codes from a
-    VECTORIZED Arrow kernel (`mapInPandas` + numpy broadcasting).
-
-    Why Python here: the encode is argmin over ADC_M x ADC_K = 2048
-    codeword distances per row; as a higher-order-function fold that is
-    CodegenFallback — interpreted, ~1.8 ms/row measured at sf0.1 (3.7 s of
-    the old 4.8 s ADC query) — while the numpy kernel does the same flops
-    vectorized in microseconds. This is exactly the declared-Arrow-kernel
-    seam the repo uses wherever JVM expressions can't execute efficiently
-    (cf. dedup_embedding_cosine_vectorized), and the production shape: PQ
-    encode is a vectorized ingest-time kernel in every real ANN system.
-
-    Float discipline: d2 accumulates term-by-term in subvector-element
-    order ((x1-c1)^2 + (x2-c2)^2, elementwise numpy ops — the identical
-    IEEE operation sequence as the SQL fold and the DuckDB oracle), and
-    the argmin keeps the first minimum — so the codes are bit-equal to the
-    relational encode fold (pinned by
-    test_pq_training.py::test_arrow_codes_match_relational). The python
-    node also materializes codes, so no repartition collapse-barrier is
-    needed above the pair join."""
-    cw = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    if not cw:  # empty corpus: no codebook, no rows — keep the contract
-        # schema. The empty codes column must NOT be a foldable literal:
-        # ANSI constant folding would evaluate element_at(codes, 1) in the
-        # downstream dist expression at PLAN time and raise even with zero
-        # rows, so derive it from `e` (non-foldable, still always empty).
-        return emb.select(
-            "vec_id", "e",
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
-    return emb.mapInPandas(
-        _codes_kernel(cw, ["vec_id", "e"]),
-        "vec_id bigint, e array<double>, codes array<int>",
     )
 
 
@@ -1189,6 +1174,19 @@ def _assign_only_kernel(cents_cv: list[list[float]], residual: bool = False):
     return assign
 
 
+def _adc_lut_sql(n_sub: int, sub_dim: int) -> str:
+    """Per-query ADC distance lookup table: lut[m][k] = squared L2 between
+    the query's m-th subvector and codeword k's m-th subvector. The classic
+    ADC trick — the table is M x K doubles computed ONCE per query, and a
+    candidate's distance is M table lookups, not a DIM-term fold. Requires
+    `qe` and `cw` in scope."""
+    return f"""
+    transform(sequence(0, {n_sub} - 1), m ->
+      transform(cw, c ->
+        {_unrolled_d2("qe", "c.e", f"m * {sub_dim} + 1", sub_dim)}))
+    """
+
+
 def _adc_dist_sql(n_sub: int) -> str:
     """Candidate distance = sum of the M per-subspace LUT entries its codes
     select (requires `lut` and `codes` in scope). Unrolled left-to-right —
@@ -1199,57 +1197,90 @@ def _adc_dist_sql(n_sub: int) -> str:
     )
 
 
-def _adc_scored(spark: SparkSession, sf: str) -> DataFrame:
-    """(query_id, neighbor_id, adc_dist) for every query x corpus pair —
-    the shared ADC scoring stage of `ann_pq_adc_topk` and the rerank tier.
-
-    LUT form: each query precomputes its M x K distance table against the
-    broadcast codebook (one row per query), so the per-candidate work is M
-    integer-indexed lookups — no v-hat reconstruction, no DIM-term fold per
-    pair. Summation is grouped per subspace then across subspaces on BOTH
-    engines, keeping adc_dist bit-identical to the oracle."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cb = _adc_codebook(spark, sf)
-    # vectorized Arrow encode; the python node materializes codes, so the
-    # encode can never be collapsed into (and re-run per pair of) the join
-    codes = _adc_codes_with_e(spark, sf).select("vec_id", "codes")
-    q_lut = (
-        emb.where(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        .crossJoin(F.broadcast(cb))
-        .select("query_id", F.expr(_adc_lut_sql(ADC_M, ADC_SUB)).alias("lut"))
-    )
-    return (
-        codes.crossJoin(F.broadcast(q_lut))
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(ADC_M)), 4).alias("adc_dist"),
-        )
-    )
+def _no_codes() -> F.Column:
+    """The `codes` column of an empty corpus (no codebook, no rows). It
+    must NOT be a foldable literal: ANSI constant folding would evaluate
+    element_at(codes, 1) in the downstream ADC sum at PLAN time and raise
+    even with zero rows, so it is derived from `e` (non-foldable, always
+    empty)."""
+    return F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes")
 
 
 def _pq_codes(
     c: DataFrame, codebook: list[list[float]], n_sub: int, sub_dim: int
 ) -> DataFrame:
-    """(vec_id, e, codes) for ANY standardized (vec_id, e) frame — the
-    vectorized Arrow encode (`_codes_kernel`); the empty-codebook branch
-    keeps the contract schema with a NON-FOLDABLE empty codes column
-    (the `_adc_codes_with_e` constant-folding note)."""
+    """(vec_id, e, codes) for ANY (vec_id, e) frame — the vectorized Arrow
+    encode (`_codes_kernel`, float contract on `_encode`). Why Python: the
+    encode is an argmin over n_sub x K codeword distances per row, which a
+    higher-order-function fold runs interpreted (CodegenFallback, ~1.8
+    ms/row at sf0.1); numpy does the same flops vectorized. The python
+    node also materializes codes, so the encode is never collapsed into
+    (and re-run per pair of) the ADC join."""
     if not codebook:
-        return c.select(
-            "vec_id",
-            "e",
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
+        return c.select("vec_id", "e", _no_codes())
     id_t = c.schema["vec_id"].dataType.simpleString()
     return c.mapInPandas(
         _codes_kernel(codebook, ["vec_id", "e"], n_sub, sub_dim),
         f"vec_id {id_t}, e array<double>, codes array<int>",
     )
+
+
+def _ivf_codes(
+    spark: SparkSession, sf: str, codebook: list[list[float]], residual: bool = False
+) -> DataFrame:
+    """(vec_id, centroid_id, codes) of the nonzero corpus: coarse
+    assignment against `_coarse_codebook` (+ the residual e - cv when
+    `residual`) and the ADC-geometry encode fused in ONE Arrow pass
+    (`_codes_assign_kernel`, bit-equal to the relational folds by the
+    `_assign_ids`/`_encode` construction) — zero corpus shuffle."""
+    nz = _nonzero_embeddings(spark, sf)
+    if not codebook:
+        return nz.select("vec_id", F.col("vec_id").alias("centroid_id"), _no_codes())
+    return nz.mapInPandas(
+        _codes_assign_kernel(codebook, _coarse_codebook(spark, sf), residual=residual),
+        "vec_id bigint, centroid_id bigint, codes array<int>",
+    )
+
+
+def _adc_rank(
+    q: DataFrame,
+    codes: DataFrame,
+    codebook: list[list[float]],
+    n_sub: int,
+    sub_dim: int,
+    rank: str,
+    n: int,
+    on: str | None = None,
+) -> DataFrame:
+    """ADC score and rank: each (query_id, qe[, on]) row of `q` computes its
+    n_sub x K distance LUT against the broadcast codebook, every candidate
+    row of `codes` — all of (vec_id, e, codes) flat, or the (vec_id,
+    `on`, codes) rows sharing the query row's `on` list — scores
+    adc_dist = the sum of the n_sub LUT entries its codes select, rounded
+    to 4 dp, and `_top` keeps each query's n best in `rank` (top-k, or the
+    PQ_RERANK_L rerank shortlist). Columns: (query_id, neighbor_id,
+    adc_dist, rank).
+
+    Float discipline: BOTH engines group the summation identically — a
+    sub_dim-term sequential fold per subspace into the LUT, then an
+    n_sub-term left-to-right sum per candidate — so adc_dist is
+    bit-identical to the oracle. Plan shape: the LUT rows are the
+    broadcast side; the corpus side carries only (vec_id, codes), no
+    v-hat reconstruction and no DIM-term fold per pair."""
+    cb = _codebook_df(q.sparkSession, codebook)
+    lut = q.crossJoin(F.broadcast(cb)).select(
+        "query_id", *([on] if on else []), F.expr(_adc_lut_sql(n_sub, sub_dim)).alias("lut")
+    )
+    if on:
+        pairs = F.broadcast(lut).join(codes, on)
+    else:
+        pairs = codes.select("vec_id", "codes").crossJoin(F.broadcast(lut))
+    scored = pairs.where(F.col("query_id") != F.col("vec_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(F.expr(_adc_dist_sql(n_sub)), 4).alias("adc_dist"),
+    )
+    return _top(scored, F.col("adc_dist").asc(), rank, n)
 
 
 def ann_pq_topk(
@@ -1264,15 +1295,12 @@ def ann_pq_topk(
     codebook: list[list[float]] | None = None,
 ) -> DataFrame:
     """PQ-ADC ANN top-k of each query over ANY corpus frame — the search
-    half of IVF-PQ: the corpus is scanned as packed subspace codes (an
-    Arrow-vectorized encode), each query precomputes its n_sub x
-    n_codewords distance LUT against the broadcast codebook, and a
-    candidate's distance is n_sub table lookups — (query_id, neighbor_id,
-    nn_rank, adc_dist; squared-L2 semantics, ascending). Defaults to the
-    2-dims-per-subspace ADC geometry; pass a pre-trained `codebook` to
-    skip training (the fixture shim reuses the memoized one). Float
-    discipline and 100 TB posture in `q_ann_pq_adc_topk`."""
-    spark = corpus.sparkSession
+    half of IVF-PQ: the corpus is scanned as packed subspace codes
+    (`_pq_codes`) and ranked by asymmetric distance (`_adc_rank`) —
+    (query_id, neighbor_id, nn_rank, adc_dist; squared-L2 semantics,
+    ascending). Defaults to the 2-dims-per-subspace ADC geometry; pass a
+    pre-trained `codebook` to skip training (the fixture shim reuses the
+    memoized one)."""
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("e"),
@@ -1296,27 +1324,9 @@ def ann_pq_topk(
         codebook = subspace_kmeans_fit(c, n_sub, sub_dim, n_codewords)
     else:
         sub_dim, codebook = 1, []
-    cb = _codebook_df(spark, codebook)
-    codes = _pq_codes(c, codebook, n_sub, sub_dim).select("vec_id", "codes")
-    q_lut = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", F.expr(_adc_lut_sql(n_sub, sub_dim)).alias("lut")
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(q_lut))
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(n_sub)), 4).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= k)
-        .select("query_id", "neighbor_id", "nn_rank", "adc_dist")
+    codes = _pq_codes(c, codebook, n_sub, sub_dim)
+    return _adc_rank(q, codes, codebook, n_sub, sub_dim, "nn_rank", k).select(
+        "query_id", "neighbor_id", "nn_rank", "adc_dist"
     )
 
 
@@ -1327,174 +1337,74 @@ PQ_RERANK_L = 32
 
 def q_ann_pq_adc_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Two-stage PQ retrieval, the production IVF-PQ search shape: ADC over
-    packed 4-bit codes shortlists PQ_RERANK_L candidates per query, then ONLY
-    those candidates are re-scored against their full-precision vectors
-    (exact squared L2) and the top-3 by exact distance returned.
-
-    Scale shape: stage 1 is the same codes-only (24 B/vector) corpus scan as
-    `ann_pq_adc_topk`; stage 2 touches `n_queries x PQ_RERANK_L` rows — the
-    shortlist is broadcast against the corpus scan (never the reverse), so a
-    100 TB corpus is re-read once, filtered by a broadcast-hash semi-join to
-    a few hundred rows, and the exact fold runs on those alone.
+    the codes shortlists PQ_RERANK_L candidates per query (`_adc_rank`),
+    then ONLY those candidates are re-scored against their full-precision
+    vectors (`_l2_rerank`, exact squared L2) and the top-3 returned.
 
     Quality: recall@3 vs exact L2 measured 0.97-1.0 on these fixtures
     (tests/test_ann_recall.py, floor 0.9) — vs 0.73 for raw ADC. The
     codebook's distortion only has to keep the true neighbors inside the
     top-32 shortlist, not rank them."""
-    scored = _adc_scored(spark, sf)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= PQ_RERANK_L)
-        .select("query_id", "neighbor_id")
-    )
     emb = load(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
+    queries = emb.where(F.col("vec_id") < 10)
+    cw = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
+    shortlist = _adc_rank(
+        queries.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe")),
+        _pq_codes(emb, cw, ADC_M, ADC_SUB),
+        cw,
+        ADC_M,
+        ADC_SUB,
+        "adc_rank",
+        PQ_RERANK_L,
     )
-    # shortlist is tiny (queries x L): broadcast it INTO the corpus scan so
-    # full-precision vectors are only materialized for shortlisted rows.
-    cand = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
-    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
-    l2 = (
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, d) -> acc + d)"
+    return _l2_rerank(emb, queries, shortlist)
+
+
+def _ivfpq_topk(
+    spark: SparkSession, sf: str, codebook: list[list[float]], residual: bool
+) -> DataFrame:
+    """The IVF-PQ ladder both IVF-PQ tiers share: `_probe` routes each
+    query to its N_PROBE lists, `_adc_rank` scores only those lists'
+    codes (`_ivf_codes`) and keeps PQ_RERANK_L, `_l2_rerank` returns the
+    top-3. With `residual`, each (query, probed list) row's LUT is built
+    from the query's residual against THAT list's centroid."""
+    emb = _nonzero_embeddings(spark, sf).withColumn("nrm", _norm("e"))
+    queries = emb.where(F.col("vec_id") < 10)
+    qe = F.zip_with("e", "cv", lambda x, y: x - y) if residual else F.col("e")
+    probes = _probe(queries, _coarse_codebook(spark, sf), N_PROBE).select(
+        F.col("vec_id").alias("query_id"), qe.alias("qe"), "centroid_id"
     )
-    rescored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.expr(l2), 4).alias("l2_dist"),
+    shortlist = _adc_rank(
+        probes,
+        _ivf_codes(spark, sf, codebook, residual),
+        codebook,
+        ADC_M,
+        ADC_SUB,
+        "adc_rank",
+        PQ_RERANK_L,
+        on="centroid_id",
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", "l2_dist")
-    )
+    return _l2_rerank(emb, queries, shortlist)
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """The full IVF-PQ retrieval ladder in one query — THE production ANN
-    shape at 100 TB: (1) coarse-quantizer routing confines each query to its
-    N_PROBE nearest inverted lists; (2) within those lists candidates are
-    scored by asymmetric distance against trained 24-byte PQ codes; (3) the ADC
-    top-PQ_RERANK_L shortlist is re-scored with exact L2 on full-precision
-    vectors and the top-3 returned.
+    shape at 100 TB (`_ivfpq_topk`): (1) coarse-quantizer routing confines
+    each query to its N_PROBE nearest inverted lists; (2) within those
+    lists candidates are scored by asymmetric distance against trained
+    24-byte PQ codes; (3) the ADC top-PQ_RERANK_L shortlist is re-scored
+    with exact L2 on full-precision vectors and the top-3 returned.
 
-    Scale shape, stage by stage: centroid assignment AND PQ encoding happen
-    in ONE zero-shuffle map pass (both the centroid array and the codebook
-    are one-row broadcasts), materialized behind the same repartition
-    barrier as `_adc_scored`; each (query, probed-list) row carries the
-    query's M x K distance LUT, so the probe join touches only
-    `n/NC * N_PROBE` candidate rows per query at M lookups each (partition
-    pruning on a real lake laid out by centroid_id); stage 3 touches
-    `n_queries x PQ_RERANK_L` full-precision rows via a broadcast shortlist
-    semi-join. Routing uses cosine (the IVF convention here), candidate
-    scoring and rerank use L2 — each stage mirrored exactly in the DuckDB
-    oracle."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        # all-zero vector: cosine undefined, exclude (see q_ann_ivf_topk)
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    cent = _ivf_centroids(spark, sf)
-    cb = _adc_codebook(spark, sf)
-    # one map pass over the corpus: coarse assignment AND PQ encode both
-    # run inside the Arrow kernel (r15). The r14 form kept the argmax
-    # JVM-side fearing numpy's pairwise dot sums, but the kernel's
-    # explicit element-order accumulation (`_assign_ids`) IS the
-    # sequential cosine fold — bit-equal, pinned in test_pq_training.py —
-    # while the JVM fold was CodegenFallback (~0.5 s/pass interpreted at
-    # sf0.1). The python node materializes codes — no barrier needed.
-    cw_adc = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
-    nz = _nonzero_embeddings(spark, sf)
-    if not cw_adc:  # empty corpus (see _adc_codes_with_e: non-foldable empty)
-        corpus = nz.select(
-            "vec_id",
-            F.col("vec_id").alias("centroid_id"),
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
-    else:
-        corpus = nz.mapInPandas(
-            _codes_assign_kernel(
-                cw_adc, trained_codebook(spark, sf, 1, DIM, N_CENTROIDS)
-            ),
-            "vec_id bigint, centroid_id bigint, codes array<int>",
-        )
-    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
-    probes = (
-        emb.where(F.col("vec_id") < 10)
-        .join(F.broadcast(cent))
-        .withColumn("c_cos", cos_c)
-        .withColumn("c_rank", F.row_number().over(wa))
-        .where(F.col("c_rank") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            "centroid_id",
-        )
-    )
-    # per-(query, probed-list) rows carry the query's M x K distance LUT;
-    # each candidate costs M lookups (see _adc_scored)
-    probes_lut = probes.crossJoin(F.broadcast(cb)).select(
-        "query_id", "centroid_id", F.expr(_adc_lut_sql(ADC_M, ADC_SUB)).alias("lut")
-    )
-    scored = (
-        F.broadcast(probes_lut)
-        .join(corpus, "centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(ADC_M)), 4).alias("adc_dist"),
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= PQ_RERANK_L)
-        .select("query_id", "neighbor_id")
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    cand = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
-    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
-    l2 = (
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, d) -> acc + d)"
-    )
-    rescored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.expr(l2), 4).alias("l2_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", "l2_dist")
-    )
-
-
-def _nonzero_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    """(vec_id, e) of every nonzero embedding — the corpus the coarse
-    quantizer routes (all-zero vectors: cosine undefined, excluded)."""
-    return (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
+    Scale shape: assignment AND encoding are one zero-shuffle map pass;
+    the probe join touches only `n/NC * N_PROBE` candidate rows per query
+    at M lookups each (partition pruning on a real lake laid out by
+    centroid_id); the rerank touches `n_queries x PQ_RERANK_L`
+    full-precision rows. Routing uses cosine (the IVF convention here),
+    candidate scoring and rerank use L2."""
+    return _ivfpq_topk(
+        spark, sf, trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K), residual=False
     )
 
 
@@ -1507,48 +1417,17 @@ def _residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
     (`_assign_only_kernel(residual=True)`; the subtract is one exact IEEE
     op per element) — zero corpus shuffle."""
     return _nonzero_embeddings(spark, sf).mapInPandas(
-        _assign_only_kernel(
-            trained_codebook(spark, sf, 1, DIM, N_CENTROIDS), residual=True
-        ),
+        _assign_only_kernel(_coarse_codebook(spark, sf), residual=True),
         "vec_id bigint, e array<double>, nrm double, cluster_id bigint",
     ).select("vec_id", "e")
 
 
 def _residual_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
     """ADC-geometry codebook trained on the RESIDUALS (chained training:
-    coarse quantizer first, then per-subspace Lloyd over e - centroid).
-    Memoized like every other codebook here."""
-    key = (sf, "resid", ADC_M, ADC_SUB, ADC_K, PQ_TRAIN_ITERS)
-    if key not in _CW_CACHE:
-        _CW_CACHE[key] = subspace_kmeans_fit(
-            _residual_corpus(spark, sf), ADC_M, ADC_SUB, ADC_K
-        )
-    return _CW_CACHE[key]
-
-
-def _residual_codes(spark: SparkSession, sf: str) -> DataFrame:
-    """(vec_id, centroid_id, codes) — coarse assignment, residual
-    subtraction AND the residual-codebook encode fused into ONE Arrow pass
-    (`_codes_assign_kernel(residual=True)`); every stage is bit-equal to
-    the relational folds by the `_assign_ids`/`_encode` construction
-    (pinned in tests/test_pq_training.py). Training
-    (`_residual_codebook`) reads the same kernel's residuals
-    (`_residual_corpus`)."""
-    cw = _residual_codebook(spark, sf)
-    nz = _nonzero_embeddings(spark, sf)
-    if not cw:  # empty corpus (see _adc_codes_with_e: non-foldable empty)
-        return nz.select(
-            "vec_id",
-            F.col("vec_id").alias("centroid_id"),
-            F.expr("transform(slice(e, 1, 0), x -> cast(x as int))").alias("codes"),
-        )
-    return nz.mapInPandas(
-        _codes_assign_kernel(
-            cw,
-            trained_codebook(spark, sf, 1, DIM, N_CENTROIDS),
-            residual=True,
-        ),
-        "vec_id bigint, centroid_id bigint, codes array<int>",
+    coarse quantizer first, then per-subspace Lloyd over e - centroid),
+    memoized."""
+    return _fit_once(
+        (sf, "resid"), lambda: _residual_corpus(spark, sf), ADC_M, ADC_SUB, ADC_K
     )
 
 
@@ -1559,84 +1438,15 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf: str) -> DataFrame:
     query's ADC lookup table is built from ITS residual against every
     probed list's centroid (qe - c_probe), so the asymmetric distance
     approximates ||(qe - c) - (e - c)||² = ||qe - e||² with the lower
-    residual variance doing the work. Stage 3 reranks the ADC shortlist
-    with exact L2 on the ORIGINAL full-precision vectors, as before.
+    residual variance doing the work. The rerank uses the ORIGINAL
+    full-precision vectors. Scale shape as `ann_ivfpq_topk`; the residual
+    subtraction runs inside the same kernel.
 
     Chained training, mirrored end-to-end in the oracle: coarse k-means →
     assignment → residuals → per-subspace k-means on residuals — the
     DuckDB oracle re-runs the entire chain in unrolled MATERIALIZED CTEs
-    and every stage's floats are bit-equal (same folds, rounding, ties).
-
-    Scale shape: identical to `ann_ivfpq_topk` (assignment + encode in
-    broadcast-only map passes, Arrow encode node materializes codes, probe
-    join touches n/NC * N_PROBE candidates, rerank via broadcast shortlist
-    semi-join); the residual subtraction runs inside the same kernel."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
-    cent = _ivf_centroids(spark, sf)
-    cb = _codebook_df(spark, _residual_codebook(spark, sf))
-    corpus = _residual_codes(spark, sf)
-    cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
-    wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
-    probes = (
-        emb.where(F.col("vec_id") < 10)
-        .join(F.broadcast(cent))
-        .withColumn("c_cos", cos_c)
-        .withColumn("c_rank", F.row_number().over(wa))
-        .where(F.col("c_rank") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            # the query's residual AGAINST THE PROBED LIST's centroid
-            F.zip_with("e", "cv", lambda x, y: x - y).alias("qe"),
-            "centroid_id",
-        )
-    )
-    probes_lut = probes.crossJoin(F.broadcast(cb)).select(
-        "query_id", "centroid_id", F.expr(_adc_lut_sql(ADC_M, ADC_SUB)).alias("lut")
-    )
-    scored = (
-        F.broadcast(probes_lut)
-        .join(corpus, "centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.expr(_adc_dist_sql(ADC_M)), 4).alias("adc_dist"),
-        )
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        scored.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= PQ_RERANK_L)
-        .select("query_id", "neighbor_id")
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
-    )
-    cand = emb.join(
-        F.broadcast(shortlist), emb.vec_id == shortlist.neighbor_id, "inner"
-    ).select("query_id", "neighbor_id", F.col("e").alias("ce"))
-    l2 = (
-        "aggregate(zip_with(qe, ce, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, d) -> acc + d)"
-    )
-    rescored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(F.expr(l2), 4).alias("l2_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2_dist").asc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("nn_rank", F.row_number().over(w))
-        .where(F.col("nn_rank") <= 3)
-        .select("query_id", "neighbor_id", "nn_rank", "l2_dist")
-    )
+    and every stage's floats are bit-equal (same folds, rounding, ties)."""
+    return _ivfpq_topk(spark, sf, _residual_codebook(spark, sf), residual=True)
 
 
 def q_embedding_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
@@ -1697,10 +1507,14 @@ def _mt_bucket_duck(t: int, e: str) -> str:
 
 def _ivf_cent_ctes() -> str:
     """cent + ranked_c over the TRAINED coarse quantizer (requires `base`):
-    k-means (n_sub=1) re-trained by the unrolled CTE chain, then the same
-    cosine-ranked routing as before."""
+    k-means (n_sub=1) re-trained by the unrolled CTE chain over the
+    nonzero rows of `base` (`_coarse_codebook`), then every `base` row
+    ranks the centroids by cosine (NULL, ranked last, for a zero row)."""
     return f"""
-        {_train_ctes(1, DIM, N_CENTROIDS, prefix="iv_")},
+        iv_nz AS (
+            SELECT vec_id, e FROM base WHERE len(list_filter(e, x -> x <> 0)) > 0
+        ),
+        {_train_ctes(1, DIM, N_CENTROIDS, prefix="iv_", base="iv_nz")},
         cent AS (
             SELECT k::BIGINT AS centroid_id, cvec AS cv FROM iv_cwk
         ), ranked_c AS (
@@ -2060,74 +1874,67 @@ def _binq_word(e: str, off: int) -> F.Column:
     )
 
 
-def q_ann_binary_hamming_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Binary-quantization retrieval ladder (sign(x) 1-bit codes — the
-    LSH-for-cosine hashing of Charikar 2002 with coordinate planes, as
-    deployed in binary-quantized vector stores): each 64-float vector
-    compresses 32x into two 32-bit sign words; candidates rank by Hamming
-    distance (bit_count of xor — a 4-instruction distance), and the
-    Hamming top-BINQ_SHORTLIST per query is re-scored with exact cosine
-    for the final top-BINQ_TOPK. Complements the PQ/ADC ladder: PQ needs
-    a trained codebook, sign bits need none, so binary codes are the
-    cold-start / training-free compression tier.
-
-    Scale shape: the Hamming scan reads 16 BYTES per corpus vector instead
-    of 512 (the 32x memory-bandwidth win is the whole point at 100 TB);
-    probes broadcast; the exact rerank touches only shortlist rows. Both
-    rank boundaries are total orders ((hamming, neighbor_id), then
-    (cosine, neighbor_id)) so the cut is engine-exact."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select(
-            "vec_id",
-            "e",
-            _norm("e").alias("nrm"),
-            _binq_word("e", 0).alias("w0"),
-            _binq_word("e", 32).alias("w1"),
-        )
+def _sign_codes(spark: SparkSession, sf: str) -> DataFrame:
+    """The sign-code frame of the binary tiers: (vec_id, e, nrm, w0, w1)
+    over the nonzero frame — two `_binq_word` sign words per 64-dim
+    vector, plus the norm the cosine rerank divides by."""
+    return _nonzero_embeddings(spark, sf).select(
+        "vec_id",
+        "e",
+        _norm("e").alias("nrm"),
+        _binq_word("e", 0).alias("w0"),
+        _binq_word("e", 32).alias("w1"),
     )
-    q = emb.where(F.col("vec_id") < 10).select(
+
+
+def _hamming_rerank(codes: DataFrame, pairs, *extra: str) -> DataFrame:
+    """Hamming shortlist -> cosine rerank, the tail of every binary tier.
+    `pairs(q, c)` yields the candidate pairs of the query side (query_id,
+    qe, qn, q0, q1: the vec_id < 10 rows of `codes`) and the corpus side
+    (neighbor_id, ce, cn, c0, c1); each pair's Hamming distance is
+    bit_count of the xor'ed words (a 4-instruction distance over 16 bytes
+    per vector), `_top` keeps the BINQ_SHORTLIST nearest, and only those
+    are re-scored by exact cosine for the final top-BINQ_TOPK. Both cuts
+    are total orders ((hamming, neighbor_id), then (cosine,
+    neighbor_id)), so they are engine-exact. `extra` columns of the pairs
+    ride along to the output."""
+    q = codes.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
         F.col("nrm").alias("qn"),
         F.col("w0").alias("q0"),
         F.col("w1").alias("q1"),
     )
-    c = emb.select(
+    c = codes.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("e").alias("ce"),
         F.col("nrm").alias("cn"),
         F.col("w0").alias("c0"),
         F.col("w1").alias("c1"),
     )
-    ham = (
-        F.broadcast(q)
+    ham = pairs(q, c).withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
+    short = _top(ham, F.col("hamming").asc(), "h_rank", BINQ_SHORTLIST)
+    return _cosine_rank(short, BINQ_TOPK, "hamming", *extra)
+
+
+def q_ann_binary_hamming_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """Binary-quantization retrieval ladder (sign(x) 1-bit codes — the
+    LSH-for-cosine hashing of Charikar 2002 with coordinate planes, as
+    deployed in binary-quantized vector stores): each 64-float vector
+    compresses 32x into two 32-bit sign words (`_sign_codes`), and every
+    corpus code is a candidate of the Hamming shortlist and cosine rerank
+    (`_hamming_rerank`). Complements the PQ/ADC ladder: PQ needs a trained
+    codebook, sign bits need none, so binary codes are the cold-start /
+    training-free compression tier.
+
+    Scale shape: the Hamming scan reads 16 BYTES per corpus vector instead
+    of 512 (the 32x memory-bandwidth win is the whole point at 100 TB);
+    probes broadcast; the exact rerank touches only shortlist rows."""
+    return _hamming_rerank(
+        _sign_codes(spark, sf),
+        lambda q, c: F.broadcast(q)
         .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    short = ham.withColumn("h_rank", F.row_number().over(w_short)).where(
-        F.col("h_rank") <= BINQ_SHORTLIST
-    )
-    rer = short.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w_fin))
-        .where(F.col("nn_rank") <= BINQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            "hamming",
-            F.round("cosine", 4).alias("cosine"),
-        )
+        .where(F.col("query_id") != F.col("neighbor_id")),
     )
 
 
@@ -2139,50 +1946,18 @@ _BINQ_BANDS = 8
 _BINQ_BAND_BITS = 8
 
 
-def q_ann_binary_hamming_banded_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Banded binary-Hamming retrieval (r9): the sublinear tier on top of
-    `ann_binary_hamming_topk`. The full-scan variant still touches every
-    corpus code per query (16 bytes each — cheap, but LINEAR); this one
-    probes only vectors agreeing exactly on at least one of the 8
-    eight-bit bands of the sign code, turning candidate generation into a
-    (band, value) equi-join against a band index — each corpus vector
-    posts 8 keys into 256-way buckets, so a probe touches ~8/256 of the
-    corpus in expectation, the same access-path shape the text dedup path
-    uses (Manku pigeonhole). Band agreement is LOSSLESS for neighbors
-    within Hamming 7 of the query and recall-approximate beyond — the
-    trade the shortlist's exact-cosine rerank is there to absorb.
+def _band_val(b: int) -> F.Column:
+    """Band b of the sign code: bits [8b, 8b+8) of (w0, w1), dims 8b..8b+7."""
+    word = F.col("w0") if b < _BINQ_BANDS // 2 else F.col("w1")
+    shift = (b % (_BINQ_BANDS // 2)) * _BINQ_BAND_BITS
+    return F.shiftright(word, shift).bitwiseAND(F.lit((1 << _BINQ_BAND_BITS) - 1))
 
-    Determinism: candidate membership, n_bands_hit, Hamming, and both
-    rank boundaries are integer/total-order exact; the ORACLE runs the
-    exhaustive pairwise join with the identical band-agreement predicate,
-    so hash equality proves the banded index reproduces the exhaustive
-    semantics (the ppjoin discipline).
 
-    Scale shape: band rows carry only (vec_id, band, val) — vectors never
-    transit the band join; the shortlist joins back to the packed frame
-    by id (broadcast: candidate set is per-query bounded); the exact
-    rerank touches only shortlist rows."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select(
-            "vec_id",
-            "e",
-            _norm("e").alias("nrm"),
-            _binq_word("e", 0).alias("w0"),
-            _binq_word("e", 32).alias("w1"),
-        )
-    )
-
-    def _band_val(b: int) -> F.Column:
-        word = F.col("w0") if b < _BINQ_BANDS // 2 else F.col("w1")
-        shift = (b % (_BINQ_BANDS // 2)) * _BINQ_BAND_BITS
-        return F.shiftright(word, shift).bitwiseAND(
-            F.lit((1 << _BINQ_BAND_BITS) - 1)
-        )
-
-    bands = emb.select(
+def _band_index(codes: DataFrame) -> DataFrame:
+    """The band index: one exact (vec_id, band, val) key per band per
+    sign-code row — each vector posts 8 keys into 256-way buckets, and
+    vectors never transit the band join."""
+    return codes.select(
         "vec_id",
         F.explode(
             F.array(
@@ -2193,57 +1968,50 @@ def q_ann_binary_hamming_banded_topk(spark: SparkSession, sf: str) -> DataFrame:
             )
         ).alias("bv"),
     ).select("vec_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    qb = bands.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "band", "val"
-    )
+
+
+def _band_rerank(codes: DataFrame, qb: DataFrame, hits: str) -> DataFrame:
+    """Banded candidates -> `_hamming_rerank`: the (query_id, band, val)
+    probe keys `qb` equi-join the corpus `_band_index`; a candidate is any
+    other vector matching some key, `hits` counts its matched keys, and
+    the shortlist joins back to the sign codes by id (broadcast: the
+    candidate set is per-query bounded)."""
     cand = (
         F.broadcast(qb)
-        .join(bands, ["band", "val"])
+        .join(_band_index(codes), ["band", "val"])
         .where(F.col("query_id") != F.col("vec_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.count("*").alias("n_bands_hit"))
+        .agg(F.count("*").alias(hits))
     )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
+    return _hamming_rerank(
+        codes,
+        lambda q, c: cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id"),
+        hits,
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        F.col("w0").alias("c0"),
-        F.col("w1").alias("c1"),
+
+
+def q_ann_binary_hamming_banded_topk(spark: SparkSession, sf: str) -> DataFrame:
+    """Banded binary-Hamming retrieval (r9): the sublinear tier on top of
+    `ann_binary_hamming_topk`. The full-scan variant still touches every
+    corpus code per query (16 bytes each — cheap, but LINEAR); this one
+    probes only vectors agreeing exactly on at least one of the 8
+    eight-bit bands of the sign code (`_band_rerank`), so a probe touches
+    ~8/256 of the corpus in expectation, the same access-path shape the
+    text dedup path uses (Manku pigeonhole). Band agreement is LOSSLESS
+    for neighbors within Hamming 7 of the query and recall-approximate
+    beyond — the trade the shortlist's exact-cosine rerank is there to
+    absorb.
+
+    Determinism: candidate membership, n_bands_hit, Hamming, and both
+    rank boundaries are integer/total-order exact; the ORACLE runs the
+    exhaustive pairwise join with the identical band-agreement predicate,
+    so hash equality proves the banded index reproduces the exhaustive
+    semantics (the ppjoin discipline)."""
+    codes = _sign_codes(spark, sf)
+    qb = _band_index(codes).where(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "band", "val"
     )
-    ham = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    short = ham.withColumn("h_rank", F.row_number().over(w_short)).where(
-        F.col("h_rank") <= BINQ_SHORTLIST
-    )
-    rer = short.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w_fin))
-        .where(F.col("nn_rank") <= BINQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            "hamming",
-            "n_bands_hit",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _band_rerank(codes, qb, "n_bands_hit")
 
 
 def q_ann_binary_hamming_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -2266,42 +2034,11 @@ def q_ann_binary_hamming_multiprobe_topk(spark: SparkSession, sf: str) -> DataFr
     identical per-band bit_count(xor) <= 1 predicate, so hash equality
     proves the 72-key probe expansion reproduces the near-band semantics
     exactly (the banded tier's discipline, one Hamming ring wider)."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-        .select(
-            "vec_id",
-            "e",
-            _norm("e").alias("nrm"),
-            _binq_word("e", 0).alias("w0"),
-            _binq_word("e", 32).alias("w1"),
-        )
-    )
-
-    def _band_val(b: int) -> F.Column:
-        word = F.col("w0") if b < _BINQ_BANDS // 2 else F.col("w1")
-        shift = (b % (_BINQ_BANDS // 2)) * _BINQ_BAND_BITS
-        return F.shiftright(word, shift).bitwiseAND(
-            F.lit((1 << _BINQ_BAND_BITS) - 1)
-        )
-
-    # corpus index: one exact (band, value) key per band per vector
-    bands = emb.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), _band_val(b).alias("val"))
-                    for b in range(_BINQ_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("vec_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
+    codes = _sign_codes(spark, sf)
     # query probes: exact value + the 8 one-bit flips per band. A corpus
     # band value matches AT MOST ONE of a band's 9 probe keys (they are
-    # pairwise distinct), so the per-pair match count below is exactly
-    # the number of bands within <= 1 bit.
+    # pairwise distinct), so the per-pair match count is exactly the
+    # number of bands within <= 1 bit.
     probe_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -2315,7 +2052,7 @@ def q_ann_binary_hamming_multiprobe_topk(spark: SparkSession, sf: str) -> DataFr
         for i in range(_BINQ_BAND_BITS + 1)
     ]
     qb = (
-        emb.where(F.col("vec_id") < 10)
+        codes.where(F.col("vec_id") < 10)
         .select("vec_id", "w0", "w1")
         .select(
             F.col("vec_id").alias("query_id"),
@@ -2323,54 +2060,7 @@ def q_ann_binary_hamming_multiprobe_topk(spark: SparkSession, sf: str) -> DataFr
         )
         .select("query_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
     )
-    cand = (
-        F.broadcast(qb)
-        .join(bands, ["band", "val"])
-        .where(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.count("*").alias("n_bands_near"))
-    )
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-        F.col("w0").alias("q0"),
-        F.col("w1").alias("q1"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        F.col("w0").alias("c0"),
-        F.col("w1").alias("c1"),
-    )
-    ham = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .withColumn("hamming", F.expr("bit_count(q0 ^ c0) + bit_count(q1 ^ c1)"))
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    short = ham.withColumn("h_rank", F.row_number().over(w_short)).where(
-        F.col("h_rank") <= BINQ_SHORTLIST
-    )
-    rer = short.withColumn("cosine", _dot("qe", "ce") / (F.col("qn") * F.col("cn")))
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("nn_rank", F.row_number().over(w_fin))
-        .where(F.col("nn_rank") <= BINQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "nn_rank",
-            "hamming",
-            "n_bands_near",
-            F.round("cosine", 4).alias("cosine"),
-        )
-    )
+    return _band_rerank(codes, qb, "n_bands_near")
 
 
 def q_embedding_anisotropy(spark: SparkSession, sf: str) -> DataFrame:
@@ -3494,8 +3184,6 @@ ORACLES = {
     """,
 }
 
-_JL_D2 = "list_dot_product({d}, {d})"
-
 
 def _jl_oracle() -> str:
     proj = ", ".join(f"list_dot_product(e, {_jl_row_duck(j)})" for j in range(JL_DIM))
@@ -3780,18 +3468,6 @@ ORACLES["embedding_knn_loo_accuracy"] = f"""
 CORESET_K = 8
 
 
-def _d2_lit(e_col: str, center: list[float]) -> str:
-    """Squared L2 between array column `e_col` and an inlined center vector
-    as the sequential zip_with fold — the exact Spark twin of DuckDB's
-    list_dot_product over the elementwise diff (the JL-distortion pairing,
-    proven bit-equal by that query's hash checks)."""
-    lit = "array(" + ", ".join(f"{v!r}D" for v in center) + ")"
-    return (
-        f"aggregate(zip_with({e_col}, {lit}, (x, y) -> (x - y) * (x - y)),"
-        " cast(0 as double), (acc, x) -> acc + x)"
-    )
-
-
 def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy k-center coreset (Gonzalez 1985 farthest-point traversal,
     the 2-approximation): pick CORESET_K embeddings so every vector is
@@ -3808,8 +3484,9 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     orders by the MICRO-QUANTIZED min-d2 (floored once) with vec_id
     tiebreak; d2 is the sequential zip_with fold == DuckDB
     list_dot_product over the diff list (the JL pairing). Assignment
-    keeps the first minimum (np.argmin over centers in seed order),
-    mirrored in the oracle as the explicit first-min CASE chain.
+    keeps the first minimum over centers in seed order (`_first_min`, NaN
+    ranked as the engines rank it), mirrored in the oracle as the
+    explicit first-min CASE chain.
 
     Scale shape (the trainer contract): ONE corpus scan builds the
     cap-bounded sample; everything after it — the K-1 greedy rounds AND
@@ -3847,13 +3524,13 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
     # fold; the running np.minimum over centers == array_min (min of
     # doubles is order-free); micro = floor(md2 * 1e6 + 0.5) is the
     # identical IEEE expression; the argmax key (-micro, vec_id) and the
-    # first-min assignment (np.argmin keeps the first minimum) reproduce
+    # first-min assignment (`_first_min`) reproduce
     # the orderBy/strict-< fold tie rules exactly.
     import numpy as np
 
-    rows = samp.select("vec_id", "e").collect()
-    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    X = np.array([[float(x) for x in r.e] for r in rows], dtype=np.float64)
+    pdf = samp.select("vec_id", "e").toPandas()  # Arrow, no boxed Rows
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    X = np.stack(pdf["e"].to_numpy())
     dim = X.shape[1]
 
     def d2_to(c: np.ndarray) -> np.ndarray:
@@ -3875,7 +3552,7 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
         md2 = np.minimum(md2, d2_cols[-1])
     # assignment: first-min over selection order; radius = max min-d2
     D = np.stack(d2_cols, axis=1)  # n x K, columns in selection order
-    rank0 = D.argmin(axis=1)  # first minimum, like the strict-< fold
+    rank0 = _first_min(D)  # first minimum, like the strict-< fold
     micro = np.floor(md2 * 1000000.0 + 0.5).astype(np.int64)
     radius = int(micro.max())
     n_assigned = np.bincount(rank0, minlength=CORESET_K)

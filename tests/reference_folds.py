@@ -83,7 +83,7 @@ def ivf_assign(emb: DataFrame, cents_cv: list[list[float]]) -> DataFrame:
 def residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """(vec_id, e) residuals e - cv of the nonzero corpus, assignment by
     `IVF_ASSIGN_SQL` and the subtract by zip_with."""
-    cents_cv = S.trained_codebook(spark, sf, 1, S.DIM, S.N_CENTROIDS)
+    cents_cv = S._coarse_codebook(spark, sf)
     cent = S._centroids_df(spark, cents_cv)
     return (
         ivf_assign(S._nonzero_embeddings(spark, sf), cents_cv)

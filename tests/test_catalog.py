@@ -26,6 +26,17 @@ REPRESENTATIVE = [
     "asof_join",                   # as-of join
     "dedup_minhash_lsh",           # LSH dedup
     "knn_bruteforce",              # similarity search
+    # the ANN retrieval ladder, every tier built from the shared stages
+    "ann_ivf_topk",
+    "ann_pq_adc_topk",
+    "ann_pq_adc_rerank_topk",
+    "ann_ivfpq_topk",
+    "ann_ivfpq_residual_topk",
+    "ann_binary_hamming_topk",
+    "ann_binary_hamming_banded_topk",
+    "ann_binary_hamming_multiprobe_topk",
+    "dedup_semantic_clusters",     # SemDeDup over the coarse quantizer
+    "sample_coreset_kcenter",      # driver-side k-center over the sample
     "text_quality",                # text analysis
     "multimodal_decode_mapinpandas",  # Arrow/mapInPandas plumbing
     "split_train_val_test",        # deterministic hash split

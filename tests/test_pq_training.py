@@ -82,22 +82,25 @@ def test_arrow_codes_match_relational(spark):
     this is what keeps the ADC oracles hash-green while the executed path
     is numpy."""
     from emr_flink_example_spark.operators.similarity import (
+        ADC_K,
         ADC_M,
         ADC_SUB,
-        _adc_codebook,
-        _adc_codes_with_e,
+        _codebook_df,
+        _pq_codes,
+        trained_codebook,
     )
 
-    arrow = {
-        r.vec_id: list(r.codes)
-        for r in _adc_codes_with_e(spark, SF_DIR).select("vec_id", "codes").collect()
-    }
+    cw = trained_codebook(spark, SF_DIR, ADC_M, ADC_SUB, ADC_K)
     emb = load(spark, SF_DIR, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
+    arrow = {
+        r.vec_id: list(r.codes)
+        for r in _pq_codes(emb, cw, ADC_M, ADC_SUB).select("vec_id", "codes").collect()
+    }
     rel = {
         r.vec_id: list(r.codes)
-        for r in emb.crossJoin(F.broadcast(_adc_codebook(spark, SF_DIR)))
+        for r in emb.crossJoin(F.broadcast(_codebook_df(spark, cw)))
         .select("vec_id", F.expr(R.encode_codes_sql(ADC_M, ADC_SUB)).alias("codes"))
         .collect()
     }
@@ -113,8 +116,8 @@ def test_residual_arrow_codes_match_relational(spark):
         ADC_M,
         ADC_SUB,
         _codebook_df,
+        _ivf_codes,
         _residual_codebook,
-        _residual_codes,
         _residual_corpus,
     )
 
@@ -123,7 +126,9 @@ def test_residual_arrow_codes_match_relational(spark):
     assert kernel_resid == {r.vec_id: list(r.e) for r in resid.collect()}
     arrow = {
         r.vec_id: list(r.codes)
-        for r in _residual_codes(spark, SF_DIR).select("vec_id", "codes").collect()
+        for r in _ivf_codes(spark, SF_DIR, _residual_codebook(spark, SF_DIR), residual=True)
+        .select("vec_id", "codes")
+        .collect()
     }
     cb = _codebook_df(spark, _residual_codebook(spark, SF_DIR))
     rel = {
@@ -162,7 +167,7 @@ def test_pq_codes_errs_kernel_matches_relational(spark):
             [r[f"k{m}"] for m in range(S.PQ_M)],
             [r[f"d{m}"] for m in range(S.PQ_M)],
         )
-        for r in emb.crossJoin(F.broadcast(S._pq_codebook(spark, SF_DIR)))
+        for r in emb.crossJoin(F.broadcast(S._codebook_df(spark, cw)))
         .select("vec_id", *rel_cols)
         .collect()
     }
@@ -184,7 +189,7 @@ def test_assign_kernel_matches_ivf_assign_sql(spark):
     element-order accumulation) must be BIT-EQUAL to the interpreted
     cosine-argmax fold it replaced — assignment ids AND the nrm the
     SemDeDup cosines divide by."""
-    cents_cv = S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)
+    cents_cv = S._coarse_codebook(spark, SF_DIR)
     emb = S._nonzero_embeddings(spark, SF_DIR)
     rel = {r.vec_id: (r.cid, r.nrm) for r in R.ivf_assign(emb, cents_cv).collect()}
     assert len(rel) > 0 and _kernel_assign(emb, cents_cv) == rel
@@ -195,7 +200,7 @@ def test_kernels_follow_engine_nan_order(spark):
     centroid takes EVERY row in the fold — the kernel must route the same
     way; and a NaN codeword is never an L2 argmin unless all are NaN
     (array_min skips it, numpy argmin alone would return it)."""
-    cents_cv = [list(v) for v in S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)]
+    cents_cv = [list(v) for v in S._coarse_codebook(spark, SF_DIR)]
     cents_cv[3] = [float("nan")] * S.DIM
     emb = S._nonzero_embeddings(spark, SF_DIR)
     rel = {r.vec_id: r.cid for r in R.ivf_assign(emb, cents_cv).collect()}
@@ -224,7 +229,7 @@ def test_zero_norm_centroid_fails_like_the_fold(spark):
     """An all-zero coarse centroid makes every cosine 0/0. The ANSI fold
     raises DIVIDE_BY_ZERO; the kernel must fail loudly too rather than
     route every row on a NaN (or never to it)."""
-    cents_cv = [list(v) for v in S.trained_codebook(spark, SF_DIR, 1, S.DIM, S.N_CENTROIDS)]
+    cents_cv = [list(v) for v in S._coarse_codebook(spark, SF_DIR)]
     cents_cv[3] = [0.0] * S.DIM
     emb = S._nonzero_embeddings(spark, SF_DIR)
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
