@@ -14,8 +14,9 @@ sketch):
   * writes are idempotent BY CONSTRUCTION: a batch's cells/candidates
     are pure functions of the batch's rows, and each batch overwrites
     its own `batch_id=N` directory, so checkpoint replay rewrites
-    identical bytes (sum-merge reads each batch directory once, so a
-    replay cannot double-count);
+    identical bytes; both directories are folded every N batches by the
+    shared compaction protocol (`compaction.publish_then_retire`), which
+    is safe for SUM, a merge that duplicates would inflate;
   * candidate tracking is the standard practical compromise
     (Space-Saving-flavored): the CELLS are exact mergeable sums, so any
     candidate's estimate is exact count-min semantics (never an
@@ -42,7 +43,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.hashing import portable_hash
 from ..operators.textstats import CMS_D, CMS_TOP, CMS_W
-from .fsio import FSIO, LocalFS, fs_for_path
+from .compaction import compact_batch_dirs, compaction_due, write_batch
+from .fsio import FSIO, fs_for_path
 
 #: per-batch exact top-M candidate keys kept (recall knob: larger M
 #: catches keys that are heavy overall but diluted within single batches)
@@ -60,6 +62,10 @@ def _cell_keys(key_col: str) -> list[F.Column]:
     ]
 
 
+def _sum_cnt(df: DataFrame, key: str) -> DataFrame:
+    return df.groupBy(key).agg(F.sum("cnt").alias("cnt"))
+
+
 class StreamingCountMin:
     """foreachBatch sink maintaining per-batch CMS cell + candidate
     partitions under two sibling directories."""
@@ -75,11 +81,8 @@ class StreamingCountMin:
         self.cands_path = posixpath.join(state_path, "cands")
         self.key_col = key_col
         self.compact_every = compact_every
-        #: fsio seam — LocalFS for plain paths, HadoopFS resolved lazily
-        #: for URI-scheme paths (needs the SparkSession's JVM gateway)
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in state_path else None
-        )
+        #: fsio seam, resolved from the path on the first batch
+        self.fs = fs
 
     # ---------------------------------------------------------- per batch
 
@@ -102,129 +105,26 @@ class StreamingCountMin:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if self.fs is None:
-            self.fs = fs_for_path(spark, self.cells_path)
-        self._batch_cells(batch_df).coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(self.cells_path, f"batch_id={batch_id}")
-        )
-        self._batch_cands(batch_df).coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(self.cands_path, f"batch_id={batch_id}")
-        )
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
+        self.fs = self.fs or fs_for_path(spark, self.cells_path)
+        write_batch(self._batch_cells(batch_df), self.cells_path, batch_id)
+        write_batch(self._batch_cands(batch_df), self.cands_path, batch_id)
+        if compaction_due(self.compact_every, batch_id):
             self._compact(spark, batch_id)
 
-    # ---------------------------------------------------------- compaction
-
-    def _compact(self, spark: SparkSession, current_batch_id: int) -> None:
-        """Sum-merge every partition OLDER than the current batch into the
-        oldest one (cells: exact; candidates: exact union of the kept
-        keys — NOT re-pruned, so compaction never loses a key that some
-        batch promoted).
-
-        Replay safety differs from the HLL/dedup compactions because SUM
-        is NOT duplicate-insensitive, so a same-batch_id replay after a
-        mid-compaction crash must neither re-read its own prior output
-        nor recompute from half-deleted sources:
-
-          * the merge read EXCLUDES this run's own ``compact-<id>-*``
-            files (a crashed prior attempt's output is stale state, not
-            a source — folding it in would double-count every cell);
-            older-generation compact files in the target ARE legitimate
-            sources and are included;
-          * publication is a single atomic rename (the merged output is
-            ``coalesce(1)``, so exactly one parquet file) into a
-            deterministic destination name, overwriting any stale
-            same-id output byte-for-byte;
-          * a ``_compact-<id>.committed`` marker is created only AFTER
-            publication and all source deletions happen only AFTER the
-            marker, so a replay either recomputes from fully-intact
-            sources (no marker → nothing was deleted) or, seeing the
-            marker, skips the merge and just finishes the idempotent
-            cleanup (the published sum already covers every superseded
-            file)."""
-        fs = self.fs
-        for path, keycols in (
-            (self.cells_path, ("cell",)),
-            (self.cands_path, ("k",)),
-        ):
-            old = sorted(
-                (int(d.split("=", 1)[1]), fs.join(path, d))
-                for d in fs.list_dirs(path)
-                if d.startswith("batch_id=")
-                and int(d.split("=", 1)[1]) < current_batch_id
+    def _compact(self, spark: SparkSession, batch_id: int) -> None:
+        """Sum-merge both directories (cells: exact; candidates: the exact
+        union of the kept keys, NOT re-pruned, so compaction never loses a
+        key that some batch promoted)."""
+        for path, key in ((self.cells_path, "cell"), (self.cands_path, "k")):
+            compact_batch_dirs(
+                spark, self.fs, path, batch_id, lambda df, key=key: _sum_cnt(df, key)
             )
-            if not old:
-                continue
-            target_id, target_dir = old[0]
-            own_prefix = f"compact-{current_batch_id}-"
-            marker = fs.join(
-                target_dir, f"_compact-{current_batch_id}.committed"
-            )
-            if fs.exists(marker):
-                self._finish_cleanup(old, target_dir, own_prefix, marker)
-                continue
-            if len(old) <= 1:
-                continue
-            src_files = [
-                fs.join(p, f)
-                for _, p in old
-                for f in fs.list_files(p)
-                if f.endswith(".parquet")
-                and not f.startswith(".")
-                and not f.startswith(own_prefix)
-            ]
-            merged = (
-                spark.read.option("basePath", path)
-                .parquet(*src_files)
-                .drop("batch_id")
-                .groupBy(*keycols)
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            tmp = fs.join(path, f".compact-{current_batch_id}")
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            parts = [
-                f
-                for f in fs.list_files(tmp)
-                if f.endswith(".parquet") and not f.startswith(".")
-            ]
-            for i, fname in enumerate(parts):
-                fs.rename_overwrite(
-                    fs.join(tmp, fname),
-                    fs.join(target_dir, f"{own_prefix}{i:05d}.parquet"),
-                )
-            fs.rmtree(tmp)
-            fs.write_text_atomic(marker, "committed\n")
-            self._finish_cleanup(old, target_dir, own_prefix, marker)
-
-    def _finish_cleanup(
-        self, old: list[tuple[int, str]], target_dir: str, own_prefix: str, marker: str
-    ) -> None:
-        """Idempotent post-publication sweep: retire every source the
-        published compact generation already covers (older batch dirs,
-        superseded files in the target, stale older markers), then the
-        marker itself. Safe to re-run after a crash at any point."""
-        fs = self.fs
-        marker_name = fs.basename(marker)
-        for _, p in old[1:]:
-            fs.rmtree(p)
-        for f in fs.list_files(target_dir):
-            if f.startswith("."):
-                continue
-            if f.startswith(own_prefix) or f == marker_name:
-                continue
-            fs.remove(fs.join(target_dir, f))
-        if fs.exists(marker):
-            fs.remove(marker)
 
     # ---------------------------------------------------------- read side
 
     def cells(self, spark: SparkSession) -> DataFrame:
         """The SUM-merged D x W cell table over everything streamed."""
-        return (
-            spark.read.parquet(self.cells_path)
-            .groupBy("cell")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
+        return _sum_cnt(spark.read.parquet(self.cells_path), "cell")
 
     def heavy_hitters(self, spark: SparkSession, k: int = CMS_TOP) -> DataFrame:
         """Top-k candidate keys by their count-min estimate against the

@@ -56,13 +56,12 @@ per-batch jobs, of which the two writes are the irreducible pair.
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.textstats import gopher_flags
+from .compaction import write_batch
 from .dedup_stream import NearDupStreamFilter
 
 #: rule-order list of (flag column, reason tag) — the reject_reason is the
@@ -157,14 +156,9 @@ class CurationStreamSink:
                 rejected = gated.where(~F.col("passes_gopher")).select(
                     "doc_id", "text", _first_failing_rule().alias("reject_reason")
                 )
-                # same idempotent protocol as the dedup sink: a replayed
-                # batch overwrites its own partition, never touches any
-                # other; one file per batch partition (the hive-sink
-                # small-files discipline). Reads the pinned gate output —
-                # no gate recompute.
-                rejected.coalesce(self._dedup.write_partitions).write.mode(
-                    "overwrite"
-                ).parquet(posixpath.join(self.reject_path, f"batch_id={batch_id}"))
+                # same idempotent per-batch overwrite as the dedup sink.
+                # Reads the pinned gate output — no gate recompute.
+                write_batch(rejected, self.reject_path, batch_id)
         finally:
             gated.unpersist()
 

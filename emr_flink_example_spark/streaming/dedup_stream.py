@@ -17,7 +17,11 @@ must never re-pair with itself. State is an explicit parquet band index
     own `batch_id=N` partition directory in both the corpus and the index
     (a checkpoint replay simply rewrites the same directories), and the
     probe excludes the current batch's own index rows so a replay never
-    self-pairs a document with its first attempt.
+    self-pairs a document with its first attempt;
+  * every N batches the index partitions are folded by the shared
+    compaction protocol (`compaction.publish_then_retire`); duplicate
+    index rows in its crash window only repeat candidates the probe's
+    distinct() removes.
 
 In-batch duplicates are intentionally out of scope here — run the batch
 LSH operator inside the micro-batch first if needed; cross-batch is the
@@ -25,8 +29,6 @@ part plain Spark cannot express without this component.
 """
 
 from __future__ import annotations
-
-import posixpath
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,7 +41,8 @@ from ..operators.dedup import (
     _band_buckets,
     minhash_signatures_for,
 )
-from .fsio import FSIO, LocalFS, fs_for_path
+from .compaction import compact_batch_dirs, compaction_due, write_batch
+from .fsio import FSIO, fs_for_path
 
 
 class _IndexedDedupStreamFilter:
@@ -57,24 +60,16 @@ class _IndexedDedupStreamFilter:
         out_path: str,
         index_path: str,
         compact_every: int = 16,
-        write_partitions: int = 1,
         fs: FSIO | None = None,
     ) -> None:
         self.out_path = out_path
         self.index_path = index_path
-        #: fsio seam — LocalFS for plain paths, HadoopFS resolved lazily
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in index_path else None
-        )
+        #: fsio seam, resolved from the path on the first batch
+        self.fs = fs
         #: every N batches, merge the accumulated one-dir-per-batch index
         #: partitions into one — unbounded small-file accretion otherwise
         #: (a 100 TB stream is millions of micro-batches). 0 disables.
         self.compact_every = compact_every
-        #: files per batch_id partition dir (the hive-sink discipline:
-        #: exactly N files per touched partition per micro-batch, not
-        #: tasks x partitions). 1 is right for minute-scale micro-batches;
-        #: raise it when a single batch is tens of GB.
-        self.write_partitions = write_partitions
 
     def _features(self, batch_df: DataFrame) -> DataFrame:
         raise NotImplementedError
@@ -137,8 +132,7 @@ class _IndexedDedupStreamFilter:
         a broken index as empty would admit near-dups — the one failure
         mode this component exists to prevent. (The fsio seam answers the
         listing on local disk or via the Hadoop FileSystem API alike.)"""
-        if self.fs is None:
-            self.fs = fs_for_path(spark, self.index_path)
+        self.fs = self.fs or fs_for_path(spark, self.index_path)
         if not self.fs.is_dir(self.index_path):
             return None
         has_data = any(
@@ -175,79 +169,18 @@ class _IndexedDedupStreamFilter:
                 surviving_feats = feats.join(dups, self.ID_COL, "left_anti")
             else:
                 survivors, surviving_feats = batch_df, feats
-            survivors.coalesce(self.write_partitions).write.mode("overwrite").parquet(
-                posixpath.join(self.out_path, f"batch_id={batch_id}")
-            )
-            surviving_feats.coalesce(self.write_partitions).write.mode(
-                "overwrite"
-            ).parquet(posixpath.join(self.index_path, f"batch_id={batch_id}"))
+            write_batch(survivors, self.out_path, batch_id)
+            write_batch(surviving_feats, self.index_path, batch_id)
         finally:
             for df in pinned:
                 df.unpersist()
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
-            self._compact_index(spark, batch_id)
+        if compaction_due(self.compact_every, batch_id):
+            self._compact(spark, batch_id)
 
-    def _compact_index(self, spark, current_batch_id: int) -> None:
-        """Merge every index partition OLDER than the current batch into the
-        oldest one (fewer dirs/files, same rows).
-
-        Replay-safe: streaming replays only the LATEST batch, so rewriting
-        strictly-older partitions can never collide with a replay, and the
-        merged rows keep a batch_id (the oldest) that no replay will ever
-        exclude. Crash-safe ordering (the hll_stream protocol): the merged
-        files are PUBLISHED into the oldest partition via atomic per-file
-        renames BEFORE any source file or partition is deleted — a crash
-        at any intermediate point leaves only duplicate index rows, which
-        the probe's distinct() makes harmless, and the next compaction
-        sweeps them up. (The previous rmtree(target)-then-rename(tmp)
-        ordering had a window where the oldest partition existed only as
-        an invisible dot-dir: a crash there LOST its rows and the index
-        would silently readmit near-dups.) A same-batch_id replay after a
-        crash is also safe: files named like this run's own rename
-        destinations are excluded from the superseded list (they are this
-        run's targets — deleting them in cleanup would empty the
-        partition), while still being read into the merge."""
-        fs = self.fs
-        old = sorted(
-            (
-                int(d.split("=", 1)[1]),
-                fs.join(self.index_path, d),
-            )
-            for d in fs.list_dirs(self.index_path)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) < current_batch_id
-        )
-        if len(old) <= 1:
-            return
-        # Merged rows all take the oldest dir's batch_id (partition-derived
-        # on read). Per-row original ids are disposable: replay exclusion
-        # only ever targets the CURRENT batch, and merged rows are strictly
-        # older by construction.
-        merged = (
-            spark.read.option("basePath", self.index_path)
-            .parquet(*[p for _, p in old])
-            .drop("batch_id")
-        )
-        target_id, target_dir = old[0]
-        tmp = fs.join(self.index_path, f".compact-{current_batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        own_prefix = f"compact-{current_batch_id}-"
-        superseded = [
-            fs.join(target_dir, f)
-            for f in fs.list_files(target_dir)
-            if not f.startswith(".") and not f.startswith(own_prefix)
-        ]
-        for i, fname in enumerate(fs.list_files(tmp)):
-            if fname.endswith(".parquet"):
-                fs.rename_overwrite(
-                    fs.join(tmp, fname),
-                    fs.join(target_dir, f"{own_prefix}{i:05d}.parquet"),
-                )
-        fs.rmtree(tmp)
-        for _, p in old[1:]:
-            fs.rmtree(p)
-        for f in superseded:
-            if fs.exists(f):
-                fs.remove(f)
+    def _compact(self, spark, batch_id: int) -> None:
+        # union: the folded rows keep the oldest directory's batch_id, which
+        # the replay exclusion (current batch only) never targets
+        compact_batch_dirs(spark, self.fs, self.index_path, batch_id, lambda df: df)
 
 
 class NearDupStreamFilter(_IndexedDedupStreamFilter):

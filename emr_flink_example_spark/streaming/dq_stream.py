@@ -18,11 +18,11 @@ Discipline (the hll/cms sink contract):
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from .compaction import write_batch
 
 
 class StreamingDQMonitor:
@@ -63,9 +63,7 @@ class StreamingDQMonitor:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._batch_metrics(batch_df, batch_id).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(posixpath.join(self.metrics_path, f"batch_id={batch_id}"))
+        write_batch(self._batch_metrics(batch_df, batch_id), self.metrics_path, batch_id)
 
     # ---------------------------------------------------------- read side
 

@@ -15,9 +15,9 @@ Why this shape:
     replay), and the current sample is the global top-k over all
     candidate partitions — duplicates from any crash/replay window
     collapse in the dropDuplicates(doc_id) of the read;
-  * state is O(k x batches) tiny files between compactions, compacted
-    every N batches into one k-row partition with the same
-    publish-before-delete protocol as the register/index compactions.
+  * state is O(k x batches) tiny files between compactions, folded
+    every N batches into one k-row partition by the shared compaction
+    protocol (`compaction.publish_then_retire`).
 
 A per-batch candidate set is the batch's OWN top-k (TakeOrdered — heaps,
 no shuffle of the batch beyond its scan): a doc outside its batch's
@@ -27,14 +27,13 @@ lossless.
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sampling import SAMPLE_ES_K, with_es_key
-from .fsio import FSIO, LocalFS, fs_for_path
+from .compaction import compact_batch_dirs, compaction_due, write_batch
+from .fsio import FSIO, fs_for_path
 
 
 class StreamingEsSample:
@@ -52,10 +51,8 @@ class StreamingEsSample:
         self.k = k
         self.weight_col = weight_col
         self.compact_every = compact_every
-        #: fsio seam — LocalFS for plain paths, HadoopFS resolved lazily
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in cands_path else None
-        )
+        #: fsio seam, resolved from the path on the first batch
+        self.fs = fs
 
     def _batch_candidates(self, batch_df: DataFrame) -> DataFrame:
         return (
@@ -68,13 +65,11 @@ class StreamingEsSample:
         )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.fs is None:
-            self.fs = fs_for_path(batch_df.sparkSession, self.cands_path)
-        self._batch_candidates(batch_df).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(posixpath.join(self.cands_path, f"batch_id={batch_id}"))
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
-            self._compact(batch_df.sparkSession, batch_id)
+        spark = batch_df.sparkSession
+        self.fs = self.fs or fs_for_path(spark, self.cands_path)
+        write_batch(self._batch_candidates(batch_df), self.cands_path, batch_id)
+        if compaction_due(self.compact_every, batch_id):
+            self._compact(spark, batch_id)
 
     def _top_k(self, cands: DataFrame) -> DataFrame:
         # duplicates (crash/replay windows, overlapping batches) are exact
@@ -85,50 +80,10 @@ class StreamingEsSample:
             .limit(self.k)
         )
 
-    def _compact(self, spark: SparkSession, current_batch_id: int) -> None:
-        """Merge every candidate partition OLDER than the current batch
-        into the oldest one, pruned to the global top-k (lossless: a doc
-        outside the top-k of the union can never re-enter — keys are
-        immutable). Same crash ordering as the register/index
-        compactions: publish into the visible target partition via
-        per-file renames BEFORE deleting any source; this run's own
-        rename destinations are excluded from the superseded sweep so a
-        same-batch_id replay cannot delete its own output."""
-        fs = self.fs
-        old = sorted(
-            (int(d.split("=", 1)[1]), fs.join(self.cands_path, d))
-            for d in fs.list_dirs(self.cands_path)
-            if d.startswith("batch_id=")
-            and int(d.split("=", 1)[1]) < current_batch_id
-        )
-        if len(old) <= 1:
-            return
-        merged = self._top_k(
-            spark.read.option("basePath", self.cands_path)
-            .parquet(*[p for _, p in old])
-            .drop("batch_id")
-        )
-        target_id, target_dir = old[0]
-        tmp = fs.join(self.cands_path, f".compact-{current_batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        own_prefix = f"compact-{current_batch_id}-"
-        superseded = [
-            fs.join(target_dir, f)
-            for f in fs.list_files(target_dir)
-            if not f.startswith(".") and not f.startswith(own_prefix)
-        ]
-        for i, fname in enumerate(fs.list_files(tmp)):
-            if fname.endswith(".parquet"):
-                fs.rename_overwrite(
-                    fs.join(tmp, fname),
-                    fs.join(target_dir, f"{own_prefix}{i:05d}.parquet"),
-                )
-        fs.rmtree(tmp)
-        for _, p in old[1:]:
-            fs.rmtree(p)
-        for f in superseded:
-            if fs.exists(f):
-                fs.remove(f)
+    def _compact(self, spark: SparkSession, batch_id: int) -> None:
+        # pruning the union to the global top-k is lossless: a doc outside
+        # it can never re-enter (keys are immutable)
+        compact_batch_dirs(spark, self.fs, self.cands_path, batch_id, self._top_k)
 
     def sample(self, spark: SparkSession) -> DataFrame:
         """The current exact-k weighted sample over everything streamed."""

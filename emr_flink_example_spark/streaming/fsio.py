@@ -1,14 +1,14 @@
 """Filesystem seam for the staged-publish / commit-marker protocols.
 
-The hive sink's staged append (`partition_commit.PartitionCommitter`),
-the partition compactor (`compaction.py`), and the sketch-state
-compactors all follow the same driver-side protocol: list data files,
-publish deterministically-named files via rename, write small text
-markers/ledgers atomically, sweep superseded files. On a laptop that is
-`os`/`shutil`; where the 100 TB mandate actually lives (S3/HDFS) it has
-to be the Hadoop FileSystem API. This module is the one seam between
-the two — protocol code takes an `FSIO` and never touches `os.*`
-directly (≙ the `decode_image_real` seam pattern, multimodal.py).
+Two protocols own their file layout: the hive sink's staged append
+(`partition_commit.PartitionCommitter._write_batch`) and the compaction
+protocol every compacting state directory uses
+(`compaction.publish_then_retire`, which states its crash argument).
+On a laptop their file steps are `os`/`shutil`; where the 100 TB mandate
+actually lives (S3/HDFS) they have to be the Hadoop FileSystem API. This
+module is the one seam between the two — protocol code takes an `FSIO`
+and never touches `os.*` directly (≙ the `decode_image_real` seam
+pattern, multimodal.py).
 
 Two implementations:
 
@@ -18,11 +18,10 @@ Two implementations:
   `org.apache.hadoop.fs.FileSystem`, so the identical protocol code runs
   against HDFS, S3A, or Hadoop's local FS (`file:///...` URIs — the
   second implementation the contract test drives). `rename_overwrite`
-  is delete-then-rename there, which is NOT atomic; every caller
-  protocol tolerates that by design: published names are deterministic
-  functions of (batch/gen, index) and content is regenerated verbatim on
-  checkpoint replay, so a crash between the delete and the rename leaves
-  a hole the replay refills, never a duplicate or a torn file.
+  is delete-then-rename there, which is NOT atomic; both protocols
+  publish deterministic names a replay regenerates, so a crash between
+  the delete and the rename leaves a hole the replay refills, never a
+  duplicate or a torn file.
 
 Choosing: `fs_for_path(spark, path)` returns `LocalFS` for plain paths
 and `HadoopFS` for anything with a URI scheme (`s3a://`, `hdfs://`,
@@ -182,8 +181,7 @@ class HadoopFS(FSIO):
     Hadoop configuration of the running SparkSession provides.
 
     `rename_overwrite` = delete(dst) + rename(src, dst): not atomic, but
-    every caller's protocol is replay-idempotent with deterministic names
-    (module docstring), so the non-atomicity is recoverable by design.
+    recoverable by replay (module docstring).
     """
 
     def __init__(self, spark) -> None:

@@ -4,20 +4,13 @@ each micro-batch contributes a tiny HyperLogLog register table, and the
 running "distinct keys seen so far" answer is the max-merge of every
 batch's registers.
 
-Why this shape (the dedup_stream discipline, applied to a sketch):
-
-  * state is explicit parquet (bucket, m_j) partitions, not a state
-    store — readable by any consumer, and exactly what a 100 TB batch
-    rollup would materialize per day anyway;
-  * writes are idempotent BY CONSTRUCTION: a batch's registers are a
-    pure function of the batch's rows, and each batch overwrites its own
-    `batch_id=N` directory, so checkpoint replay rewrites identical
-    bytes — and even a DOUBLE-counted batch could not skew the answer,
-    because max-merge is idempotent (the property hard-removal dedup
-    has to engineer, HLL gets for free);
-  * the merged register table is 64 rows regardless of stream length —
-    the estimate read is O(batches) tiny files, compacted every N
-    batches into one directory exactly like the dedup band index.
+State is explicit parquet (bucket, m_j) partitions, not a state store —
+readable by any consumer, and exactly what a 100 TB batch rollup would
+materialize per day anyway. A batch's registers are a pure function of
+its rows, written to its own `batch_id=N` directory (a checkpoint replay
+rewrites identical bytes), and folded every N batches by the shared
+compaction protocol (`compaction.publish_then_retire`). The merged
+register table is 64 rows regardless of stream length.
 
 Estimator identical to the batch op: trailing-zero rho over the portable
 hash, exact-integer harmonic sum, linear-counting branch below 2.5m.
@@ -26,7 +19,6 @@ hash, exact-integer harmonic sum, linear-counting branch below 2.5m.
 from __future__ import annotations
 
 import math
-import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,7 +26,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.hashing import portable_hash
 from ..operators.textstats import HLL_ALPHA, HLL_M, HLL_P, _HLL_RHO_CAP
-from .fsio import FSIO, LocalFS, fs_for_path
+from .compaction import compact_batch_dirs, compaction_due, write_batch
+from .fsio import FSIO, fs_for_path
+
+
+def _max_merge(registers: DataFrame) -> DataFrame:
+    return registers.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
 
 
 class StreamingHllSketch:
@@ -50,10 +47,8 @@ class StreamingHllSketch:
         self.registers_path = registers_path
         self.key_col = key_col
         self.compact_every = compact_every
-        #: fsio seam — LocalFS for plain paths, HadoopFS resolved lazily
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in registers_path else None
-        )
+        #: fsio seam, resolved from the path on the first batch
+        self.fs = fs
 
     def _batch_registers(self, batch_df: DataFrame) -> DataFrame:
         h = portable_hash(F.col(self.key_col).cast("string"))
@@ -72,83 +67,17 @@ class StreamingHllSketch:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if self.fs is None:
-            self.fs = fs_for_path(spark, self.registers_path)
-        self._batch_registers(batch_df).coalesce(1).write.mode("overwrite").parquet(
-            posixpath.join(self.registers_path, f"batch_id={batch_id}")
-        )
-        if self.compact_every and batch_id > 0 and batch_id % self.compact_every == 0:
+        self.fs = self.fs or fs_for_path(spark, self.registers_path)
+        write_batch(self._batch_registers(batch_df), self.registers_path, batch_id)
+        if compaction_due(self.compact_every, batch_id):
             self._compact(spark, batch_id)
 
-    def _compact(self, spark: SparkSession, current_batch_id: int) -> None:
-        """Max-merge every register partition OLDER than the current batch
-        into the oldest one. Replay-safe for the same reason as the dedup
-        index compaction (replays only touch the LATEST batch).
-
-        Crash-safe ordering: the merged registers are PUBLISHED into the
-        oldest partition (a visible, non-dot directory Spark reads) via
-        atomic per-file renames BEFORE any source file or partition is
-        deleted. A crash at any intermediate point therefore leaves only
-        duplicate register rows, which max-merge absorbs on read — never
-        a state where the merged registers exist only in a dot-prefixed
-        tmp dir that readers ignore."""
-        fs = self.fs
-        old = sorted(
-            (int(d.split("=", 1)[1]), fs.join(self.registers_path, d))
-            for d in fs.list_dirs(self.registers_path)
-            if d.startswith("batch_id=")
-            and int(d.split("=", 1)[1]) < current_batch_id
-        )
-        if len(old) <= 1:
-            return
-        merged = (
-            spark.read.option("basePath", self.registers_path)
-            .parquet(*[p for _, p in old])
-            .groupBy("bucket")
-            .agg(F.max("m_j").alias("m_j"))
-        )
-        target_id, target_dir = old[0]
-        tmp = fs.join(self.registers_path, f".compact-{current_batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        # Files the merged output supersedes inside the target partition
-        # (prior part-/compact- files); they become redundant duplicates
-        # the moment the merged file lands, and are deleted LAST. A file
-        # named like THIS run's rename destinations is excluded: after a
-        # mid-compaction crash the checkpoint replays the SAME batch_id,
-        # so a previously-published `compact-{current_batch_id}-*` file is
-        # this run's own rename target — listing it as superseded would
-        # delete the freshly-renamed merged registers in the cleanup loop
-        # (the partition would end up EMPTY after old[1:] were removed).
-        # The stale file's registers are still merged (it is read as part
-        # of old[0]) and then atomically overwritten by the rename.
-        own_prefix = f"compact-{current_batch_id}-"
-        superseded = [
-            fs.join(target_dir, f)
-            for f in fs.list_files(target_dir)
-            if not f.startswith(".") and not f.startswith(own_prefix)
-        ]
-        for i, fname in enumerate(fs.list_files(tmp)):
-            if fname.endswith(".parquet"):
-                fs.rename_overwrite(
-                    fs.join(tmp, fname),
-                    fs.join(
-                        target_dir, f"compact-{current_batch_id}-{i:05d}.parquet"
-                    ),
-                )
-        fs.rmtree(tmp)
-        for _, p in old[1:]:
-            fs.rmtree(p)
-        for f in superseded:
-            if fs.exists(f):
-                fs.remove(f)
+    def _compact(self, spark: SparkSession, batch_id: int) -> None:
+        compact_batch_dirs(spark, self.fs, self.registers_path, batch_id, _max_merge)
 
     def registers(self, spark: SparkSession) -> DataFrame:
         """The merged (bucket, m_j) register table — 64 rows max."""
-        return (
-            spark.read.parquet(self.registers_path)
-            .groupBy("bucket")
-            .agg(F.max("m_j").alias("m_j"))
-        )
+        return _max_merge(spark.read.parquet(self.registers_path))
 
     def estimate(self, spark: SparkSession) -> float:
         """Distinct-key estimate over everything streamed so far, by the

@@ -41,7 +41,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .fsio import FSIO, LocalFS, fs_for_path
+from .fsio import FSIO, fs_for_path
 
 
 class PartitionCommitter:
@@ -70,13 +70,10 @@ class PartitionCommitter:
         self.commit_delay = timedelta(seconds=commit_delay_seconds)
         self.watermark_lag = timedelta(seconds=watermark_lag_seconds)
         self.timestamp_pattern = timestamp_pattern or self._default_pattern(partition_cols)
-        #: filesystem seam (fsio.py): LocalFS for plain paths; resolved to
-        #: HadoopFS on first batch when `path` carries a URI scheme (the
-        #: SparkSession is needed for the JVM gateway, so resolution is
-        #: deferred to __call__). Tests may inject either implementation.
-        self.fs = fs if fs is not None else (
-            LocalFS() if "://" not in path else None
-        )
+        #: filesystem seam (fsio.py), resolved from the path on the first
+        #: batch (HadoopFS needs the SparkSession's JVM gateway). Tests may
+        #: inject either implementation.
+        self.fs = fs
         self.ledger_path = posixpath.join(path, "_partition_commits.json")
         #: every N batches, coalesce the small per-batch files of COMMITTED
         #: partitions (≙ the reference's declared-but-inert auto-compaction,
@@ -270,8 +267,7 @@ class PartitionCommitter:
         from pyspark.sql import Observation
 
         spark = batch_df.sparkSession
-        if self.fs is None:  # URI-scheme path: resolve HadoopFS lazily
-            self.fs = fs_for_path(spark, self.path)
+        self.fs = self.fs or fs_for_path(spark, self.path)
         # The batch stats ride the write job via observe() — zero extra
         # scans per micro-batch. This is safe here (unlike the curation
         # sink, test_observe_metrics_spark_behavior.py) because the write

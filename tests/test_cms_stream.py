@@ -8,6 +8,7 @@ import hashlib
 from collections import Counter
 
 from emr_flink_example_spark.operators.textstats import CMS_D, CMS_TOP, CMS_W
+from emr_flink_example_spark.streaming import compaction
 from emr_flink_example_spark.streaming.cms_stream import (
     CAND_M,
     StreamingCountMin,
@@ -148,17 +149,18 @@ def _crash_compact(sink, spark, batch_id, crash_at):
         pass
 
     # the marker now publishes through the fsio seam (write_text_atomic on
-    # the sink's fs); crash by shadowing the seam method / the cleanup hook
+    # the sink's fs); crash by shadowing the seam method / the shared
+    # protocol's retirement step
     fs_cls = type(sink.fs)
-    orig_cleanup = StreamingCountMin.__dict__["_finish_cleanup"]
+    orig_retire = compaction._retire
     try:
         if crash_at == "pre_marker":
             fs_cls.write_text_atomic = (
                 lambda self, path, text: (_ for _ in ()).throw(Boom())
             )
         else:
-            StreamingCountMin._finish_cleanup = (
-                lambda self, old, target_dir, own_prefix, marker: (
+            compaction._retire = (
+                lambda fs, target_dir, own_prefix, marker, retire_dirs=(): (
                     _ for _ in ()
                 ).throw(Boom())
             )
@@ -169,7 +171,7 @@ def _crash_compact(sink, spark, batch_id, crash_at):
     finally:
         if "write_text_atomic" in fs_cls.__dict__:
             del fs_cls.write_text_atomic  # base FSIO impl shows through again
-        StreamingCountMin._finish_cleanup = orig_cleanup
+        compaction._retire = orig_retire
 
 
 def test_replayed_compaction_does_not_double_count(spark, tmp_path):

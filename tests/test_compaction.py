@@ -3,13 +3,17 @@ and the kafka sink payload contract."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from emr_flink_example_spark.sources.streams import as_kafka_payload
 from emr_flink_example_spark.streaming.compaction import compact_path
+from emr_flink_example_spark.streaming.fsio import LocalFS
 
 
 def test_compaction_merges_small_files(spark, tmp_path):
@@ -40,6 +44,69 @@ def test_compaction_noop_when_already_compact(spark, tmp_path):
     stats = compact_path(spark, out)
     assert len(stats) == 1 and not stats[0].compacted
     assert stats[0].files_before == stats[0].files_after == 1
+
+
+class _CrashOnFirstRename(LocalFS):
+    crashed = False
+
+    def rename_overwrite(self, src, dst):
+        if not self.crashed:
+            self.crashed = True
+            raise RuntimeError("crash before the first rename")
+        super().rename_overwrite(src, dst)
+
+
+def test_compact_path_crash_before_rename_loses_no_rows(spark, tmp_path):
+    """A crash after the merged files are written but before any is
+    renamed into the partition must leave every row readable, and a rerun
+    must finish the compaction. (Removing the sources before the renames
+    lost the partition's rows in that window.)"""
+    out = str(tmp_path / "tbl")
+    spark.range(0, 1000).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("part")
+    ).repartition(8).write.partitionBy("part").parquet(out)
+    before = sorted(r.id for r in spark.read.parquet(out).collect())
+    fs = _CrashOnFirstRename()
+    with pytest.raises(RuntimeError, match="first rename"):
+        compact_path(spark, out, fs=fs)
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) == before
+    stats = compact_path(spark, out, fs=fs)
+    assert all(s.files_after == 1 for s in stats)
+    assert sorted(r.id for r in spark.read.parquet(out).collect()) == before
+
+
+def test_one_publish_then_retire_implementation():
+    """Only compaction.py publishes compacted files and writes commit
+    markers: no other streaming module may call `rename_overwrite` or
+    name a `.committed` marker. The exceptions are the hive sink's
+    staged publish (`partition_commit._write_batch`) and the fsio seam's
+    own `write_text_atomic`."""
+    allowed = {("partition_commit.py", "_write_batch"), ("fsio.py", "write_text_atomic")}
+    streaming = pathlib.Path(__file__).resolve().parents[1] / (
+        "emr_flink_example_spark/streaming"
+    )
+    offenders = []
+    for path in sorted(streaming.glob("*.py")):
+        if path.name == "compaction.py":
+            continue
+        tree = ast.parse(path.read_text())
+        exempt = {
+            id(call)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (path.name, fn.name) in allowed
+            for call in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and ".committed" in str(node.value):
+                offenders.append((path.name, node.lineno, "'.committed'"))
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "rename_overwrite"
+                and id(node) not in exempt
+            ):
+                offenders.append((path.name, node.lineno, "rename_overwrite"))
+    assert not offenders, f"publish/marker steps outside compaction.py: {offenders}"
 
 
 def test_kafka_payload_roundtrip(spark):
