@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from emr_flink_example_spark import cache  # noqa: E402
 from emr_flink_example_spark.plans import catalog  # noqa: E402
-from emr_flink_example_spark.session import local_test_session  # noqa: E402
+from emr_flink_example_spark.session import default_parallelism, local_test_session  # noqa: E402
 
 #: Representative, scale-stressing subset of the catalog: scan-heavy agg,
 #: fact-fact joins, window functions, event-time windows, as-of, and the
@@ -340,14 +340,11 @@ def main() -> None:
     # so parquet footer/listing caches are warm for every headline query —
     # the measurements are steady-state query execution, not metadata
     # bootstrap (which is a fixed cost, negligible at real scale).
-    from emr_flink_example_spark.io import load  # noqa: E402
+    from emr_flink_example_spark.io import TABLES, load  # noqa: E402
 
     try:
         run(HEADLINE[0])
-        for t in (
-            "lineitem", "orders", "customer", "supplier", "nation", "region",
-            "part", "events", "documents", "embeddings",
-        ):
+        for t in TABLES:
             load(spark, sf_dir, t).count()
     except Exception:
         pass  # a broken warmup query is re-reported by its own timed run
@@ -365,8 +362,8 @@ def main() -> None:
     # its pins from the parquet inputs (the qtime.py discipline). The first
     # run's time is ALSO recorded per query ("queries_cold") so costs that a
     # session-level memo amortizes across runs (trained PQ/BPE/simhash
-    # models, keyed on the sf dir) stay visible in the artifact instead of
-    # vanishing into the min.
+    # models, reused while their input files are unchanged) stay visible
+    # in the artifact instead of vanishing into the min.
     timings = {}
     cold = {}
     errors = {}
@@ -396,6 +393,7 @@ def main() -> None:
         "queries_cold": cold,
         "runs_per_query": 3,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": default_parallelism(),
     }
     try:
         import subprocess
@@ -409,52 +407,6 @@ def main() -> None:
     if errors:
         out["errors"] = errors
 
-    # Self-adjudicating bench noise (VERDICT r9 #4): this shared host swings
-    # per-query timings by up to ~4x run-to-run, so round-over-round reads
-    # need a best-across-runs figure computed MECHANICALLY, not hand-built
-    # from two artifacts after the fact. Fold in every same-sf BENCH_local*
-    # artifact already on disk (the driver's earlier run, the builder's
-    # round-stamped copy — read BEFORE this run overwrites BENCH_local.json)
-    # and emit the per-query min plus the observed noise band; each artifact
-    # carries its git_rev so a consumer can see when mins mix code versions.
-    import glob
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prior: dict[str, dict] = {}
-    prior_revs: dict[str, str | None] = {}
-    for p in sorted(glob.glob(os.path.join(repo_dir, "BENCH_local*.json"))):
-        try:
-            with open(p) as f:
-                j = json.load(f)
-        except (OSError, ValueError):
-            continue
-        # r15: only fold artifacts produced by the SAME methodology (the
-        # drained-pins harness stamps "queries_cold") — pre-r15 mins are
-        # warm-cache figures for every pinned query and adjudicating
-        # against them would resurrect exactly the statistic the r14
-        # VERDICT flagged (old artifacts stay committed for history).
-        if (
-            j.get("sf") == out["sf"]
-            and isinstance(j.get("queries"), dict)
-            and isinstance(j.get("queries_cold"), dict)
-        ):
-            prior[os.path.basename(p)] = j["queries"]
-            prior_revs[os.path.basename(p)] = j.get("git_rev")
-    if prior:
-        series = [timings, *prior.values()]
-        min_across, band = {}, {}
-        for q, t in timings.items():
-            vals = [s[q] for s in series if isinstance(s.get(q), (int, float))]
-            min_across[q] = round(min(vals), 3)
-            if len(vals) > 1 and min(vals) > 0:
-                band[q] = round(max(vals) / min(vals), 2)
-        out["min_across_artifacts"] = min_across
-        out["min_across_artifacts_total"] = round(sum(min_across.values()), 3)
-        out["artifacts_used"] = prior_revs
-        if band:
-            bs = sorted(band.values())
-            out["noise_band_median"] = bs[len(bs) // 2]
-            out["noise_band_max"] = bs[-1]
     print(json.dumps(out))
     # Truncation-proofing (VERDICT r7 #1: the driver tails ~2000 chars of
     # stdout, and at 76+ queries the full JSON line outgrew it, losing the

@@ -2,11 +2,14 @@
 
 Every function here takes user DataFrames plus column-name arguments and
 returns a DataFrame (or frames + stats) — none of them knows about the
-test fixtures. The catalog queries in ``operators/`` are thin fixture
-shims over these same implementations, so each function's semantics are
-oracle-checked against DuckDB by the full-catalog selfcheck; the tests in
-``tests/test_api.py`` additionally exercise each one on non-fixture
-frames with renamed columns.
+test fixtures. Most catalog queries in ``operators/`` are thin fixture
+shims over these same implementations, so those functions' semantics are
+oracle-checked against DuckDB by the full-catalog selfcheck. Six are not:
+``mrr_at_k``, ``precision_recall_at_k``, ``average_precision_at_k``,
+``ndcg_at_k``, ``psi_drift`` and ``ks_drift`` each restate their catalog
+twin's math in a separate copy, which only ``tests/test_api.py`` checks.
+Those tests also exercise every function on non-fixture frames with
+renamed columns.
 
 Families:
 

@@ -86,13 +86,18 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     return df.where(F.col("ts").isNotNull())
 
 
+def table_path(sf_dir: str, table: str) -> str:
+    """Where `load` reads `table` of the scale-factor directory `sf_dir`."""
+    return f"{sf_dir}/{table}.parquet"
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in TABLES:
         raise ValueError(f"unknown table {table!r}; expected one of {TABLES}")
     _ensure_utc(spark)
     if table == "events":
-        return _load_events(spark, f"{sf_dir}/{table}.parquet")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        return _load_events(spark, table_path(sf_dir, table))
+    df = spark.read.parquet(table_path(sf_dir, table))
     if table == "documents":
         # Ingestion contract: text is never NULL downstream. On a real lake
         # null text rows are routine, and Spark's size(NULL) = -1 would

@@ -5987,7 +5987,7 @@ def q_event_dau_wau_hll(spark: SparkSession, sf: str) -> DataFrame:
     branch) — fully reproduced in the DuckDB oracle, so the whole
     windowed sketch is hash-checked, not rows-only."""
     from ..functions.hashing import portable_hash
-    from .textstats import HLL_ALPHA, HLL_M, HLL_P, _HLL_RHO_CAP
+    from .textstats import HLL_ALPHA, HLL_M, _HLL_RHO_CAP, _hll_registers
 
     ev = load(spark, sf, "events")
     ud = (
@@ -6004,19 +6004,8 @@ def q_event_dau_wau_hll(spark: SparkSession, sf: str) -> DataFrame:
         # exchanges, and the two pins only added materialization jobs per
         # run (the batch-6 pin-vs-ReusedExchange rule).
     )
-    daily_regs = (
-        ud.select("day", portable_hash(F.col("user_id").cast("string")).alias("h"))
-        .select(
-            "day",
-            F.expr(f"h % {HLL_M}").alias("bucket"),
-            F.expr(
-                f"CASE WHEN shiftright(h, {HLL_P}) = 0 THEN {_HLL_RHO_CAP} "
-                f"ELSE length(bin(shiftright(h, {HLL_P}) & -shiftright(h, {HLL_P}))) END"
-            ).alias("rho"),
-        )
-        .groupBy("day", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-        # (unpinned, see ud note above)
+    daily_regs = _hll_registers(  # (unpinned, see ud note above)
+        ud.select("day", portable_hash(F.col("user_id").cast("string")).alias("h")), "day"
     )
 
     def estimate(regs: DataFrame, out: str) -> DataFrame:

@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..cache import pinned
-from ..io import load
+from ..cache import memo, pinned
+from ..io import load, table_path
 
 DIM = 64
 N_PLANES = 4
@@ -110,6 +110,13 @@ def _nonzero(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("e"),
     ).where(F.expr("exists(e, x -> x <> 0.0d)"))
+
+
+def _vectors(spark: SparkSession, sf: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, e) of the `embeddings` table, `e` as array<double>."""
+    return load(spark, sf, "embeddings").select(
+        "vec_id", *cols, F.col("embedding").cast("array<double>").alias("e")
+    )
 
 
 def _nonzero_embeddings(spark: SparkSession, sf: str) -> DataFrame:
@@ -255,8 +262,7 @@ def q_ann_mmr_topk(spark: SparkSession, sf: str) -> DataFrame:
     corpus again, and the per-query fold work is K * C * K dot products of
     kilobyte arrays."""
     emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        _vectors(spark, sf)
         .withColumn("nrm", _norm("e"))
         .where(F.expr("exists(e, x -> x <> 0.0d)"))
     )
@@ -349,10 +355,7 @@ def _with_bucket(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
 def q_ann_lsh_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """LSH bucket assignment + per-bucket occupancy (the partition layout a
     100 TB corpus would be written under)."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
-    b = _with_bucket(emb)
+    b = _with_bucket(_vectors(spark, sf, "label"))
     return b.groupBy("bucket").agg(
         F.count("*").alias("n_vectors"),
         F.countDistinct("label").alias("n_labels"),
@@ -419,11 +422,7 @@ def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
     query side by N_PLANES+1; the corpus keeps exactly one bucket id and is
     still touched via equi-join on it — recall rises without re-bucketing
     or corpus blow-up."""
-    emb = _with_bucket(
-        load(spark, sf, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    ).withColumn("nrm", _norm("e")).where(
+    emb = _with_bucket(_vectors(spark, sf)).withColumn("nrm", _norm("e")).where(
         F.expr("exists(e, x -> x <> 0.0d)")  # all-zero vector: cosine undefined, exclude
         # (exists short-circuits; `nrm > 0` would re-run the 64-term norm fold per row)
     )
@@ -491,9 +490,7 @@ def q_ann_lsh_multitable_topk(spark: SparkSession, sf: str) -> DataFrame:
     candidate generation is one equi-join on the composite key; pairs found
     by several tables are deduped before the exact cosine rank. Corpus cost
     grows linearly in L while recall amplifies as 1-(1-p^K)^L."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     keyed = emb.select(
         "vec_id",
         "e",
@@ -552,8 +549,7 @@ def q_embedding_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     window/rank tail is unchanged — mining cost then follows the ANN scan,
     not n_queries x corpus."""
     emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", "label", F.col("embedding").cast("array<double>").alias("e"))
+        _vectors(spark, sf, "label")
         .withColumn("nrm", _norm("e"))
         # all-zero vector: cosine undefined, exclude (see q_knn_bruteforce)
         .where(F.expr("exists(e, x -> x <> 0.0d)"))
@@ -682,9 +678,7 @@ def ann_ivf_topk(
 
 def q_embedding_label_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Per-label vector stats: count, mean L2 norm, mean of the first dim."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf, "label")
     norm = F.sqrt(_dot("e", "e"))
     return emb.groupBy("label").agg(
         F.count("*").alias("n_vectors"),
@@ -774,12 +768,6 @@ ADC_M = 32
 ADC_SUB = DIM // ADC_M
 ADC_K = 64
 
-#: trained codebooks per (sf, geometry): training is deterministic (fixed
-#: seeds, fixed iteration budget, 6-dp rounding), so one fit serves every
-#: query and bench run in the session.
-_CW_CACHE: dict[tuple, list] = {}
-
-
 def subspace_kmeans_fit(
     base: DataFrame,
     n_sub: int,
@@ -845,27 +833,18 @@ def subspace_kmeans_fit(
     return cw
 
 
-def _fit_once(key: tuple, base, n_sub: int, sub_dim: int, k: int) -> list[list[float]]:
-    """`subspace_kmeans_fit(base(), ...)` memoized under `key` + geometry."""
-    key = (*key, n_sub, sub_dim, k, PQ_TRAIN_ITERS)
-    if key not in _CW_CACHE:
-        _CW_CACHE[key] = subspace_kmeans_fit(base(), n_sub, sub_dim, k)
-    return _CW_CACHE[key]
-
-
 def trained_codebook(
     spark: SparkSession, sf: str, n_sub: int, sub_dim: int, k: int
 ) -> list[list[float]]:
-    """Memoized codebook trained on the whole `embeddings` corpus, for one
-    PQ geometry (the PQ_M compression and ADC_M search codebooks)."""
-    return _fit_once(
-        (sf,),
-        lambda: load(spark, sf, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        ),
-        n_sub,
-        sub_dim,
-        k,
+    """Codebook trained on the whole `embeddings` corpus, for one PQ
+    geometry (the PQ_M compression and ADC_M search codebooks); training
+    is deterministic (fixed seeds, fixed iteration budget, 6-dp rounding),
+    so one fit per input (`memo`) serves every query in the session."""
+    return memo(
+        spark,
+        ("codebook", n_sub, sub_dim, k),
+        [table_path(sf, "embeddings")],
+        lambda: subspace_kmeans_fit(_vectors(spark, sf), n_sub, sub_dim, k),
     )
 
 
@@ -877,8 +856,11 @@ def _coarse_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
     would stay a zero-norm centroid, whose cosine is 0/0 — Spark's ANSI
     divide raises where DuckDB ranks the NULL last. The oracle's
     `_ivf_cent_ctes` trains on the same nonzero base."""
-    return _fit_once(
-        (sf, "coarse"), lambda: _nonzero_embeddings(spark, sf), 1, DIM, N_CENTROIDS
+    return memo(
+        spark,
+        ("coarse",),
+        [table_path(sf, "embeddings")],
+        lambda: subspace_kmeans_fit(_nonzero_embeddings(spark, sf), 1, DIM, N_CENTROIDS),
     )
 
 
@@ -932,9 +914,7 @@ def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
     NOT a plan or code regression — training is memoized outside the
     measured runs; the r6 number was ambient-load contention (same class
     as the r5 agg_count_distinct blip, 5ca86c1)."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     cw = trained_codebook(spark, sf, PQ_M, PQ_SUB_DIM, PQ_K)
     if not cw:  # empty corpus: no codebook and no rows (see _no_codes)
         return emb.select(
@@ -1209,7 +1189,7 @@ def _no_codes() -> F.Column:
 def _pq_codes(
     c: DataFrame, codebook: list[list[float]], n_sub: int, sub_dim: int
 ) -> DataFrame:
-    """(vec_id, e, codes) for ANY (vec_id, e) frame — the vectorized Arrow
+    """(vec_id, codes) for ANY (vec_id, e) frame — the vectorized Arrow
     encode (`_codes_kernel`, float contract on `_encode`). Why Python: the
     encode is an argmin over n_sub x K codeword distances per row, which a
     higher-order-function fold runs interpreted (CodegenFallback, ~1.8
@@ -1217,11 +1197,11 @@ def _pq_codes(
     node also materializes codes, so the encode is never collapsed into
     (and re-run per pair of) the ADC join."""
     if not codebook:
-        return c.select("vec_id", "e", _no_codes())
+        return c.select("vec_id", _no_codes())
     id_t = c.schema["vec_id"].dataType.simpleString()
     return c.mapInPandas(
-        _codes_kernel(codebook, ["vec_id", "e"], n_sub, sub_dim),
-        f"vec_id {id_t}, e array<double>, codes array<int>",
+        _codes_kernel(codebook, ["vec_id"], n_sub, sub_dim),
+        f"vec_id {id_t}, codes array<int>",
     )
 
 
@@ -1254,7 +1234,7 @@ def _adc_rank(
 ) -> DataFrame:
     """ADC score and rank: each (query_id, qe[, on]) row of `q` computes its
     n_sub x K distance LUT against the broadcast codebook, every candidate
-    row of `codes` — all of (vec_id, e, codes) flat, or the (vec_id,
+    row of `codes` — all of (vec_id, codes) flat, or the (vec_id,
     `on`, codes) rows sharing the query row's `on` list — scores
     adc_dist = the sum of the n_sub LUT entries its codes select, rounded
     to 4 dp, and `_top` keeps each query's n best in `rank` (top-k, or the
@@ -1274,7 +1254,7 @@ def _adc_rank(
     if on:
         pairs = F.broadcast(lut).join(codes, on)
     else:
-        pairs = codes.select("vec_id", "codes").crossJoin(F.broadcast(lut))
+        pairs = codes.crossJoin(F.broadcast(lut))
     scored = pairs.where(F.col("query_id") != F.col("vec_id")).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -1345,9 +1325,7 @@ def q_ann_pq_adc_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     (tests/test_ann_recall.py, floor 0.9) — vs 0.73 for raw ADC. The
     codebook's distortion only has to keep the true neighbors inside the
     top-32 shortlist, not rank them."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     queries = emb.where(F.col("vec_id") < 10)
     cw = trained_codebook(spark, sf, ADC_M, ADC_SUB, ADC_K)
     shortlist = _adc_rank(
@@ -1426,8 +1404,11 @@ def _residual_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
     """ADC-geometry codebook trained on the RESIDUALS (chained training:
     coarse quantizer first, then per-subspace Lloyd over e - centroid),
     memoized."""
-    return _fit_once(
-        (sf, "resid"), lambda: _residual_corpus(spark, sf), ADC_M, ADC_SUB, ADC_K
+    return memo(
+        spark,
+        ("residual",),
+        [table_path(sf, "embeddings")],
+        lambda: subspace_kmeans_fit(_residual_corpus(spark, sf), ADC_M, ADC_SUB, ADC_K),
     )
 
 
@@ -1460,8 +1441,7 @@ def q_embedding_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB's list_dot_product). Pure map-side work — no shuffle at all;
     at 100 TB this is a single pass that cuts vector storage 4x."""
     emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", "label", F.col("embedding").cast("array<double>").alias("e"))
+        _vectors(spark, sf, "label")
         .withColumn("amax", F.array_max(F.transform("e", lambda x: F.abs(x))))
         .where(F.col("amax") > 0)
         .withColumn(
@@ -1724,9 +1704,7 @@ def q_embedding_standardize(spark: SparkSession, sf: str) -> DataFrame:
     map-side — at 100 TB this is one scan + one scan, zero data shuffle.
     mu/sd are rounded 6 before use so both engines standardize with
     identical constants (the house trainer discipline)."""
-    base = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    base = _vectors(spark, sf)
     stats = base.agg(
         *[
             F.round(F.avg(F.element_at("e", i)), 6).alias(f"m{i}")
@@ -1781,11 +1759,7 @@ def q_embedding_matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     shortlist. At 100 TB the corpus side would ride the LSH buckets
     (ann_lsh_topk) instead of the brute-force cross join — the census
     itself is unchanged."""
-    emb = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .where(F.expr("exists(e, x -> x <> 0.0d)"))
-    )
+    emb = _vectors(spark, sf).where(F.expr("exists(e, x -> x <> 0.0d)"))
     norms = [
         F.sqrt(_dot(f"slice(e, 1, {d})", f"slice(e, 1, {d})")).alias(f"n{d}")
         for d in MATRYOSHKA_DIMS
@@ -2084,8 +2058,7 @@ def q_embedding_anisotropy(spark: SparkSession, sf: str) -> DataFrame:
     array in fixed left-to-right order, identically written in the
     oracle's unrolled left-associative chain."""
     base = (
-        load(spark, sf, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        _vectors(spark, sf)
         .where(F.expr("exists(e, x -> x <> 0.0d)"))
         .select("e", _norm("e").alias("nrm"))
     )
@@ -2157,9 +2130,7 @@ def q_embedding_jl_distortion(spark: SparkSession, sf: str) -> DataFrame:
     shuffle) and cuts downstream distance math 4x; probes broadcast; the
     census is one combine-friendly groupBy. At 100 TB project once,
     write the JL_DIM sketch column, and run distance passes on it."""
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     proj = F.array(
         *[
             F.expr(

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import portable_hash, portable_hash_sql_duckdb
-from ..cache import pinned
-from ..io import load
+from ..cache import memo, pinned
+from ..io import load, table_path
 
 TOKEN_RE = "[a-zA-Z0-9]+"
 TOKENS = f"regexp_extract_all(text, '{TOKEN_RE}', 0)"
@@ -501,6 +501,24 @@ HLL_ALPHA = 0.709
 _HLL_RHO_CAP = 55
 
 
+def _hll_registers(hashed: DataFrame, *keys: str) -> DataFrame:
+    """HLL registers (*keys, bucket, m_j) of a frame with a portable hash
+    column `h`: bucket = h mod HLL_M, rho = 1-based position of the lowest
+    set bit of h >> HLL_P (_HLL_RHO_CAP when none is set), m_j = max rho."""
+    return (
+        hashed.select(
+            *keys,
+            F.expr(f"h % {HLL_M}").alias("bucket"),
+            F.expr(
+                f"CASE WHEN shiftright(h, {HLL_P}) = 0 THEN {_HLL_RHO_CAP} "
+                f"ELSE length(bin(shiftright(h, {HLL_P}) & -shiftright(h, {HLL_P}))) END"
+            ).alias("rho"),
+        )
+        .groupBy(*keys, "bucket")
+        .agg(F.max("rho").alias("m_j"))
+    )
+
+
 def q_sketch_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
     """HyperLogLog distinct-user estimate per event_type, from explicit
     integer registers — WITH the exact answer and relative error.
@@ -544,18 +562,7 @@ def hll_distinct(
     hashed = events.select(
         "event_type", portable_hash(F.col("user_id").cast("string")).alias("h")
     )
-    regs = (
-        hashed.select(
-            "event_type",
-            F.expr(f"h % {HLL_M}").alias("bucket"),
-            F.expr(
-                f"CASE WHEN shiftright(h, {HLL_P}) = 0 THEN {_HLL_RHO_CAP} "
-                f"ELSE length(bin(shiftright(h, {HLL_P}) & -shiftright(h, {HLL_P}))) END"
-            ).alias("rho"),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
+    regs = _hll_registers(hashed, "event_type")
     agg = regs.groupBy("event_type").agg(
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")).alias(
             "s_nonempty"
@@ -611,18 +618,7 @@ def q_sketch_hll_merge(spark: SparkSession, sf: str) -> DataFrame:
         F.date_trunc("day", "ts").alias("day"),
         portable_hash(F.col("user_id").cast("string")).alias("h"),
     )
-    daily_regs = (
-        hashed.select(
-            "day",
-            F.expr(f"h % {HLL_M}").alias("bucket"),
-            F.expr(
-                f"CASE WHEN shiftright(h, {HLL_P}) = 0 THEN {_HLL_RHO_CAP} "
-                f"ELSE length(bin(shiftright(h, {HLL_P}) & -shiftright(h, {HLL_P}))) END"
-            ).alias("rho"),
-        )
-        .groupBy("day", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-    )
+    daily_regs = _hll_registers(hashed, "day")
     merged = daily_regs.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
     agg = merged.agg(
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")).alias(
@@ -1253,11 +1249,6 @@ def q_bpe_first_merges(spark: SparkSession, sf: str) -> DataFrame:
     return _bpe_train(spark, sf, 2)
 
 
-#: trained merge rules per (sf, n): training is deterministic, so one run
-#: serves the trainer query, the segmenter, and every bench repetition.
-_BPE_RULES_CACHE: dict[tuple, list] = {}
-
-
 def _bpe_train(spark: SparkSession, sf: str, n_merges: int) -> DataFrame:
     return spark.createDataFrame(
         _bpe_rules(spark, sf, n_merges),
@@ -1266,10 +1257,15 @@ def _bpe_train(spark: SparkSession, sf: str, n_merges: int) -> DataFrame:
 
 
 def _bpe_rules(spark: SparkSession, sf: str, n_merges: int) -> list[tuple]:
-    key = (sf, n_merges)
-    if key not in _BPE_RULES_CACHE:
-        _BPE_RULES_CACHE[key] = _bpe_train_rules(spark, sf, n_merges)
-    return _BPE_RULES_CACHE[key]
+    """Merge rules trained on `documents`: training is deterministic, so
+    one run per input (`memo`) serves the trainer query, the segmenter,
+    and every bench repetition."""
+    return memo(
+        spark,
+        ("bpe_rules", n_merges),
+        [table_path(sf, "documents")],
+        lambda: _bpe_train_rules(spark, sf, n_merges),
+    )
 
 
 def _bpe_train_rules(spark: SparkSession, sf: str, n_merges: int) -> list[tuple]:
@@ -5345,19 +5341,7 @@ def q_sketch_hll_intersection(spark: SparkSession, sf: str) -> DataFrame:
         "user_id",
         portable_hash(F.col("user_id").cast("string")).alias("h"),
     )
-    regs = (
-        hashed.select(
-            "event_type",
-            F.expr(f"h % {HLL_M}").alias("bucket"),
-            F.expr(
-                f"CASE WHEN shiftright(h, {HLL_P}) = 0 THEN {_HLL_RHO_CAP} "
-                f"ELSE length(bin(shiftright(h, {HLL_P}) & -shiftright(h, {HLL_P}))) END"
-            ).alias("rho"),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.max("rho").alias("m_j"))
-        .transform(pinned)
-    )
+    regs = _hll_registers(hashed, "event_type").transform(pinned)
     union_regs = regs.groupBy("bucket").agg(F.max("m_j").alias("m_j")).select(
         F.lit("union").alias("set_name"), "bucket", "m_j"
     )

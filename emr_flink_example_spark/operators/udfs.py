@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 
 from ..io import load
+from .similarity import _vectors
 
 
 def _l2_norm_impl(vecs: pd.Series) -> pd.Series:
@@ -39,9 +40,7 @@ def q_udf_pandas_norm(spark: SparkSession, sf: str) -> DataFrame:
     sqrt(aggregate(...)) — used by similarity.py; this exercises the Arrow
     path)."""
     l2_norm = pandas_udf(_l2_norm_impl, "double")
-    emb = load(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf)
     return emb.select("vec_id", F.round(l2_norm("e"), 6).alias("l2_norm"))
 
 

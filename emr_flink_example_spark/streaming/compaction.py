@@ -28,6 +28,7 @@ same protocol runs on local disk (`LocalFS`) or any Hadoop FileSystem
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import posixpath
 from dataclasses import dataclass
@@ -77,11 +78,12 @@ def publish_then_retire(
        each output file is renamed into `target_dir` as
        ``<own_prefix><i:05d>.parquet``. Same-prefix files the renames did
        not overwrite (a crashed attempt's extras) are removed.
-    2. Marker: ``_compact-<gen>.committed`` (listing the published names)
-       is written only after every file is published.
-    3. Retire: only after the marker, `retire_dirs` and every data file
-       in `target_dir` not named `own_prefix*` are removed, then the
-       marker itself.
+    2. Marker: ``_compact-<gen>.committed`` (JSON: the names of the
+       `sources` inside `target_dir`) is written
+       only after every file is published.
+    3. Retire: only after the marker, `retire_dirs` and the sources the
+       marker lists are removed, then the marker itself. Files that
+       arrived after the sources were listed stay.
 
     `sources` must exclude this generation's own ``own_prefix*`` files:
     a crashed attempt's output is stale state, never input. Older
@@ -118,7 +120,9 @@ def publish_then_retire(
         for f in fs.list_files(target_dir):
             if f.startswith(own_prefix) and f not in published:
                 fs.remove(fs.join(target_dir, f))
-        fs.write_text_atomic(marker, "\n".join(published))
+        src = set(sources)
+        covered = [f for f in fs.list_files(target_dir) if fs.join(target_dir, f) in src]
+        fs.write_text_atomic(marker, json.dumps({"sources": covered}))
     _retire(fs, target_dir, own_prefix, marker, retire_dirs)
     return [f for f in fs.list_files(target_dir) if f.startswith(own_prefix)]
 
@@ -130,11 +134,15 @@ def _retire(
     marker: str,
     retire_dirs: Sequence[str] = (),
 ) -> None:
-    """Step 3 of `publish_then_retire`; safe to re-run after a crash."""
+    """Step 3 of `publish_then_retire`; safe to re-run after a crash. A
+    marker of the older format lists only the published names; it covers
+    every data file in `target_dir` outside the generation."""
     for d in retire_dirs:
         fs.rmtree(d)
-    for f in fs.list_files(target_dir):
-        if not f.startswith((".", "_", own_prefix)):
+    present = {f for f in fs.list_files(target_dir) if not f.startswith((".", "_", own_prefix))}
+    text = fs.read_text(marker)
+    for f in json.loads(text)["sources"] if text.startswith("{") else sorted(present):
+        if f in present:
             fs.remove(fs.join(target_dir, f))
     fs.remove(marker)
 
@@ -247,10 +255,8 @@ def compact_path(
     first finishes any ``_compact-<gen>.committed`` marker a crashed run
     left — folding that generation's output and its sources together
     would double the rows — then compacts as generation `_offline_gen`.
-
-    Offline: run it, and rerun it after a crash, while no stream writes
-    the table. Finishing a marker removes every file outside its
-    generation, so rows appended after the crash would go with them."""
+    Finishing a marker removes only the sources it lists, so rows
+    appended to the partition after the crash stay."""
     fs = fs or LocalFS()
     stats = []
     for d in _leaf_parquet_dirs(fs, root):

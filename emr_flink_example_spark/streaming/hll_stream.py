@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.hashing import portable_hash
-from ..operators.textstats import HLL_ALPHA, HLL_M, HLL_P, _HLL_RHO_CAP
+from ..operators.textstats import HLL_ALPHA, HLL_M, _HLL_RHO_CAP, _hll_registers
 from .compaction import compact_batch_dirs, compaction_due, write_batch
 from .fsio import FSIO, fs_for_path
 
@@ -52,18 +52,7 @@ class StreamingHllSketch:
 
     def _batch_registers(self, batch_df: DataFrame) -> DataFrame:
         h = portable_hash(F.col(self.key_col).cast("string"))
-        return (
-            batch_df.select(h.alias("h"))
-            .select(
-                F.expr(f"h % {HLL_M}").alias("bucket"),
-                F.expr(
-                    f"CASE WHEN shiftright(h, {HLL_P}) = 0 THEN {_HLL_RHO_CAP} "
-                    f"ELSE length(bin(shiftright(h, {HLL_P}) & -shiftright(h, {HLL_P}))) END"
-                ).alias("rho"),
-            )
-            .groupBy("bucket")
-            .agg(F.max("rho").alias("m_j"))
-        )
+        return _hll_registers(batch_df.select(h.alias("h")))
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

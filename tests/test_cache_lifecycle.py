@@ -12,7 +12,7 @@ from conftest import SF_DIR
 
 
 def _registry(spark):
-    return cache._PINNED.get(spark.sparkContext.applicationId, [])
+    return cache._state(spark).pins
 
 
 def test_pins_register_and_drain_at_catalog_boundary(spark):

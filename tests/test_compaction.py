@@ -8,6 +8,8 @@ import json
 import os
 import pathlib
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,6 +75,50 @@ def test_compact_path_crash_before_rename_loses_no_rows(spark, tmp_path):
     stats = compact_path(spark, out, fs=fs)
     assert all(s.files_after == 1 for s in stats)
     assert sorted(r.id for r in spark.read.parquet(out).collect()) == before
+
+
+def _ids(spark, path: str) -> list[int]:
+    return sorted(r.id for r in spark.read.parquet(path).collect())
+
+
+def test_finishing_a_crashed_marker_keeps_later_rows(spark, tmp_path, monkeypatch):
+    """compact_path finishing a crashed run's ``_compact-<gen>.committed``
+    marker removes only the sources that generation covered: a file
+    appended to the partition after the crash keeps its rows."""
+    from emr_flink_example_spark.streaming import compaction
+
+    tbl = tmp_path / "tbl"
+    d = tbl / "part=a"
+    d.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [0, 1]}), d / "batch-3-00000.parquet")
+    pq.write_table(pa.table({"id": [2]}), d / "batch-4-00000.parquet")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after the marker")
+
+    monkeypatch.setattr(compaction, "_retire", crash)
+    with pytest.raises(RuntimeError, match="after the marker"):
+        compaction.compact_partition_atomic(spark, str(d), 8)
+    monkeypatch.undo()
+    assert {"compacted-8-00000.parquet", "_compact-8.committed"} <= set(os.listdir(d))
+    pq.write_table(pa.table({"id": [12]}), d / "batch-12-00000.parquet")
+    compact_path(spark, str(tbl))
+    assert _ids(spark, str(tbl)) == [0, 1, 2, 12]
+
+
+def test_marker_listing_published_names_still_finishes(spark, tmp_path):
+    """A marker in the older format (the published names, one a line)
+    covers every data file of the partition outside its generation."""
+    tbl = tmp_path / "tbl"
+    d = tbl / "part=a"
+    d.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [0, 1, 2]}), d / "compacted-8-00000.parquet")
+    pq.write_table(pa.table({"id": [0, 1]}), d / "batch-3-00000.parquet")
+    pq.write_table(pa.table({"id": [2]}), d / "batch-4-00000.parquet")
+    (d / "_compact-8.committed").write_text("compacted-8-00000.parquet")
+    compact_path(spark, str(tbl))
+    assert os.listdir(d) == ["compacted-8-00000.parquet"]
+    assert _ids(spark, str(tbl)) == [0, 1, 2]
 
 
 def test_one_publish_then_retire_implementation():

@@ -118,17 +118,19 @@ def test_matryoshka_recall_matches_left_to_right_fold_replication(spark):
 
 
 def test_simhash_pairs_cache_evicts_stale_applications(spark):
-    """ADVICE r8: the session-memoized pair-stream cache must not pin
-    entries from stopped SparkContexts for the process lifetime — an
-    insert under the live application evicts every other application's
-    keys (and never the live application's own other-sf entries)."""
+    """ADVICE r8: the session memo registry must not pin entries from
+    stopped SparkContexts for the process lifetime — a memo insert under
+    the live application evicts every other application's state (and
+    never the live application's own other-sf entries)."""
+    from emr_flink_example_spark import cache
     from emr_flink_example_spark.operators import dedup as D
 
     app = spark.sparkContext.applicationId
     live = D._simhash_pairs_materialized(spark, SF_DIR)
-    D._SIMHASH_PAIRS_CACHE[("dead-app-1234", "/some/sf")] = live  # stand-in
+    cache._STATE["dead-app-1234"] = cache._AppState(memos={"/some/sf": ((), live)})  # stand-in
     # a NEW key insert under the live app evicts the dead application's
     other = D._simhash_pairs_materialized(spark, "/root/testdata/sf0.01")
     assert other is not None
-    assert all(k[0] == app for k in D._SIMHASH_PAIRS_CACHE)
-    assert (app, SF_DIR) in D._SIMHASH_PAIRS_CACHE  # live entries survive
+    assert all(k == app for k in cache._STATE)
+    live_key = (("simhash_pairs",), f"file:{SF_DIR}/documents.parquet")
+    assert live_key in cache._STATE[app].memos  # live entries survive

@@ -241,6 +241,16 @@ def test_ivf_assignment_runs_in_arrow_kernel(spark):
     assert "aggregate(" not in corpus_side and "zip_with(" not in corpus_side
 
 
+@pytest.mark.parametrize("name", ["ann_pq_adc_topk", "ann_pq_adc_rerank_topk"])
+def test_flat_pq_encode_returns_no_vectors(spark, name):
+    """The flat ADC encode kernel takes (vec_id, e) and returns only
+    (vec_id, codes): the corpus vectors cross the Arrow boundary once."""
+    import re
+
+    outs = re.findall(r"MapInPandas \S+\(.*?\)#\d+, \[(.*?)\]", _plan(spark, name))
+    assert outs and all(re.sub(r"#\d+L?", "", o) == "vec_id, codes" for o in outs), outs
+
+
 def test_multitable_lsh_broadcasts_queries(spark):
     """Multi-table LSH keeps the probe side broadcast; the corpus is only
     equi-joined on (table, bucket) — never cross-joined."""

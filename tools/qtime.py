@@ -45,12 +45,11 @@ def main() -> None:
     queries = catalog.all_queries(managed=False)
 
     # warmup: same recipe as bench.py (one full query + per-table counts)
-    from emr_flink_example_spark.io import load
+    from emr_flink_example_spark.io import TABLES, load
     try:
         queries["pricing_summary_q1"](spark, args.sf).write.mode(
             "overwrite").format("noop").save()
-        for t in ("lineitem", "orders", "customer", "supplier", "nation",
-                  "region", "part", "events", "documents", "embeddings"):
+        for t in TABLES:
             load(spark, args.sf, t).count()
     except Exception:
         pass

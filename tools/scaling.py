@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
 from emr_flink_example_spark import cache  # noqa: E402
-from emr_flink_example_spark.io import load  # noqa: E402
+from emr_flink_example_spark.io import TABLES, load  # noqa: E402
 from emr_flink_example_spark.plans import catalog  # noqa: E402
 from emr_flink_example_spark.session import local_test_session  # noqa: E402
 
@@ -44,12 +44,6 @@ SFS = ("0.001", "0.01", "0.1")
 OVERHEAD_FLOOR_SEC = 1.0
 NOISE_FLOOR_SEC = 0.08
 SUPER_LINEAR_AT = 1.3
-
-TABLES = (
-    "lineitem", "orders", "customer", "supplier", "nation", "region",
-    "part", "events", "documents", "embeddings",
-)
-
 
 def _run_once(spark, queries, name: str, sf_dir: str) -> float:
     if name == "curate_for_training":
