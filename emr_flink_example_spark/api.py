@@ -91,9 +91,10 @@ Determinism contract: nothing here uses an RNG — every sampling/split
 decision is a salted portable hash of row content, so results are
 identical across runs, partitionings, and engines.
 
-Cache contract: ``curation_gates`` pins its flags frame via the
-``cache.pinned`` registry; call ``emr_flink_example_spark.cache.
-unpersist_all(spark)`` after consuming its outputs (the query catalog
+Cache contract: ``curation_gates`` pins its per-doc flags frame and the
+tokenized corpus via the ``cache.pinned`` registry and returns them as
+its third value; unpersist those, or call ``emr_flink_example_spark.cache.
+unpersist_all(spark)``, after consuming its outputs (the query catalog
 does this automatically at the next catalog boundary).
 """
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable, Sequence, TypeVar
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
@@ -73,7 +74,9 @@ def _files(spark: SparkSession, path: str) -> tuple[str, tuple]:
     file under it), listed through Hadoop's FileSystem so local, HDFS and
     S3 paths list alike. A missing path lists no files."""
     sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    # the class by name: `sc._jvm.org.apache...` resolves it one package
+    # per py4j round trip, ~1.3 ms a call, on every memo lookup
+    p = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
     fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
     root = fs.makeQualified(p)
     prefix = root.toString()

@@ -32,9 +32,11 @@ from pyspark.sql.window import Window
 from ..cache import pinned
 from ..io import load
 from .dedup import (
-    _pairs_from_sigs,
+    SPAN_TOKENS,
+    _band_pairs,
+    _dup_spans,
+    _span_hashes,
     minhash_signatures_from_tokens,
-    repeated_spans_from_tokens,
 )
 
 NEAR_DUP_EST_JACCARD = 0.8
@@ -86,46 +88,37 @@ def curation_gates(
     counts, the pinned frames the caller must unpersist after its terminal
     action — or via cache.unpersist_all()).
 
-    All four gates are computed as one NARROW per-doc flags frame
-    (doc_id, lang, alive-after-gate booleans) and cached once; every gate
-    count then comes out of a SINGLE conditional-sum aggregate over that
-    cache (one job, not one job per gate — the per-gate-count version ran
-    5 serialized jobs and re-derived the corpus scan chain for each;
-    restructuring measured ~2x on the composite pipeline at sf0.1).
+    Both frames the gates derive from are pinned here, because the
+    caller reads them again: caches[0] is the narrow per-doc flags frame
+    (`_gate_flags`), which the counts, the kept rows and
+    `curate_for_training`'s rebalance read; caches[1] the tokenized corpus
+    (`_tokenized`), which `curate_for_training`'s chunker reads. The five
+    counts are one aggregate over the flags (`_gate_counts`). Document
+    rows are never persisted; full rows are reconstructed ONCE by a
+    semi-join at write time."""
+    tok = pinned(_tokenized(docs, id_col=id_col, text_col=text_col, lang_col=lang_col))
+    flags = pinned(
+        _gate_flags(tok, min_quality=min_quality, min_tokens=min_tokens, max_dup_frac=max_dup_frac)
+    )
+    stats = tuple(_gate_counts(flags).first())
+    keep_ids = flags.where("alive4").select(F.col("doc_id").alias("_curation_keep_id"))
+    kept = docs.join(keep_ids, F.col(id_col) == F.col("_curation_keep_id"), "left_semi")
+    return kept, stats, [flags, tok]
 
-    r14: ONE corpus scan. The quality, boilerplate, near-dup and
-    exact-dedup gates each tokenized/scanned the corpus independently
-    (4 regexp tokenize passes + an md5 pass + a quality<->fingerprint
-    corpus self-join). Now a single pinned (doc_id[, lang], fingerprint,
-    n_tokens, quality_score, tokens) frame is built map-side in one pass
-    and every gate derives from it: the span and shingle streams read the
-    cached token arrays (the cache replaces their repartition barriers),
-    q_ok and the fingerprint are already columns (the corpus self-join is
-    gone), and `curate_for_training`'s chunker reuses the same arrays.
-    The cache holds the tokenized corpus — strictly smaller than the
-    8-token span stream the boilerplate gate already pinned, and
-    MEMORY_AND_DISK like every other pin, so at 100 TB it spills rather
-    than evicts.
 
-    Gate semantics (identical to the sequential formulation, and verified
-    against the DuckDB oracle by `curation_gate_stats`):
-      alive2 = passed quality AND not boilerplate
-      alive3 = alive2 AND doc_id == min(doc_id) among alive2 docs sharing
-               the content fingerprint (exact-dedup keeper, via a window
-               over the fingerprint — a 40-byte-per-row shuffle, never the
-               document text)
-      alive4 = alive3 AND not near-dup-dropped (MinHash-LSH pair, larger id)
-
-    Document rows are never persisted; full rows are reconstructed ONCE by
-    a semi-join at write time. The caller must unpersist the returned
-    frames after its terminal action (caches[0] is the flags frame;
-    caches[1] the tokenized corpus, which `curate_for_training` reads)."""
+def _tokenized(
+    docs: DataFrame, *, id_col: str, text_col: str, lang_col: str | None
+) -> DataFrame:
+    """(doc_id[, lang], fingerprint, n_tokens, quality_score, tokens): every
+    per-doc input of the four gates, built map-side in ONE pass over the
+    corpus (one tokenize: the quality columns, the span and shingle
+    streams and `curate_for_training`'s chunker all read these tokens)."""
     from .textstats import TOKENS, quality_gate_cols
 
     lang_cols = [F.col(lang_col).alias("lang")] if lang_col is not None else []
     lang_out = ["lang"] if lang_col is not None else []
     n_tokens, quality_score = quality_gate_cols()
-    tok = (
+    return (
         docs.select(
             F.col(id_col).alias("doc_id"),
             *lang_cols,
@@ -140,50 +133,96 @@ def curation_gates(
             quality_score.alias("quality_score"),
             "tokens",
         )
-        .transform(pinned)
     )
+
+
+def _gate_flags(
+    tok: DataFrame, *, min_quality: float, min_tokens: int, max_dup_frac: float
+) -> DataFrame:
+    """The NARROW per-doc gate flags over a `_tokenized` frame: (doc_id[,
+    lang], q_ok, alive2, alive3, alive4 — alive after each gate).
+
+    Gate semantics (identical to the sequential formulation, and verified
+    against the DuckDB oracle by `curation_gate_stats`):
+      alive2 = passed quality AND not boilerplate (dup_frac, the share of
+               the doc's spans duplicated in another doc, > max_dup_frac)
+      alive3 = alive2 AND doc_id == min(doc_id) among alive2 docs sharing
+               the content fingerprint (exact-dedup keeper, via a window
+               over the fingerprint — a 40-byte-per-row shuffle, never the
+               document text)
+      alive4 = alive3 AND not near-dup-dropped (MinHash-LSH pair with
+               est_jaccard >= NEAR_DUP_EST_JACCARD, larger id)
+
+    Shape: the boilerplate and near-dup evidence — one row per duplicated
+    span, one per dropping pair (est_jaccard is a function of the pair, so
+    pairs are filtered before any dedup) — is unioned with the doc rows
+    and grouped ONCE by doc_id (partial aggregation collapses a doc's
+    evidence map-side), so both kinds of evidence reach their docs in one
+    shuffle. Each doc row comes back out of its group unchanged; rows that
+    share an id share that id's evidence, and rows with a null id get
+    none. The gate-count query runs in 10 Spark jobs at sf0.001, the
+    parquet footer read included."""
+    lang_out = ["lang"] if "lang" in tok.columns else []
     q_ok = (F.col("quality_score") >= min_quality) & (F.col("n_tokens") >= min_tokens)
     toks = tok.select("doc_id", "tokens")
-    boiler = (
-        repeated_spans_from_tokens(toks)
-        .where(F.col("dup_frac") > max_dup_frac)
-        .select("doc_id")
-        .withColumn("is_boiler", F.lit(True))
-    )
     near = (
-        _pairs_from_sigs(minhash_signatures_from_tokens(toks))
+        _band_pairs(minhash_signatures_from_tokens(toks))
         .where(F.col("est_jaccard") >= NEAR_DUP_EST_JACCARD)
         .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-        .withColumn("is_near_dup", F.lit(True))
     )
+    evidence = (
+        _dup_spans(_span_hashes(toks))
+        .select("doc_id", F.lit(1).alias("n_dup"), F.lit(False).alias("near"))
+        .unionByName(near.select("doc_id", F.lit(0).alias("n_dup"), F.lit(True).alias("near")))
+        .where(F.col("doc_id").isNotNull())
+    )
+    rows = tok.select(
+        "doc_id",
+        F.struct(
+            *lang_out,
+            "fingerprint",
+            q_ok.alias("q_ok"),
+            (F.col("n_tokens") - SPAN_TOKENS + 1).alias("n_spans"),
+        ).alias("row"),
+        F.lit(0).alias("n_dup"),
+        F.lit(False).alias("near"),
+    )
+    per_doc = (
+        rows.unionByName(evidence, allowMissingColumns=True)
+        .groupBy("doc_id")
+        .agg(
+            F.collect_list("row").alias("rows"),
+            F.sum("n_dup").alias("n_dup"),
+            F.max("near").alias("near"),
+        )
+        .select("doc_id", F.inline("rows"), "n_dup", "near")
+    )
+    boiler = F.when(
+        F.col("n_dup") > 0, F.round(F.col("n_dup") / F.col("n_spans"), 6) > max_dup_frac
+    ).otherwise(False)
     w_fp = Window.partitionBy("fingerprint")
-    flags = (
-        tok.select("doc_id", *lang_out, "fingerprint", q_ok.alias("q_ok"))
-        .join(boiler, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .withColumn("alive2", F.col("q_ok") & F.col("is_boiler").isNull())
+    return (
+        per_doc.withColumn("alive2", F.col("q_ok") & ~boiler)
         .withColumn(
             "keeper_id",
             F.min(F.when(F.col("alive2"), F.col("doc_id"))).over(w_fp),
         )
         .withColumn("alive3", F.col("alive2") & (F.col("doc_id") == F.col("keeper_id")))
-        .withColumn("alive4", F.col("alive3") & F.col("is_near_dup").isNull())
+        .withColumn("alive4", F.col("alive3") & ~F.col("near"))
         .select("doc_id", *lang_out, "q_ok", "alive2", "alive3", "alive4")
-        .transform(pinned)
     )
-    c = flags.agg(
-        F.count("*").alias("n_input"),
-        F.sum(F.col("q_ok").cast("long")).alias("n_quality"),
-        F.sum(F.col("alive2").cast("long")).alias("n_boiler"),
-        F.sum(F.col("alive3").cast("long")).alias("n_exact"),
-        F.sum(F.col("alive4").cast("long")).alias("n_near"),
-    ).first()
 
-    keep_ids = flags.where("alive4").select(F.col("doc_id").alias("_curation_keep_id"))
-    kept = docs.join(keep_ids, F.col(id_col) == F.col("_curation_keep_id"), "left_semi")
-    stats = (c["n_input"], c["n_quality"], c["n_boiler"], c["n_exact"], c["n_near"])
-    return kept, stats, [flags, tok]
+
+def _gate_counts(flags: DataFrame) -> DataFrame:
+    """The five gate counts as one lazy row: one conditional-sum aggregate
+    over the flags, so all five cost one scan of them."""
+    return flags.agg(
+        F.count("*").alias("n_input"),
+        F.sum(F.col("q_ok").cast("long")).alias("n_after_quality"),
+        F.sum(F.col("alive2").cast("long")).alias("n_after_boilerplate"),
+        F.sum(F.col("alive3").cast("long")).alias("n_after_exact_dedup"),
+        F.sum(F.col("alive4").cast("long")).alias("n_after_near_dedup"),
+    )
 
 
 def q_curation_gate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,17 +231,20 @@ def q_curation_gate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-dedup -> near-dup filter chain (the write-bearing pipelines
     `curate_documents` / `curate_for_training` share the exact same gates
     via `_curation_gates`, so a green row here value-checks their whole
-    filtering semantics against DuckDB, not just each stage in isolation)."""
-    kept, stats, caches = _curation_gates(
-        spark, sf_dir, MIN_QUALITY, MIN_TOKENS, MAX_DUP_FRAC
+    filtering semantics against DuckDB, not just each stage in isolation).
+
+    The row is lazy, so the caller's action is the only one, and nothing
+    is pinned: each frame is read once, except the tokenized corpus and
+    the span stream, whose readers each re-derive them (measured faster
+    than pinning both at sf0.01 and level at sf0.1: a pin costs a job per
+    reader)."""
+    tok = _tokenized(
+        load(spark, sf_dir, "documents"), id_col="doc_id", text_col="text", lang_col="lang"
     )
-    for c in caches:  # counts are eager; nothing downstream reads the caches
-        c.unpersist()
-    n_input, n_quality, n_boiler, n_exact, n_near = stats
-    return spark.createDataFrame(
-        [(n_input, n_quality, n_boiler, n_exact, n_near)],
-        "n_input bigint, n_after_quality bigint, n_after_boilerplate bigint,"
-        " n_after_exact_dedup bigint, n_after_near_dedup bigint",
+    return _gate_counts(
+        _gate_flags(
+            tok, min_quality=MIN_QUALITY, min_tokens=MIN_TOKENS, max_dup_frac=MAX_DUP_FRAC
+        )
     )
 
 

@@ -131,9 +131,10 @@ def q_dedup_repeated_spans(spark: SparkSession, sf: str) -> DataFrame:
     _shingled_docs), explodes span starts, and hashes each window (md5 of
     the space-joined slice — string+md5 measured faster than integer Horner
     shingles, see minhash notes). The span stream is persisted; the
-    duplicated-hash set derives from it by a combine-friendly
-    countDistinct(doc_id) aggregation (no skewed single task: partial
-    distinct collapses map-side) and is semi-joined back. A span shared by
+    duplicated-hash set derives from it by a combine-friendly per-hash
+    min(doc_id) < max(doc_id) aggregation (no skewed single task: partial
+    aggregates collapse map-side, and unlike countDistinct it needs one
+    exchange, not two) and is semi-joined back. A span shared by
     millions of docs skews its join key; AQE skew-join splits it, and the
     semi-join output is bounded by the span stream itself. Output is
     linear in total tokens throughout — never pairwise."""
@@ -156,37 +157,11 @@ def repeated_spans(
 
 
 def repeated_spans_from_tokens(toks: DataFrame) -> DataFrame:
-    """`repeated_spans` over a MATERIALIZED (doc_id, tokens) frame — the
-    fused curation gate feeds its pinned tokenized corpus here, so the
-    cache (not a fresh tokenize + repartition barrier) is what stops
-    Catalyst collapsing the tokenize into the span explode's lambda."""
-    spans = (
-        toks.where(F.size("tokens") >= SPAN_TOKENS)
-        .select(
-            "doc_id",
-            (F.size("tokens") - SPAN_TOKENS + 1).alias("n_spans"),
-            "tokens",
-            F.explode(
-                F.expr(f"sequence(1, size(tokens) - {SPAN_TOKENS} + 1)")
-            ).alias("start"),
-        )
-        .select(
-            "doc_id",
-            "n_spans",
-            F.md5(
-                F.array_join(F.expr(f"slice(tokens, start, {SPAN_TOKENS})"), " ")
-            ).alias("h"),
-        )
-        .transform(pinned)
-    )
-    dup = (
-        spans.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") >= 2)
-        .select("h")
-    )
+    """`repeated_spans` over a MATERIALIZED (doc_id, tokens) frame (a
+    cache or a repartition barrier is what stops Catalyst collapsing the
+    tokenize into the span explode's lambda)."""
     return (
-        spans.join(dup, "h", "left_semi")
+        _dup_spans(_span_hashes(toks).transform(pinned))
         .groupBy("doc_id", "n_spans")
         .agg(F.count("*").alias("n_dup_spans"))
         .select(
@@ -196,6 +171,38 @@ def repeated_spans_from_tokens(toks: DataFrame) -> DataFrame:
             F.round(F.col("n_dup_spans") / F.col("n_spans"), 6).alias("dup_frac"),
         )
     )
+
+
+def _span_hashes(toks: DataFrame) -> DataFrame:
+    """(doc_id, n_spans, h): one row per SPAN_TOKENS-token window of each
+    (doc_id, tokens) row, h the md5 of the space-joined window."""
+    return toks.where(F.size("tokens") >= SPAN_TOKENS).select(
+        "doc_id",
+        (F.size("tokens") - SPAN_TOKENS + 1).alias("n_spans"),
+        "tokens",
+        F.explode(
+            F.expr(f"sequence(1, size(tokens) - {SPAN_TOKENS} + 1)")
+        ).alias("start"),
+    ).select(
+        "doc_id",
+        "n_spans",
+        F.md5(
+            F.array_join(F.expr(f"slice(tokens, start, {SPAN_TOKENS})"), " ")
+        ).alias("h"),
+    )
+
+
+def _dup_spans(spans: DataFrame) -> DataFrame:
+    """The rows of `spans` whose hash occurs in >= 2 distinct docs, found
+    as min(doc_id) < max(doc_id) per hash: the same test as
+    countDistinct(doc_id) >= 2 (nulls included), one exchange fewer."""
+    dup = (
+        spans.groupBy("h")
+        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+        .where(F.col("lo") < F.col("hi"))
+        .select("h")
+    )
+    return spans.join(dup, "h", "left_semi")
 
 
 def q_dedup_span_trim(spark: SparkSession, sf: str) -> DataFrame:
@@ -213,7 +220,8 @@ def q_dedup_span_trim(spark: SparkSession, sf: str) -> DataFrame:
     text.
 
     Shape: the span stream (one tokenize pass, linear in tokens) aggregates
-    to per-hash (owner, distinct-doc count) — combine-friendly; foreign dup
+    to per-hash (owner, max doc_id) — combine-friendly, one exchange; the
+    hash is duplicated when owner < max doc_id. Foreign dup
     spans join back and collapse to ONE row per affected doc carrying the
     sorted start-position array, so the rebuild is a map-side array fold
     over the token list (positions not covered by any bad start survive,
@@ -246,8 +254,8 @@ def q_dedup_span_trim(spark: SparkSession, sf: str) -> DataFrame:
     )
     owners = (
         spans.groupBy("h")
-        .agg(F.min("doc_id").alias("owner"), F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") >= 2)
+        .agg(F.min("doc_id").alias("owner"), F.max("doc_id").alias("last"))
+        .where(F.col("owner") < F.col("last"))  # in >= 2 distinct docs
         .select("h", "owner")
     )
     bad = (
@@ -803,6 +811,15 @@ def _pairs_from_sigs(
     signature frame — the shared back end of the classic-MinHash and OPH
     tiers (geometry via `band_rows`, see `_band_buckets`); plan rationale
     in `near_duplicate_pairs`."""
+    return _band_pairs(sigs, cap=cap, band_rows=band_rows).dropDuplicates(["doc_a", "doc_b"])
+
+
+def _band_pairs(
+    sigs: DataFrame, *, cap: int = LSH_BUCKET_CAP, band_rows: int = BAND_ROWS
+) -> DataFrame:
+    """`_pairs_from_sigs` before its dedup: a pair repeats once per band
+    it collides in. est_jaccard is a function of the pair alone, so a
+    caller that filters on it may dedupe whatever it keeps instead."""
     bands = _band_buckets(sigs, band_rows)
     # Pair generation by grouping, NOT a bands-self-join: a self-join re-runs
     # the whole tokenize->shingle->minhash chain for the second side (no
@@ -836,7 +853,6 @@ def _pairs_from_sigs(
             cap=cap,
         )
         .select("p.*")
-        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 

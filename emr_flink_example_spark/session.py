@@ -13,6 +13,17 @@ Defaults are chosen for the 100 TB posture:
     UTC+8 processing time (Kafka2S3Text.scala:56); we normalize to UTC and
     expose explicit tz conversion in functions/timeutils.
   * Arrow enabled for the (rare) pandas-UDF paths.
+  * Whole-stage-codegen cache of CODEGEN_CACHE_ENTRIES (2000) generated
+    classes instead of Spark's 100 (`spark.sql.codegen.cache.maxEntries`,
+    static: it holds for the JVM's first session). Sized from compile
+    counts (`codegen_compiles`, 4 cores, a perfbench fixture at sf0.01,
+    five cold passes in one session): one pass of perfbench's llm_cold
+    ops compiled 172-173 classes (ann_ivf_topk 65, curation_gate_stats
+    80-81, cohort_retention 19, pricing_summary_q1 8), so under 100 each op
+    evicted the others' classes and every pass recompiled them all; under
+    2000 the passes after the first compile none. 2000 holds such a pass
+    about ten times over; it does not hold a whole bench.py session
+    (3,378 compiles over its 176 queries at sf0.001).
 """
 
 from __future__ import annotations
@@ -24,6 +35,9 @@ from pyspark.sql import SparkSession
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+#: generated classes kept compiled per JVM (see the module docstring)
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def default_parallelism() -> int:
@@ -105,6 +119,7 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.parquet.filterPushdown", "true")
         # custom Python data sources (sources/jsonl_source.py) implement
         # pushFilters(); the capability is gated off by default in Spark 4
@@ -129,6 +144,18 @@ def build_session(
     # reused (e.g. the driver hands us its own session).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled so far in this JVM, mean ms per compile) from
+    Spark's `CodegenMetrics` compile-time histogram. The count is exact:
+    diff two readings to count a query's compiles. The histogram keeps a
+    recency-weighted reservoir sample, so the mean, and a query's compile
+    ms taken as its compiles times the later reading's mean, are
+    approximate."""
+    t = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    h = t.METRIC_COMPILATION_TIME()
+    return h.getCount(), h.getSnapshot().getMean()
 
 
 def local_test_session(cpus: int | None = None) -> SparkSession:

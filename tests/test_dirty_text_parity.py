@@ -41,6 +41,9 @@ PARITY_SET = (
     "doc_fingerprint",
     "bm25_topk",
     "chunk_documents",
+    # the span-duplication tests of the span trim and the curation gates
+    "dedup_span_trim",
+    "curation_gate_stats",
 )
 
 

@@ -4,7 +4,8 @@ Times a named subset of catalog queries exactly the way bench.py does
 (noop sink, warm session, min-of-N) without paying for the whole headline
 sweep, and optionally dumps each query's ``explain("formatted")`` to
 ``plans/<round>/<query>_<tag>.txt`` so before/after plan evidence is committed
-alongside the timing numbers.
+alongside the timing numbers. Each run also prints the generated classes
+it compiled and, approximately, the ms they took (`session.codegen_compiles`).
 
     python tools/qtime.py [-n RUNS] [--explain TAG --round R] [--sf DIR] name [name ...]
 """
@@ -21,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from emr_flink_example_spark import cache  # noqa: E402
 from emr_flink_example_spark.plans import catalog  # noqa: E402
-from emr_flink_example_spark.session import local_test_session  # noqa: E402
+from emr_flink_example_spark.session import codegen_compiles, local_test_session  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -65,16 +66,21 @@ def main() -> None:
                 f.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
             cache.unpersist_all(spark)
-        runs = []
+        runs, compiles, compile_ms = [], [], []
         for _ in range(args.n):
             spark.sparkContext.setJobDescription(f"qtime:{name}")
+            n0, _ = codegen_compiles(spark)
             t0 = time.time()
             queries[name](spark, args.sf).write.mode(
                 "overwrite").format("noop").save()
             runs.append(round(time.time() - t0, 3))
+            n1, mean_ms = codegen_compiles(spark)
+            compiles.append(n1 - n0)
+            compile_ms.append(round((n1 - n0) * mean_ms, 1))
             cache.unpersist_all(spark)
         out[name] = {"min": min(runs), "runs": runs}
-        print(f"{min(runs):8.3f}  {name}  {runs}", flush=True)
+        print(f"{min(runs):8.3f}  {name}  {runs}  codegen_compiles {compiles}"
+              f"  codegen_ms~ {compile_ms}", flush=True)
     print(json.dumps({k: v["min"] for k, v in out.items()}))
     spark.stop()
 
