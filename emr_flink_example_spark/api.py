@@ -95,7 +95,13 @@ Cache contract: ``curation_gates`` pins its per-doc flags frame and the
 tokenized corpus via the ``cache.pinned`` registry and returns them as
 its third value; unpersist those, or call ``emr_flink_example_spark.cache.
 unpersist_all(spark)``, after consuming its outputs (the query catalog
-does this automatically at the next catalog boundary).
+does this automatically at the next catalog boundary). The catalog's
+trained models are memoized per input table by ``cache.memo``: among
+them the IVF inverted lists that ``ann_ivf_topk`` and
+``dedup_semantic_clusters`` read, built once per input, held as a local
+checkpoint, rebuilt when the table's files change and released once its
+path is gone. ``ann_ivf_topk`` over caller frames routes its corpus on
+every call.
 """
 
 from __future__ import annotations

@@ -10,9 +10,10 @@ leak InMemoryTableScans into later plans. Runners call
 persist inside their own foreachBatch call and do not route through here.
 
 Models trained or materialized once and reused across queries (codebooks,
-BPE merge rules, a checkpointed pair stream) go through ``memo``, reused
-only while the input files they were built from are unchanged: a caller
-may replace a table at the same path.
+the IVF inverted lists, BPE merge rules, a checkpointed pair stream) go
+through ``memo``, reused only while the input files they were built from
+are unchanged: a caller may replace a table at the same path, or delete
+it.
 """
 
 from __future__ import annotations
@@ -69,15 +70,20 @@ def unpersist_all(spark: SparkSession) -> int:
     return len(frames)
 
 
-def _files(spark: SparkSession, path: str) -> tuple[str, tuple]:
-    """(`path` qualified, sorted (name under it, length, mtime) of every
-    file under it), listed through Hadoop's FileSystem so local, HDFS and
-    S3 paths list alike. A missing path lists no files."""
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem of `path`, `path` as a Hadoop Path)."""
     sc = spark.sparkContext
     # the class by name: `sc._jvm.org.apache...` resolves it one package
     # per py4j round trip, ~1.3 ms a call, on every memo lookup
     p = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+def _files(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """(`path` qualified, sorted (name under it, length, mtime) of every
+    file under it), listed through Hadoop's FileSystem so local, HDFS and
+    S3 paths list alike. A missing path lists no files."""
+    fs, p = _fs(spark, path)
     root = fs.makeQualified(p)
     prefix = root.toString()
     files, todo = [], [root] if fs.exists(root) else []
@@ -89,6 +95,11 @@ def _files(spark: SparkSession, path: str) -> tuple[str, tuple]:
                 name = st.getPath().toString()[len(prefix) :]
                 files.append((name, st.getLen(), st.getModificationTime()))
     return prefix, tuple(sorted(files))
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return fs.exists(p)
 
 
 def _release(value: object) -> None:
@@ -108,7 +119,8 @@ def memo(
     """``build()``, memoized in this session under `name` (the memo's name
     and parameters) and the qualified path of each input table in
     `inputs`. The entry is rebuilt, and its old value released, once any
-    input's files differ from those listed when it was built.
+    input's files differ from those listed when it was built. Building
+    an entry releases and drops every entry whose input path is gone.
 
     The path stays in the key even though the files are checked: a copy
     (``shutil.copytree``) keeps names, lengths and mtimes, and a copy at a
@@ -122,6 +134,10 @@ def memo(
         return hit[1]
     if hit is not None:
         _release(memos.pop(key)[1])
+    # an entry whose input is gone is never looked up again (a caller's
+    # deleted copy): release it rather than hold its blocks for the session
+    for gone in [k for k in memos if not all(_exists(spark, p) for p in k[1:])]:
+        _release(memos.pop(gone)[1])
     value = build()
     memos[key] = (files, value)
     return value

@@ -1675,41 +1675,32 @@ def q_dedup_semantic_clusters(
     data. Output is the survivor map (dup -> its smallest-id shadowing
     neighbor) plus the cluster each duplicate was caught in.
 
-    Composition, not new machinery: the clusters come from the SAME
-    memoized trained centroids as the IVF tier (`_coarse_codebook` —
-    sample-bounded Lloyd, zero extra training cost here), assignment is
-    the Arrow kernel's zero-shuffle cosine argmax, and the in-cluster
-    pairwise cosine runs through `_skew_guarded_pairs` exactly like the
-    LSH-bucketed `dedup_embedding_cosine` — so a dense cluster expands as
+    Composition, not new machinery: the clusters are the IVF tier's
+    memoized inverted lists (`_coarse_lists`: the SAME trained centroids,
+    `_coarse_codebook` — sample-bounded Lloyd, zero extra training cost
+    here — and the Arrow kernel's zero-shuffle cosine argmax, run once
+    per input), and the in-cluster pairwise cosine runs through
+    `_skew_guarded_pairs` exactly like the LSH-bucketed
+    `dedup_embedding_cosine` — so a dense cluster expands as
     cap^2-bounded chunk tasks instead of a straggler. 100 TB posture: the
     paper's k scales as n/target-cluster-size; here NC is the oracle-
     stable 8, and the skew guard keeps any cluster's quadratic term
     bounded regardless. The oracle re-runs the whole chain — coarse
     k-means re-train, cosine-ranked assignment, in-cluster pairs — in
     unrolled CTEs (`_ivf_cent_ctes`), hash-green."""
-    from .similarity import (
-        _assign_only_kernel,
-        _coarse_codebook,
-        _nonzero_embeddings,
-        _norm,
-    )
+    from .similarity import _coarse_codebook, _coarse_lists, _nonzero_embeddings, _norm
 
-    emb = _nonzero_embeddings(spark, sf)
-    # r15: assignment (and the nrm the in-cluster cosines divide by) runs
-    # in ONE Arrow pass (`_assign_only_kernel`) instead of the interpreted
-    # cosine-argmax + `_norm` CodegenFallback folds per row — bit-equal
-    # by the `_assign_ids` construction (pinned in test_pq_training.py).
-    cents_cv = _coarse_codebook(spark, sf)
-    if not cents_cv:  # empty corpus: no clusters, no rows — keep the schema
+    # the lists' nrm is the kernel's bit-equal `_norm`: the in-cluster
+    # cosines divide by it. Empty corpus: no clusters, no rows — keep the
+    # schema.
+    if not _coarse_codebook(spark, sf):
+        emb = _nonzero_embeddings(spark, sf)
         assigned = emb.select(
             "vec_id", "e", _norm("e").alias("nrm"),
             F.col("vec_id").alias("cluster_id"),
         )
     else:
-        assigned = emb.mapInPandas(
-            _assign_only_kernel(cents_cv),
-            "vec_id bigint, e array<double>, nrm double, cluster_id bigint",
-        )
+        assigned = _coarse_lists(spark, sf).withColumnRenamed("centroid_id", "cluster_id")
     grouped = (
         assigned.groupBy("cluster_id")
         .agg(F.sort_array(F.collect_list(F.struct("vec_id", "e", "nrm"))).alias("members"))

@@ -125,18 +125,21 @@ def _nonzero_embeddings(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _probe(q: DataFrame, codebook: list[list[float]], n_probe: int) -> DataFrame:
-    """Centroid probe: each (vec_id, e, nrm) row of `q` joined to its
+    """Centroid probe: each (vec_id, e, nrm) row of `q` paired with its
     `n_probe` nearest coarse centroids — adds (centroid_id, cv, cvn,
     c_cos, c_rank). Cosine is the sequential `_dot` over nrm * cvn (cvn
-    per `_centroids_df`), ranked `c_cos DESC, centroid_id ASC`: the
+    the same `_norm` fold), ranked `c_cos DESC, centroid_id ASC`: the
     oracle's `ranked_c` order, and the order the corpus-side
     `_assign_ids` kernel keeps for rank 1, so a probed list holds exactly
-    the vectors routed to it. The centroids are a kilobyte broadcast; a
-    probe never shuffles the corpus."""
+    the vectors routed to it. The centroids are a kilobyte literal
+    (`_codewords_sql`) each query row expands with `inline`: no join, so
+    no broadcast job, and a probe never shuffles the corpus."""
+    cents = F.expr(_codewords_sql(codebook, "centroid_id", "cv", "bigint"))
     cos_c = _dot("e", "cv") / (F.col("nrm") * F.col("cvn"))
     wa = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("centroid_id").asc())
     return (
-        q.join(F.broadcast(_centroids_df(q.sparkSession, codebook)))
+        q.select("*", F.inline(cents))
+        .withColumn("cvn", _norm("cv"))
         .withColumn("c_cos", cos_c)
         .withColumn("c_rank", F.row_number().over(wa))
         .where(F.col("c_rank") <= n_probe)
@@ -601,24 +604,30 @@ N_PROBE = 2
 
 def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-style ANN top-3: coarse quantizer + probed inverted lists
-    (`ann_ivf_topk` over the memoized `_coarse_codebook`).
+    (`_ivf_search` over the memoized `_coarse_codebook` and
+    `_coarse_lists`). The lists are built once per input: a warm call
+    scans the materialized lists and never routes the corpus again, and
+    a replaced or new input trains and builds anew.
 
-    100 TB posture: centroids are broadcast (kilobytes), assignment is
-    embarrassingly parallel (zero corpus shuffle), and the corpus is written
-    partitioned by `centroid_id` so a probe is partition pruning, not a
-    shuffle; use NC ~ sqrt(n) so each list stays executor-sized.
+    100 TB posture: the centroids ship inside the plan (kilobytes) and
+    assignment is embarrassingly parallel (zero corpus shuffle). At that
+    scale the lists would be a written index, partitioned by
+    `centroid_id` so a probe is partition pruning, not a scan of every
+    list; that index is future work. Use NC ~ sqrt(n) so each list stays
+    executor-sized.
 
     Bench note (r6, 0.87 s -> 1.11 s at sf0.1): the expected cost of the
     trained coarse quantizer replacing the trivial smallest-vec_id stand-in
     — trained centroids spread the corpus across all 8 lists instead of
     clumping it, so the probed lists carry more (better) candidates, buying
     recall@3 0.83 -> 0.90. Accepted trade; do not re-open on bench diffs."""
-    emb = load(spark, sf, "embeddings")
-    return ann_ivf_topk(
-        emb.where(F.col("vec_id") < 10),
-        emb,
+    queries = _nonzero(load(spark, sf, "embeddings").where(F.col("vec_id") < 10))
+    return _ivf_search(
+        queries.withColumn("nrm", _norm("e")),
+        _coarse_lists(spark, sf),
+        _coarse_codebook(spark, sf),
         k=3,
-        codebook=_coarse_codebook(spark, sf),
+        n_probe=N_PROBE,
     )
 
 
@@ -635,25 +644,40 @@ def ann_ivf_topk(
 ) -> DataFrame:
     """IVF ANN top-k of each query over ANY corpus frame: a trained
     coarse quantizer (Lloyd k-means over the full vectors) buckets the
-    nonzero corpus into inverted lists via the Arrow assignment kernel
-    (`_assign_only_kernel`, zero corpus shuffle), each query probes its
-    `n_probe` nearest lists (`_probe`), and only those candidates are
-    ranked by exact cosine — (query_id, neighbor_id, nn_rank, cosine).
-    Pass a pre-trained `codebook` to skip training (the fixture shim
-    reuses the memoized one); otherwise `n_centroids` centroids train on a
-    deterministic <=100k-vector hash sample of the nonzero corpus. 100 TB
-    posture in `q_ann_ivf_topk`."""
+    nonzero corpus into inverted lists (`_ivf_lists`), each query probes
+    its `n_probe` nearest lists, and only those candidates are ranked by
+    exact cosine (`_ivf_search`) — (query_id, neighbor_id, nn_rank,
+    cosine). Pass a pre-trained `codebook` to skip training; otherwise
+    `n_centroids` centroids train on a deterministic <=100k-vector hash
+    sample of the nonzero corpus. 100 TB posture in `q_ann_ivf_topk`."""
     emb = _nonzero(corpus, id_col, vec_col)
     q = _nonzero(queries, id_col, vec_col).withColumn("nrm", _norm("e"))
     if codebook is None:
         first = emb.select(F.size("e").alias("d")).first()
         dim = first.d if first else 0
         codebook = subspace_kmeans_fit(emb, 1, dim, n_centroids) if dim else []
+    return _ivf_search(q, _ivf_lists(emb, codebook), codebook, k, n_probe)
+
+
+def _ivf_lists(emb: DataFrame, codebook: list[list[float]]) -> DataFrame:
+    """The IVF list builder: every row of the nonzero frame `emb` routed
+    to its nearest coarse centroid by the Arrow assignment kernel
+    (`_assign_only_kernel`, zero corpus shuffle) — (vec_id, e, nrm,
+    centroid_id), nrm the kernel's bit-equal `_norm`."""
     id_t = emb.schema["vec_id"].dataType.simpleString()
-    assigned = emb.mapInPandas(
+    return emb.mapInPandas(
         _assign_only_kernel(codebook),
         f"vec_id {id_t}, e array<double>, nrm double, cluster_id bigint",
     ).withColumnRenamed("cluster_id", "centroid_id")
+
+
+def _ivf_search(
+    q: DataFrame, lists: DataFrame, codebook: list[list[float]], k: int, n_probe: int
+) -> DataFrame:
+    """The IVF search stage: each (vec_id, e, nrm) query row probes its
+    `n_probe` nearest centroids (`_probe`), the probe rows are broadcast
+    into the (vec_id, e, nrm, centroid_id) `lists` on centroid_id, and
+    the candidates are ranked by exact cosine (`_cosine_rank`)."""
     probes = _probe(q, codebook, n_probe).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -663,7 +687,7 @@ def ann_ivf_topk(
     pairs = (
         F.broadcast(probes)
         .join(
-            assigned.select(
+            lists.select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("e").alias("ce"),
                 F.col("nrm").alias("cn"),
@@ -864,28 +888,57 @@ def _coarse_codebook(spark: SparkSession, sf: str) -> list[list[float]]:
     )
 
 
+def _coarse_lists(spark: SparkSession, sf: str) -> DataFrame:
+    """The IVF inverted lists of `embeddings` under `_coarse_codebook`
+    (`_ivf_lists` over the nonzero frame), built once per input and
+    materialized by localCheckpoint (`memo`): every IVF top-k call and
+    SemDeDup read the same routing. A checkpoint, not persist(): a
+    persisted frame registers with Spark's CacheManager, which would
+    substitute it into other queries' plans."""
+    return memo(
+        spark,
+        ("coarse_lists",),
+        [table_path(sf, "embeddings")],
+        lambda: _ivf_lists(
+            _nonzero_embeddings(spark, sf), _coarse_codebook(spark, sf)
+        ).localCheckpoint(),
+    )
+
+
+def _double_sql(x: float) -> str:
+    """`x` as a Spark SQL double literal that parses back to the same bits:
+    the shortest round-trip repr with the `D` suffix (-0.0 and subnormals
+    included), and a cast from the string for NaN and the infinities,
+    which have no literal form. `float` first: numpy's repr is not SQL."""
+    x = float(x)
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x in (math.inf, -math.inf):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def _codewords_sql(cw: list[list[float]], id_field: str, vec_field: str, id_type: str) -> str:
+    """`cw` as one SQL array literal of (id_field, vec_field) structs in
+    codeword-id order, typed array<struct<id_field: id_type, vec_field:
+    array<double>>> even when empty: the one renderer of a codebook into
+    a plan, so the codewords ship with the plan and no Spark job moves
+    them."""
+    rows = ", ".join(
+        f"struct({j}, array({', '.join(map(_double_sql, v))}))" for j, v in enumerate(cw)
+    )
+    t = f"array<struct<{id_field}: {id_type}, {vec_field}: array<double>>>"
+    return f"CAST(array({rows}) AS {t})"
+
+
 def _codebook_df(spark: SparkSession, cw: list[list[float]]) -> DataFrame:
     """One broadcastable row: `cw` = array of (vec_id=codeword id, e)
     structs in codeword-id order — the layout the ADC LUT iterates
-    (ascending id, so first-min ties keep the smallest id)."""
-    rows = [(j, list(v)) for j, v in enumerate(cw)]
-    return spark.createDataFrame(
-        [(rows,)], "cw array<struct<vec_id:int,e:array<double>>>"
+    (ascending id, so first-min ties keep the smallest id). An inline
+    table, so the plan holds a LocalTableScan."""
+    return spark.sql(
+        f"SELECT * FROM VALUES ({_codewords_sql(cw, 'vec_id', 'e', 'int')}) AS t(cw)"
     )
-
-
-def _centroids_df(spark: SparkSession, cw: list[list[float]]) -> DataFrame:
-    """Codebook rows as a (centroid_id, cv, cvn) frame, cvn the sequential
-    `_dot` fold + sqrt (typed-empty when the codebook is empty — the
-    empty-corpus contract)."""
-    if not cw:
-        return spark.createDataFrame(
-            [], "centroid_id bigint, cv array<double>"
-        ).withColumn("cvn", F.lit(0.0))
-    cent = spark.createDataFrame(
-        [(j, list(v)) for j, v in enumerate(cw)], "centroid_id bigint, cv array<double>"
-    )
-    return cent.withColumn("cvn", _norm("cv"))
 
 
 def q_embedding_quantize_pq(spark: SparkSession, sf: str) -> DataFrame:
@@ -1037,7 +1090,7 @@ def _codes_kernel(
 
 def _cents_tables(cents_cv: list[list[float]]):
     """(CV, cvn) numpy tables for the in-kernel coarse assignment: cvn is
-    the SAME sequential fold + sqrt as `_centroids_df`'s SQL (acc starts
+    the SAME sequential fold + sqrt as `_probe`'s `_norm` (acc starts
     0.0 and adds cv_i*cv_i in element order), computed per centroid in
     plain python so every double matches the JVM column bit-for-bit."""
     import math

@@ -66,11 +66,19 @@ IVF_ASSIGN_SQL = """
 """
 
 
+def centroids_df(spark: SparkSession, cents_cv: list[list[float]]) -> DataFrame:
+    """(centroid_id, cv, cvn) rows of the coarse centroids, cvn the
+    sequential `_norm` fold."""
+    return spark.createDataFrame(
+        [(j, list(v)) for j, v in enumerate(cents_cv)], "centroid_id bigint, cv array<double>"
+    ).withColumn("cvn", S._norm("cv"))
+
+
 def ivf_assign(emb: DataFrame, cents_cv: list[list[float]]) -> DataFrame:
     """(vec_id, e, nrm, cid) with the relational cosine-argmax assignment
     of every (vec_id, e) row against the given centroids, folded over
     them as one sorted broadcast `cents` array."""
-    cents = S._centroids_df(emb.sparkSession, cents_cv).agg(
+    cents = centroids_df(emb.sparkSession, cents_cv).agg(
         F.sort_array(F.collect_list(F.struct("centroid_id", "cv", "cvn"))).alias("cents")
     )
     return (
@@ -84,7 +92,7 @@ def residual_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """(vec_id, e) residuals e - cv of the nonzero corpus, assignment by
     `IVF_ASSIGN_SQL` and the subtract by zip_with."""
     cents_cv = S._coarse_codebook(spark, sf)
-    cent = S._centroids_df(spark, cents_cv)
+    cent = centroids_df(spark, cents_cv)
     return (
         ivf_assign(S._nonzero_embeddings(spark, sf), cents_cv)
         .join(F.broadcast(cent.select(F.col("centroid_id").alias("cid"), "cv")), "cid")

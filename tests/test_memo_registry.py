@@ -12,6 +12,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
+from emr_flink_example_spark import cache
 from emr_flink_example_spark.operators import similarity as S
 from emr_flink_example_spark.plans import catalog
 from emr_flink_example_spark.testing import compare, connect_oracle
@@ -22,6 +23,7 @@ from conftest import SF_DIR
 MEMO_SITES = {
     "trained_codebook",
     "_coarse_codebook",
+    "_coarse_lists",
     "_residual_codebook",
     "_bpe_rules",
     "_simhash_pairs_materialized",
@@ -131,3 +133,19 @@ def test_copies_at_two_paths_fit_twice(spark, tmp_path, monkeypatch):
     assert S._coarse_codebook(spark, a) is cw
     assert S._coarse_codebook(spark, b) == cw
     assert len(fits) == 2
+
+
+def test_entries_of_a_deleted_input_are_released(spark, tmp_path):
+    """A deleted copy's entries are never looked up again: the next build
+    drops them and frees the inverted lists' checkpointed blocks."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    shutil.copytree(SF_DIR, a)
+    shutil.copytree(SF_DIR, b)
+    rdd = S._coarse_lists(spark, a)._jdf.queryExecution().logical().rdd().id()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    assert persisted.containsKey(rdd)
+    shutil.rmtree(a)
+    S._coarse_lists(spark, b)
+    paths = [p for key in cache._state(spark).memos for p in key[1:]]
+    assert paths and not [p for p in paths if p.startswith(f"file:{a}/")]
+    assert not spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from emr_flink_example_spark.operators import similarity as S
 from emr_flink_example_spark.plans import catalog
 
 SF = "/root/testdata/sf0.001"
@@ -40,18 +41,14 @@ ARROW_QUERIES = {
     # the relational getField(k)/getField(d2) pair paid the CodegenFallback
     # fold twice per subspace (bit-equality pinned in test_pq_training.py)
     "embedding_quantize_pq",
-    # r15: SemDeDup's coarse-cluster routing runs in the Arrow kernel too
-    # (the _IVF_ASSIGN_SQL fold was CodegenFallback; _assign_ids pinned
-    # bit-equal in test_pq_training.py)
-    "dedup_semantic_clusters",
     # r14 batch 9: the integer-DCT census joined the Arrow-kernel family
     # (the HOF fold form is CodegenFallback — measured ~4x slower; kept as
     # the pinned-bit-equal reference in tests/reference_folds.py)
     "multimodal_phash",
     "multimodal_phash_pairs",
-    # the IVF corpus routing runs the shared Arrow assignment kernel
-    # (`_assign_ids`); the interpreted cosine-argmax fold was CodegenFallback
-    "ann_ivf_topk",
+    # ann_ivf_topk and dedup_semantic_clusters left this list: both read
+    # the IVF inverted lists materialized once per input, and the Arrow
+    # routing kernel runs in the list build (test_ivf_assignment_*)
     # the member-count pass runs the Lloyd trainer's own Arrow argmin kernel
     "embedding_kmeans_centroids",
 }
@@ -216,29 +213,54 @@ def test_bm25_topk_no_token_window(spark):
     assert plan.count("Window [") == 0
 
 
+def _ivf_lists_plan(spark) -> str:
+    """The IVF list builder's plan over the fixture's nonzero corpus."""
+    lists = S._ivf_lists(S._nonzero_embeddings(spark, SF), S._coarse_codebook(spark, SF))
+    return lists._jdf.queryExecution().executedPlan().toString()
+
+
+def _streamed_side(plan: str, join: str) -> str:
+    """The tail of `plan` from its first `join` node's last (streamed)
+    child: that child's subtree when the join is the plan's last node
+    with two children."""
+    lines = plan.splitlines()
+    j = next(i for i, line in enumerate(lines) if join in line)
+    col = lines[j].index(join)  # where its children's markers sit
+    k = next(i for i in range(j + 1, len(lines)) if lines[i][col : col + 3] == "+- ")
+    return "\n".join(lines[k:])
+
+
 def test_ivf_assignment_is_mapside(spark):
     """IVF corpus→centroid assignment is a map-side argmax against the
-    centroids shipped in the kernel: the corpus reaches the probe join
-    with ZERO Exchange (VERDICT r1 item 6). The only hash exchanges are
-    the tiny probe-side rank (vec_id < 10 rows) and the final per-query
-    top-k."""
+    centroids shipped in the kernel: the list builder routes the corpus
+    with ZERO Exchange (VERDICT r1 item 6). The query reads the lists
+    built once per input (`_coarse_lists`): its corpus side is the
+    checkpointed scan, with no kernel, no fold and no Exchange. The only
+    hash exchanges are the tiny probe-side rank (vec_id < 10 rows) and
+    the final per-query top-k."""
+    assert "Exchange" not in _ivf_lists_plan(spark)
     plan = _plan(spark, "ann_ivf_topk")
     assert plan.count("Exchange hashpartitioning") == 2
+    corpus_side = _streamed_side(plan, "BroadcastHashJoin")
+    assert "Scan ExistingRDD" in corpus_side
+    for node in ("MapInPandas", "Exchange", "aggregate(", "zip_with(", "parquet"):
+        assert node not in corpus_side, node
 
 
 def test_ivf_assignment_runs_in_arrow_kernel(spark):
     """The corpus routing is the Arrow kernel, and no interpreted
     argmin/argmax fold comes back: neither the struct fold over a centroid
     array (from a +-Infinity sentinel) nor array_position(array_min). The
-    corpus rows reach the kernel without any lambda fold; the remaining
-    `aggregate(zip_with(` dot products score only probe rows and probed
-    candidate pairs."""
-    plan = _plan(spark, "ann_ivf_topk")
-    assert "MapInPandas" in plan
-    for fold in ("aggregate(transform(", "Infinity", "array_min("):
-        assert fold not in plan, fold
-    corpus_side = plan[plan.index("MapInPandas"):]
+    corpus rows reach the kernel without any lambda fold; in the query,
+    the remaining `aggregate(zip_with(` dot products score only probe
+    rows and probed candidate pairs."""
+    lists = _ivf_lists_plan(spark)
+    assert "MapInPandas" in lists
+    corpus_side = lists[lists.index("MapInPandas"):]
     assert "aggregate(" not in corpus_side and "zip_with(" not in corpus_side
+    for plan in (lists, _plan(spark, "ann_ivf_topk")):
+        for fold in ("aggregate(transform(", "Infinity", "array_min("):
+            assert fold not in plan, fold
 
 
 @pytest.mark.parametrize("name", ["ann_pq_adc_topk", "ann_pq_adc_rerank_topk"])
