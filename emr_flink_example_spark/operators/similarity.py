@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import math
 import random
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -653,9 +654,7 @@ def ann_ivf_topk(
     emb = _nonzero(corpus, id_col, vec_col)
     q = _nonzero(queries, id_col, vec_col).withColumn("nrm", _norm("e"))
     if codebook is None:
-        first = emb.select(F.size("e").alias("d")).first()
-        dim = first.d if first else 0
-        codebook = subspace_kmeans_fit(emb, 1, dim, n_centroids) if dim else []
+        codebook = subspace_kmeans_fit(emb, 1, None, n_centroids)
     return _ivf_search(q, _ivf_lists(emb, codebook), codebook, k, n_probe)
 
 
@@ -753,34 +752,63 @@ def _unrolled_d2(a: str, b: str, lo: int | str, n: int) -> str:
 #: compression, the ADC search tier, and the IVF coarse quantizer).
 PQ_TRAIN_ITERS = 4
 
-#: Training-sample bound (VERDICT r6 #4): Lloyd rounds never scan more than
-#: ~this many vectors. Standard practice (FAISS trains codebooks on a
-#: bounded sample) — without it, ITERS rounds cost ITERS extra full corpus
-#: scans at 100 TB. 100k x 64 doubles ~ 51 MB, comfortably executor-sized.
+#: Training-sample bound (VERDICT r6 #4): every Lloyd fit reads at most
+#: ~this many vectors, as FAISS trains codebooks on a bounded sample. The
+#: sample is collected to the driver once and all rounds run there, so the
+#: driver holds cap x dim x 8 B of it (100k x 64 doubles ~ 51 MB) plus
+#: the assignment's cap x K distance blocks.
 TRAIN_SAMPLE_CAP = 100_000
 
 
 def _train_sample(base: DataFrame, cap: int = TRAIN_SAMPLE_CAP) -> DataFrame:
-    """Deterministic ~cap-row training sample: keep rows where
-    portable_hash(vec_id) % rate == 0, rate = ceil(n / cap) — the repo's
-    salted-hash sampling discipline (no RNG, partitioning-independent),
-    mirrored verbatim inside the oracle re-train chain (`_train_ctes`
-    computes the same rate in SQL). rate == 1 (corpus already within the
-    cap — every test fixture) returns `base` untouched, which is row-
-    identical to the oracle's `hash % 1 = 0`. A sampled corpus is
-    materialized ONCE (localCheckpoint), so the Lloyd rounds scan the
-    cap-bounded sample, not the corpus: total training cost is one full
-    scan (the sample filter) + the cheap parquet-count, regardless of
-    ITERS."""
+    """Deterministic ~cap-row training sample, lazy: rows where
+    portable_hash(vec_id) % rate == 0, rate = ceil(n / cap) (no RNG,
+    partitioning-independent; `_train_ctes` computes the same rate in
+    SQL). rate == 1 returns `base` untouched, row-identical to the
+    oracle's `hash % 1 = 0`."""
     from ..functions.hashing import portable_hash
 
     n = base.count()
     rate = max(1, (n + cap - 1) // cap)
     if rate == 1:
         return base
-    return base.where(
-        portable_hash(F.col("vec_id").cast("string")) % F.lit(rate) == 0
-    ).localCheckpoint()
+    return base.where(portable_hash(F.col("vec_id").cast("string")) % F.lit(rate) == 0)
+
+
+def _train_matrix(base: DataFrame, cap: int = TRAIN_SAMPLE_CAP):
+    """(X, valid): the training sample of (vec_id, e) `base` as an n x dim
+    matrix in vec_id order, a null element read as NaN as the kernels read
+    it, and its non-null mask. One Arrow collect: at most cap rows from
+    `limit(cap + 1)` are the whole corpus (rate 1); only a larger corpus
+    pays `_train_sample`'s count."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    t = base.select("vec_id", "e").limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        t = _train_sample(base, cap).select("vec_id", "e").toArrow()
+    t = t.take(pc.sort_indices(t, [("vec_id", "ascending")], null_placement="at_start"))
+    e = t.column("e").combine_chunks()
+    lens = np.diff(e.offsets.to_numpy())
+    if e.null_count or (lens != lens[:1]).any():
+        raise ValueError("training vectors must be non-null and of one length")
+    flat = e.flatten()
+    dim = int(lens[0]) if len(lens) else 0
+    return (
+        flat.to_numpy(zero_copy_only=False).reshape(len(e), dim),
+        flat.is_valid().to_numpy(zero_copy_only=False).reshape(len(e), dim),
+    )
+
+
+def _round6(x: float) -> float:
+    """Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
+    repr of x, signed zero out as 0.0; NaN, the infinities and doubles
+    past 2**52 (integers already) unchanged. `np.round` is half-even on
+    the binary value and keeps -0.0."""
+    if not abs(x) < 2.0**52:
+        return x
+    return float(Decimal(repr(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP)) + 0.0
+
 
 #: ADC search-tier geometry: 32 subspaces x 2 dims, 64 codewords (6 bits)
 #: per subspace -> 24 B/vector. Finer than the 4 B `embedding_quantize_pq`
@@ -795,66 +823,50 @@ ADC_K = 64
 def subspace_kmeans_fit(
     base: DataFrame,
     n_sub: int,
-    sub_dim: int,
+    sub_dim: int | None,
     k: int,
     iters: int = PQ_TRAIN_ITERS,
     sample_cap: int = TRAIN_SAMPLE_CAP,
 ) -> list[list[float]]:
-    """Per-subspace Lloyd k-means over ALL subspaces in one pass per round;
-    returns the trained codebook as K full-dim codewords (codeword j =
-    concat over subspaces of that subspace's j-th centroid). n_sub=1 is
-    plain full-vector k-means (the IVF coarse quantizer, `kmeans_fit`).
+    """Per-subspace Lloyd k-means of (vec_id, e) `base`: K full-dim
+    codewords (codeword j = concat over subspaces of their j-th centroid).
+    n_sub=1 is full-vector k-means (`kmeans_fit`, the IVF coarse
+    quantizer); sub_dim=None takes the sample's dimension.
 
-    Each round is two steps. ASSIGNMENT is the shared Arrow argmin kernel
-    (`_codes_kernel`, the same `_encode` every encode path runs), with
-    the codebook shipped in the closure — zero corpus shuffle. The
-    UPDATE stays a Spark aggregate in long form: posexplode(e) gives one
-    (i, k = codes[i div sub_dim], v) row per element, and ONE groupBy(i, k)
-    takes round(avg(v), 6) — partial aggregation shrinks the map side to
-    K x DIM scalars before the shuffle, and the driver only ever holds the
-    K x DIM codeword matrix (kilobytes). The Spark avg + 6-dp rounding is
-    what the oracle's re-train chain (`_train_ctes`) mirrors; a numpy
-    update is not bit-safe.
+    Scale shape: the <= sample_cap hash sample (`_train_matrix`, FAISS-
+    style) is collected once, and the seed and every round run on the
+    driver: one Spark job per fit whatever `iters`. The oracle's re-train
+    chain (`_train_ctes`) applies the same sample rule.
 
-    Scale shape (same contract as `kmeans_fit`): training runs on a
-    deterministic hash-sample of at most ~sample_cap vectors
-    (`_train_sample` — one corpus scan total, FAISS-style, instead of one
-    per Lloyd round), applied identically by the oracle chain (rate
-    computed in SQL), so sampling never breaks hash-equality — pinned
-    cross-engine at a forced rate>1 in tests/test_sampled_training.py.
+    Determinism (what lets the DuckDB oracle re-train the SAME codebook):
+    seed = the k smallest sampled vec_ids, codeword id = position
+    (ADVICE r6); assignment = `_encode`, the kernels' argmin; the update
+    of each (codeword, element) sums its members in ascending vec_id
+    order, divides by the count of non-null values (avg skips a null
+    element; NaN propagates) and rounds with `_round6`, Spark's
+    round(x, 6); a codeword with no members keeps its value. Pinned to
+    the Spark-side trainer it replaced (tests/test_driver_lloyd.py) and
+    to an independent numpy Lloyd (tests/test_pq_training.py)."""
+    import numpy as np
 
-    Determinism (what makes the DuckDB oracle able to re-train the SAME
-    codebook): init = subvectors of the K smallest vec_ids; argmin keeps
-    the smallest codeword id on ties (first-min); every update average is
-    rounded to 6 dp before the next assignment, so partial-aggregation
-    merge order can't leak in; empty codewords keep their previous value.
-    tests/test_pq_training.py pins the result against an independent numpy
-    Lloyd and against the interpreted fold trainer it replaced."""
-    train = _train_sample(base, sample_cap)
-    # Seed = the k SMALLEST vec_ids PRESENT in the training sample,
-    # codeword id = position in that vec_id-ordered list (ADVICE r6): the
-    # oracle's init uses the same row_number()-over-vec_id renumber
-    # (`_train_ctes`), so the id mapping matches by construction even when
-    # ids have gaps (a sampled corpus always does).
-    seed = train.orderBy("vec_id").limit(k).select("e").collect()
-    if not seed:
+    X, valid = _train_matrix(base, sample_cap)
+    if not len(X):
         return []
-    cw = [list(r.e[: n_sub * sub_dim]) for r in seed]
+    dim = X.shape[1]
+    sub_dim = sub_dim or dim // n_sub
+    C, null = X[:k].copy(), ~valid[:k]  # seed: the k smallest vec_ids
+    cols, vals = np.arange(dim), np.where(valid, X, 0.0).ravel()
     for _ in range(iters):
-        upd = (
-            train.select("e")
-            .mapInPandas(
-                _codes_kernel(cw, ["e"], n_sub, sub_dim),
-                "e array<double>, codes array<int>",
-            )
-            .select("codes", F.posexplode("e").alias("i", "v"))
-            .groupBy("i", F.expr(f"codes[i div {sub_dim}]").alias("k"))
-            .agg(F.round(F.avg("v"), 6).alias("c"))
-            .collect()
-        )
-        for r in upd:  # codewords with no members keep their previous value
-            cw[r.k][r.i] = r.c
-    return cw
+        codes, _ = _encode(X, C, n_sub, sub_dim)
+        cell = (codes[:, cols // sub_dim] * dim + cols).ravel()  # (codeword, element)
+        # bincount adds in row order: each cell's sum runs in ascending vec_id
+        s = np.bincount(cell, vals, C.size).reshape(C.shape)
+        cnt = np.bincount(cell, valid.ravel(), C.size).reshape(C.shape)
+        hit = np.bincount(cell, None, C.size).reshape(C.shape) > 0
+        with np.errstate(invalid="ignore"):  # 0/0: an all-null element averages to null
+            C[hit] = [_round6(v) for v in (s[hit] / cnt[hit]).tolist()]
+        null[hit] = cnt[hit] == 0
+    return np.where(null, None, C).tolist()
 
 
 def trained_codebook(
@@ -1572,20 +1584,13 @@ KMEANS_ITERS = 4
 def kmeans_fit(
     emb: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
 ) -> list[list[float]]:
-    """Distributed Lloyd iterations; returns the final k centroids.
-
-    Plain full-vector k-means is the one-subspace special case, so this
-    DELEGATES to `subspace_kmeans_fit` with n_sub=1: one trainer, one
-    determinism contract (k-smallest-vec_id positional seeding, first-min
-    argmin, 6-dp update rounding, empty clusters keep their centroid), one
-    scale shape (sample-bounded training scans, Arrow-kernel assignment,
-    long-form k*dim-scalar update shuffle) — and the DuckDB re-train
-    oracle (`_kmeans_centroids_oracle`) mirrors that single contract."""
+    """Lloyd k-means of the non-null (vec_id, embedding) vectors of `emb`:
+    the final k centroids, [] for an empty corpus. Full-vector k-means is
+    `subspace_kmeans_fit` with n_sub=1 and the sample's dimension — one
+    trainer, one determinism contract and scale shape, which the DuckDB
+    re-train oracle (`_kmeans_centroids_oracle`) mirrors."""
     base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    probe = base.where(F.col("e").isNotNull()).select(F.size("e").alias("d")).first()
-    if probe is None:  # empty corpus (pruned partition / fresh lake): no model
-        return []
-    return subspace_kmeans_fit(base, 1, probe.d, k, iters)
+    return subspace_kmeans_fit(base.where(F.col("e").isNotNull()), 1, None, k, iters)
 
 
 def q_embedding_kmeans_centroids(spark: SparkSession, sf: str) -> DataFrame:
@@ -1594,14 +1599,15 @@ def q_embedding_kmeans_centroids(spark: SparkSession, sf: str) -> DataFrame:
     same Lloyd trainer that `subspace_kmeans_fit` runs (per subspace) to fit
     the PQ/ADC codebooks and the IVF coarse quantizer.
 
-    The driver-coordinated Lloyd rounds have a FIXED budget (KMEANS_ITERS),
-    so the DuckDB oracle RE-TRAINS the identical model by unrolling them
-    with the same `_train_ctes` chain the PQ codebook oracles use (n_sub=1
-    — plain full-vector k-means), then mirrors the final assignment pass
-    for the member counts (VERDICT r6 #1). KMEANS_K == N_CENTROIDS and
-    KMEANS_ITERS == PQ_TRAIN_ITERS are coincidences of budget, not a
-    shared model: this trains on raw vectors with L2 argmin, the IVF
-    coarse quantizer routes by cosine. tests/test_kmeans_reference.py
+    Training is one Arrow collect of the bounded sample; the Lloyd rounds
+    run on the driver with a FIXED budget (KMEANS_ITERS), so the DuckDB
+    oracle RE-TRAINS the identical model by unrolling them with the same
+    `_train_ctes` chain the PQ codebook oracles use (n_sub=1 — plain
+    full-vector k-means), then mirrors the final assignment pass for the
+    member counts, the one distributed pass (VERDICT r6 #1). KMEANS_K ==
+    N_CENTROIDS and KMEANS_ITERS == PQ_TRAIN_ITERS are coincidences of
+    budget, not a shared model: this trains on raw vectors with L2 argmin,
+    the IVF coarse quantizer routes by cosine. tests/test_kmeans_reference.py
     additionally value-pins the centroids against an independent numpy
     Lloyd implementation."""
     emb = load(spark, sf, "embeddings")
@@ -1646,15 +1652,15 @@ def q_embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     explained_frac), eigenvalue = Rayleigh quotient avg(dotᵀdot),
     explained_frac = eigenvalue / total variance.
 
-    Scale shape (the `subspace_kmeans_fit` contract): fitting runs on the
-    deterministic `_train_sample` hash-sample (one corpus scan total),
-    each round is a map-side dot + ONE combine-friendly 64-column avg
-    aggregate (the shuffle carries 64 scalars), and the driver holds only
-    the 64-float vector. Determinism: init = the exactly-representable
-    uniform unit vector (1/8 per dim), every aggregate is rounded to 6 dp
-    before the next step, and the normalize arithmetic is the same
-    left-associated IEEE chain in Python and SQL — so the DuckDB oracle
-    RE-FITS the identical component by unrolling the fixed rounds."""
+    Scale shape: fitting runs on the deterministic `_train_sample`
+    hash-sample (materialized once when sampled: one corpus scan), each
+    round is a map-side dot + ONE combine-friendly 64-column avg aggregate
+    (the shuffle carries 64 scalars), and the driver holds the 64 floats.
+    Determinism: init = the exactly-representable uniform unit vector
+    (1/8 per dim), every aggregate is rounded to 6 dp before the next
+    step, and the normalize arithmetic is the same left-associated IEEE
+    chain in Python and SQL — so the DuckDB oracle RE-FITS the identical
+    component by unrolling the fixed rounds."""
     from ..functions.hashing import portable_hash  # noqa: F401 (sample pred)
 
     emb = load(spark, sf, "embeddings")
@@ -1665,6 +1671,7 @@ def q_embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     if base.first() is None:  # empty corpus: no component
         return spark.createDataFrame([], out_schema)
     train = _train_sample(base, TRAIN_SAMPLE_CAP)
+    train = train if train is base else train.localCheckpoint()  # read every round
     # every multi-column aggregate below is built as ONE SQL string
     # producing an array — 64 Column objects assembled through py4j cost
     # ~1 s of driver chatter PER ROUND (measured r14); one parsed
@@ -1683,13 +1690,9 @@ def q_embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     ) + ")"
     mu = list(train.agg(F.expr(mu_agg).alias("mu")).collect()[0].mu)
     v = [0.125] * DIM  # 1/sqrt(64), exactly representable
-    # r14: mu/v ride a one-row broadcast frame instead of per-round inlined
-    # literals, so all PCA_ITERS rounds share ONE plan/codegen shape (the
-    # pre-r14 form re-analyzed and re-compiled a fresh 64-literal dot chain
-    # + 64 literal-bearing avg aggregates per round). The dot column is the
-    # same left-associated chain — sum(+) over i ascending — so the float
-    # sequence is bit-identical; the centered factors (e_i - mu_i) now read
-    # mu from the broadcast row, same IEEE subtract.
+    # r14: mu/v ride a one-row broadcast frame, so all PCA_ITERS rounds
+    # share ONE plan/codegen shape instead of re-compiling 64 literals per
+    # round; the dot is the same left-associated chain over i ascending.
     dot = " + ".join(
         f"(element_at(e, {i}) - element_at(mu, {i}))"
         f" * (element_at(vv, {i}))"
@@ -2287,7 +2290,7 @@ def _train_ctes(
     unrolled into one CTE block per round. Ends in `{prefix}cwk(k, cvec)`
     (one row per codeword, full-dim) and `{prefix}cb(cw)` (the one-row
     list-of-codewords the encode/LUT fragments consume). Determinism knobs
-    are identical to the Spark trainer: the `_train_sample` hash-sample
+    are identical to `subspace_kmeans_fit`: the `_train_sample` hash-sample
     predicate with rate = ceil(n/cap) computed in SQL (rate 1 — every
     fixture — keeps all rows, exactly like the Spark side's no-filter
     shortcut), smallest-sampled-vec_id init, first-min argmin ties, 6-dp
@@ -3529,18 +3532,10 @@ def q_sample_coreset_kcenter(spark: SparkSession, sf: str) -> DataFrame:
             [], "rank int, vec_id bigint, n_assigned bigint, radius_micro bigint"
         )
     samp = _train_sample(base)
-    # r15: EVERYTHING after the sample build is bounded by the sample cap
-    # (scale-independent), so the greedy traversal and the
-    # assignment/radius pass are solved ON THE DRIVER in numpy — the
-    # attribution_markov_removal bounded-chain precedent. The r14 form ran
-    # K-1 sequential jobs whose min-d2 HOF folds are CodegenFallback
-    # (interpreted, growing k x DIM per row per round) plus a final pass
-    # that evaluated the fold TWICE (assign + min-d2 — the quantize_pq
-    # getField double-fold), ~4.4 s steady-state at sf0.1. io.load's
-    # ingestion contract guarantees fixed-dim non-null vectors, so the
-    # collected sample is a dense n x DIM matrix (<= TRAIN_SAMPLE_CAP x
-    # DIM doubles ~ 51 MB at the cap — driver-sized by construction, the
-    # same bound that makes the oracle's unrolled CTE chain tractable).
+    # r15: the r14 form ran K-1 sequential jobs of interpreted min-d2
+    # folds plus a final pass that evaluated the fold twice, ~4.4 s at
+    # sf0.1. io.load keeps vectors non-null and fixed-dim, so the sample
+    # is a dense n x DIM matrix.
     #
     # Float discipline (the _codes_kernel construction, proven against
     # the pure-python mirror in tests/test_r10_reference.py): each d2

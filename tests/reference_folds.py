@@ -2,10 +2,11 @@
 
 Production runs every argmin/assign/encode, and the pHash DCT census, in
 vectorized Arrow kernels (`similarity._encode` / `_assign_ids`,
-`multimodal._phash_kernel`). The interpreted JVM folds they replaced live
-here, and only here, as the bit-equality references the kernel pins in
-tests/test_pq_training.py, tests/test_kmeans_reference.py and
-tests/test_phash_kernel.py compare against. Each fold iterates codewords /
+`multimodal._phash_kernel`), and the Lloyd rounds on the driver. The
+interpreted JVM folds and the Spark-side trainer they replaced live
+here, and only here, as the bit-equality references the pins in
+tests/test_pq_training.py, tests/test_kmeans_reference.py,
+tests/test_driver_lloyd.py and tests/test_phash_kernel.py compare against. Each fold iterates codewords /
 centroids in ascending id with a strict comparison, so ties keep the
 smallest id, and Spark ranks NaN above every number — the contract the
 kernels reproduce.
@@ -167,6 +168,41 @@ def fold_subspace_kmeans_fit(
         for r in upd:
             cbs[r.m][r.k] = [r[f"c{i}"] for i in range(1, sub_dim + 1)]
     return [[v for m in range(n_sub) for v in cbs[m][j]] for j in range(len(seed))]
+
+
+def spark_subspace_kmeans_fit(
+    base: DataFrame,
+    n_sub: int,
+    sub_dim: int,
+    k: int,
+    iters: int = S.PQ_TRAIN_ITERS,
+    sample_cap: int = S.TRAIN_SAMPLE_CAP,
+) -> list[list[float]]:
+    """The Spark-side Lloyd trainer the driver trainer replaced: the same
+    `_train_sample`, seeded by an orderBy/limit collect, and per round the
+    Arrow argmin kernel plus ONE long-form update — posexplode(e) gives
+    one (i, k = codes[i div sub_dim], v) row per element, and groupBy(i, k)
+    takes round(avg(v), 6); codewords with no members keep their value."""
+    train = S._train_sample(base, sample_cap)
+    seed = train.orderBy("vec_id").limit(k).select("e").collect()
+    if not seed:
+        return []
+    cw = [list(r.e[: n_sub * sub_dim]) for r in seed]
+    for _ in range(iters):
+        upd = (
+            train.select("e")
+            .mapInPandas(
+                S._codes_kernel(cw, ["e"], n_sub, sub_dim),
+                "e array<double>, codes array<int>",
+            )
+            .select("codes", F.posexplode("e").alias("i", "v"))
+            .groupBy("i", F.expr(f"codes[i div {sub_dim}]").alias("k"))
+            .agg(F.round(F.avg("v"), 6).alias("c"))
+            .collect()
+        )
+        for r in upd:
+            cw[r.k][r.i] = r.c
+    return cw
 
 
 def phash_hof_df(spark: SparkSession, sf: str) -> DataFrame:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import ast
 import glob
+import os
 import re
 
 import pytest
@@ -19,7 +20,10 @@ from emr_flink_example_spark.plans import catalog
 
 from conftest import SF_DIR
 
-OPERATOR_GLOB = "/root/repo/emr_flink_example_spark/operators/*.py"
+OPERATOR_GLOB = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "emr_flink_example_spark", "operators", "*.py",
+)
 
 
 def _emits_guard(seg: str) -> bool:

@@ -1,12 +1,15 @@
-"""Independent value pin for the distributed Lloyd k-means trainer.
+"""Independent value pin for the Lloyd k-means trainer.
 
 `kmeans_fit` has no SQL oracle (iterative); this recomputes the exact same
 protocol — k-smallest-vec_id seeding, squared-L2 first-min assignment,
-per-dimension mean rounded to 6 dp per round, empty clusters keep their
-centroid — in numpy, and compares centroids component-wise.
+per-dimension mean rounded HALF_UP to 6 dp per round (Spark's round),
+empty clusters keep their centroid — in numpy, and compares centroids
+component-wise.
 """
 
 from __future__ import annotations
+
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pytest
@@ -22,6 +25,14 @@ from emr_flink_example_spark.operators.similarity import (
 from conftest import SF_DIR
 
 
+def _round_half_up(v: np.ndarray) -> np.ndarray:
+    """Spark's round(x, 6): each double's shortest decimal repr quantized
+    HALF_UP to 6 places, signed zero out as 0.0 (np.round would round
+    half-even and keep -0.0)."""
+    q = Decimal("1e-6")
+    return np.array([float(Decimal(str(float(x))).quantize(q, ROUND_HALF_UP)) + 0.0 for x in v])
+
+
 def _numpy_lloyd(M: np.ndarray, ids: np.ndarray, k: int, iters: int) -> np.ndarray:
     order = np.argsort(ids)
     cents = M[order[:k]].copy()
@@ -32,7 +43,7 @@ def _numpy_lloyd(M: np.ndarray, ids: np.ndarray, k: int, iters: int) -> np.ndarr
         for c in range(k):
             members = M[cid == c]
             if len(members):
-                new[c] = np.round(members.mean(axis=0), 6)
+                new[c] = _round_half_up(members.mean(axis=0))
         cents = new
     return cents
 

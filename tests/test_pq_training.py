@@ -11,6 +11,8 @@ trainer itself.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +22,13 @@ from emr_flink_example_spark.operators import similarity as S
 
 from conftest import SF_DIR
 import reference_folds as R
+
+
+def _half_up6(a):
+    """Spark's round(x, 6) of each finite double: HALF_UP on its shortest
+    decimal repr, -0.0 out as 0.0 (np.round is half-even and keeps -0.0)."""
+    q = Decimal("0.000001")
+    return np.array([float(Decimal(repr(float(x))).quantize(q, ROUND_HALF_UP)) + 0.0 for x in a])
 
 
 def _np_subspace_lloyd(X, n_sub, sub_dim, k, iters):
@@ -35,7 +44,7 @@ def _np_subspace_lloyd(X, n_sub, sub_dim, k, iters):
             for j in range(k):
                 mask = a == j
                 if mask.any():
-                    newC[j] = np.round(Xm[mask].mean(0), 6)
+                    newC[j] = _half_up6(Xm[mask].mean(0))
             C = newC
         cbs.append(C)
     return np.concatenate(cbs, axis=1)  # K x DIM, codeword = concat over m
@@ -247,10 +256,9 @@ def test_first_min_engine_order():
 
 
 def test_kernel_trainer_matches_fold_trainer(spark):
-    """The Arrow-kernel Lloyd trainer must reproduce the interpreted fold
-    trainer it replaced bit-for-bit (same seeding, argmin ties, Spark avg +
-    6-dp update) — the update stays in Spark, only its shape changed from
-    sub_dim-wide to long form."""
+    """The Lloyd trainer must reproduce the interpreted fold trainer of two
+    generations back bit-for-bit (same seeding, argmin ties, 6-dp
+    rounded average update)."""
     base = load(spark, SF_DIR, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )

@@ -7,11 +7,12 @@ live-ingest partition cardinality instead of a month-long backfill's."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from emr_flink_example_spark.sources.streams import AD_EVENT_SCHEMA
 

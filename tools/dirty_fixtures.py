@@ -39,7 +39,7 @@ import sys
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from emr_flink_example_spark.io import TABLES  # noqa: E402
 

@@ -112,7 +112,9 @@ def main() -> None:
         per_query[name] = rec
 
     rnd = os.environ.get("SPARK_GRAFT_ROUND", "local")
-    out_path = f"/root/repo/SCALING_r{rnd}.json"
+    out_path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), f"SCALING_r{rnd}.json"
+    )
     doc = {
         "metric": "scaling_exponents",
         "sfs": list(SFS),

@@ -9,11 +9,12 @@ an order-insensitive value comparison. Use while iterating:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from emr_flink_example_spark.session import local_test_session  # noqa: E402
 from emr_flink_example_spark.testing import compare, connect_oracle  # noqa: E402
